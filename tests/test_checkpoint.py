@@ -129,10 +129,11 @@ def test_pam_loop_reliable_identical(spark, tmp_path):
 
 def test_r12_sites_reliable_identical(spark, tmp_path):
     """The round-12 checkpoint sites (SBD pair frame + SAX words +
-    z-scored frame; capped shingle postings) must produce identical
-    values under the fault-tolerant ``df.checkpoint()`` path — the
-    100 TB posture for unbounded frames where executor-local blocks
-    are not acceptable."""
+    z-scored frame; capped shingle postings; the md5-Lloyd kernel's
+    per-round centroid tables, keyed in c4b and per split in c6b) must
+    produce identical values under the fault-tolerant
+    ``df.checkpoint()`` path — the 100 TB posture for unbounded frames
+    where executor-local blocks are not acceptable."""
     from tests.conftest import SF_ORACLE
     from the_framework_for_clustering_time_series_data_spark.plans.registry import QUERIES
 
@@ -140,6 +141,8 @@ def test_r12_sites_reliable_identical(spark, tmp_path):
     for name, key in (
         ("ts_sbd_topk", lambda r: (r["series_id"], r["rank"])),
         ("dedup_ngram_jaccard_capped", None),
+        ("c4b_selection_md5lloyd", None),
+        ("c6b_bisecting_md5lloyd", None),
     ):
         df = QUERIES[name](spark, SF_ORACLE)
         base = sorted(map(tuple, df.collect()))

@@ -835,15 +835,56 @@ def test_deterministic_lloyd_recovers_blobs(spark):
     emb, truth = _blobs(spark)
     emb = emb.where(F.col("series_id") < 120)
     v = emb.select("series_id", F.array("x", "y").alias("v"))
-    out = deterministic_lloyd_assign(v, 4, id_col="series_id", vec_col="v",
-                                     lloyd_rounds=4)
+    out, _ = deterministic_lloyd_assign(v, 4, id_col="series_id", vec_col="v",
+                                        lloyd_rounds=4)
     got = {r["id"]: r["cell"] for r in out.collect()}
     truth_b = {k: t for k, t in truth.items() if t != -1}
     assert _ari(got, truth_b) > 0.6
-    again = {r["id"]: r["cell"] for r in
-             deterministic_lloyd_assign(v, 4, id_col="series_id",
-                                        vec_col="v", lloyd_rounds=4).collect()}
-    assert got == again
+    again, _ = deterministic_lloyd_assign(v, 4, id_col="series_id",
+                                          vec_col="v", lloyd_rounds=4)
+    assert got == {r["id"]: r["cell"] for r in again.collect()}
+
+
+@pytest.mark.parametrize("exact_mean", [False, True])
+def test_keyed_md5_lloyd_equals_standalone_fits(spark, exact_mean):
+    """One keyed md5_lloyd run over k = 2..6 (c4b's shape: each k's
+    seeds are the k-prefix of one md5 ranking, points fanned out per k)
+    must equal the five standalone deterministic_lloyd_assign fits row
+    for row — assignments and final centroids, for both mean modes."""
+    from the_framework_for_clustering_time_series_data_spark.operators.cluster import (
+        deterministic_lloyd_assign,
+        md5_lloyd,
+        md5_seed_cells,
+    )
+
+    emb, _ = _blobs(spark)
+    # 6-dp quanta so exact_mean=True is valid on the same points
+    v = emb.where(F.col("series_id") < 120).select(
+        F.col("series_id").alias("id"),
+        F.transform(
+            F.array("x", "y"), lambda x: F.floor(x * 1e6 + 0.5) / 1e6
+        ).alias("v"),
+    )
+    ks = (2, 3, 4, 5, 6)
+    kdf = spark.createDataFrame([(k,) for k in ks], "k int")
+    seeds = md5_seed_cells(v, max(ks)).join(
+        F.broadcast(kdf), F.col("cell") < F.col("k")
+    )
+    keyed, keyed_c = md5_lloyd(
+        v, seeds, keys=("k",), rounds=3, exact_mean=exact_mean
+    )
+    got = sorted(map(tuple, keyed.collect()))
+    got_c = sorted(map(tuple, keyed_c.select("k", "cell", "cvec").collect()))
+    want, want_c = [], []
+    for k in ks:
+        a, c = deterministic_lloyd_assign(
+            v, k, lloyd_rounds=3, exact_mean=exact_mean
+        )
+        want += [(k, *r) for r in a.collect()]
+        want_c += [(k, *r) for r in c.collect()]
+    assert len(got) == len(ks) * 120
+    assert got == sorted(want)
+    assert got_c == sorted(want_c)
 
 
 def test_bisecting_lloyd_recovers_blobs(spark):

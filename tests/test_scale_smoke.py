@@ -402,7 +402,7 @@ def test_deterministic_lloyd_200k_points(spark):
             ).alias("v"),
         )
     )
-    out = deterministic_lloyd_assign(df, 4, id_col="id", vec_col="v", lloyd_rounds=3)
+    out, _ = deterministic_lloyd_assign(df, 4, id_col="id", vec_col="v", lloyd_rounds=3)
     joined = out.join(df.select("id", "corner"), "id")
     # majority cell per corner must cover ~all its points
     agg = (

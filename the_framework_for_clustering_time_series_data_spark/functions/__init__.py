@@ -17,16 +17,28 @@ Text:
 
 from __future__ import annotations
 
-from the_framework_for_clustering_time_series_data_spark.operators.dedup import (  # noqa: F401
-    _hashed_shingles as hashed_shingles,
-    _shingles as shingles,
-)
-from the_framework_for_clustering_time_series_data_spark.operators.similarity import (  # noqa: F401
-    cosine_expr as cosine,
-    dot_expr as dot,
-    norm_expr as norm,
-)
-from the_framework_for_clustering_time_series_data_spark.operators.stats import rms  # noqa: F401
-from the_framework_for_clustering_time_series_data_spark.operators.text import tokens_expr as tokens  # noqa: F401
+import importlib
 
-__all__ = ["dot", "norm", "cosine", "rms", "tokens", "shingles", "hashed_shingles"]
+# name → (operators module, attribute). Resolved on first access, so
+# importing this package (e.g. for plan_tools) loads no operator module
+# and the operators may import plan_tools at module top.
+_EXPORTS = {
+    "dot": ("similarity", "dot_expr"),
+    "norm": ("similarity", "norm_expr"),
+    "cosine": ("similarity", "cosine_expr"),
+    "rms": ("stats", "rms"),
+    "tokens": ("text", "tokens_expr"),
+    "shingles": ("dedup", "_shingles"),
+    "hashed_shingles": ("dedup", "_hashed_shingles"),
+}
+
+__all__ = list(_EXPORTS)
+
+
+def __getattr__(name: str):
+    try:
+        module, attr = _EXPORTS[name]
+    except KeyError:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}") from None
+    package = __package__.rpartition(".")[0]
+    return getattr(importlib.import_module(f"{package}.operators.{module}"), attr)

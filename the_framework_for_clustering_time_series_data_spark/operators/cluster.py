@@ -43,187 +43,142 @@ def kmeans_fit_predict(
     return out, [[float(x) for x in c] for c in model.clusterCenters()]
 
 
+def md5_seed_cells(points: DataFrame, k: int) -> DataFrame:
+    """The md5 seeding shared by every deterministic clusterer: the
+    ``k`` rows of ``points`` ``(id, v, …)`` with the smallest md5(id)
+    (ties → id), returned as ``(cell, cvec)`` with ``cell`` the 0-based
+    rank in that order — the DuckDB twin is ``row_number() OVER (ORDER
+    BY md5(id::VARCHAR), id) - 1`` over the same LIMIT. A ``k`` above
+    the row count yields one cell per row."""
+    init = (
+        points.withColumn("_h", F.md5(F.col("id").cast("string")))
+        .orderBy("_h", "id")
+        .limit(k)
+    )
+    # k rows — constant-key window over the seed set only (tiny_window)
+    w_seed = tiny_window("_h", "id", key="_h")
+    return init.withColumn("cell", F.row_number().over(w_seed) - 1).select(
+        "cell", F.col("v").alias("cvec")
+    )
+
+
+def md5_lloyd(
+    points: DataFrame,
+    seeds: DataFrame,
+    keys: tuple[str, ...] = (),
+    rounds: int = 2,
+    exact_mean: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """The engine's one deterministic, cross-engine-replayable Lloyd
+    iteration (md5-Lloyd) — the reproducible k-means twin the
+    RNG-seeded MLlib fit cannot be (kmeans|| init and parallel float
+    reductions are implementation-defined). ``points`` is ``(keys…,
+    id, v)`` with ``v`` an ``array<double>``; ``seeds`` is the initial
+    ``(keys…, cell, cvec)`` centroid table, normally
+    :func:`md5_seed_cells` or slices/prefixes of it. ``keys`` runs
+    independent fits side by side in ONE plan: points join the
+    centroids on the keys they carry, and a key the points lack fans
+    every point out to each of its values (c4b's k = 2..6 over one
+    point set). ``rounds`` fixed assignment rounds (no data-dependent
+    convergence test — both engines run the identical schedule).
+
+    Parity disciplines (every md5-Lloyd caller and DuckDB twin relies
+    on them; callers refer here instead of restating them):
+
+    * distances are SEQUENTIAL left-to-right folds (``zip_with`` +
+      ``aggregate`` ↔ DuckDB list_transform/list_aggregate) —
+      bit-identical given identical inputs;
+    * assignment is the argmin on ``(d2, cell)`` — ties → smaller
+      cell — as a map-side-combinable ``min_by`` grouped by
+      ``keys + id`` (the ``partitionBy(id)`` window form shuffles AND
+      sorts the candidate frame);
+    * updated centroid components round half-up to 6 dp,
+      ``floor(x*1e6+0.5)/1e6`` in both engines. CAVEAT (accepted risk,
+      as in the matrix-profile discipline): ``F.avg``'s
+      partial-aggregation association order differs from the oracle's
+      sequential mean, so a mean within an ulp of a 0.5e-6 boundary
+      can round differently across engines (~1e-10/value).
+      ``exact_mean=True`` — valid only when the inputs are already
+      6-dp quanta — sums exact int64 micro-units and divides once,
+      removing that caveat (the c3b/pqb discipline).
+
+    Returns ``(assignments, centroids)``: ``(keys…, id, v, cell, d2)``
+    — one row per point (per key value), ``d2`` the squared distance
+    to the FINAL centroid, which downstream survivor/exemplar picks
+    key on — and the final ``(keys…, cell, cvec)`` table the last
+    assignment used (index metadata, ≤ |keys|×k rows). Each round's
+    centroid table goes through ``stage_checkpoint(eager=False)``, so
+    a consumer of both outputs runs the rounds once, not once per
+    consumer."""
+    keys = list(keys)
+    on = [c for c in keys if c in points.columns] if keys else []
+    d2_expr = F.aggregate(
+        F.zip_with("v", "cvec", lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+    def _assign(centroids: DataFrame) -> DataFrame:
+        c = F.broadcast(centroids)
+        j = (points.join(c, on) if on else points.crossJoin(c)).withColumn(
+            "d2", d2_expr
+        )
+        best = j.groupBy(*keys, "id").agg(
+            F.min_by(
+                F.struct("cell", "v", "d2"), F.struct("d2", "cell")
+            ).alias("_best")
+        )
+        return best.select(*keys, "id", "_best.v", "_best.cell", "_best.d2")
+
+    cdf = seeds
+    for _ in range(rounds - 1):
+        ex = _assign(cdf).select(
+            *keys, "cell", F.posexplode("v").alias("pos", "val")
+        )
+        if exact_mean:
+            micro = F.floor(F.col("val") * F.lit(1e6) + F.lit(0.5)).cast("long")
+            mean6 = F.floor(
+                F.sum(micro).cast("double") / F.count("*") + F.lit(0.5)
+            ) / F.lit(1e6)
+        else:
+            mean6 = F.floor(F.avg("val") * 1e6 + 0.5) / 1e6
+        cm = ex.groupBy(*keys, "cell", "pos").agg(mean6.alias("cv"))
+        cdf = cm.groupBy(*keys, "cell").agg(
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("pos", "cv"))), lambda s: s.cv
+            ).alias("cvec")
+        ).transform(stage_checkpoint, eager=False)
+    return _assign(cdf), cdf
+
+
 def deterministic_lloyd_assign(
     df: DataFrame,
     k: int,
     id_col: str = "id",
     vec_col: str = "v",
     lloyd_rounds: int = 2,
-    with_centroids: bool = False,
     exact_mean: bool = False,
-):
-    """Deterministic, cross-engine-replayable Lloyd assignment over an
-    ``array<double>`` feature column — the reproducible k-means twin
-    the RNG-seeded MLlib fit cannot be (kmeans|| init + parallel float
-    reductions are implementation-defined).
+) -> tuple[DataFrame, DataFrame]:
+    """One md5-Lloyd fit (:func:`md5_lloyd`, parity disciplines there)
+    over ``df``'s ``array<double>`` column ``vec_col``: ``k``
+    :func:`md5_seed_cells` seeds, ``lloyd_rounds`` rounds. Returns
+    ``(assignments, centroids)`` = ``(id, v, cell, d2)`` per input row
+    and the final ``(cell, cvec)`` table.
 
-    Initial centroids are the ``k`` rows with the smallest md5(id)
-    (the engine's deterministic-sample family, cell index = rank in
-    that order); each of the fixed ``lloyd_rounds`` assignment rounds
-    is a broadcast cross join + map-side ``min_by`` argmin on
-    (d2, cell). Parity disciplines (shared with the dedup_semantic
-    oracle): distances are SEQUENTIAL left-to-right folds
-    (``zip_with``+``aggregate`` ↔ DuckDB list_transform/list_aggregate
-    — bit-identical given identical inputs); updated centroid
-    components round half-up to 6 dp via ``floor(x*1e6+0.5)/1e6`` in
-    both engines. CAVEAT (accepted risk, same as the matrix-profile
-    discipline): ``F.avg``'s partial-aggregation association order
-    differs from the oracle's sequential mean, so when a mean sits
-    within an ulp of a 0.5e-6 boundary the 6-dp round can flip across
-    engines — cross-engine parity is overwhelmingly probable
-    (~1e-10/value), not absolute. ``exact_mean=True`` (valid only when
-    the input vectors are already 6-dp quanta) replaces ``F.avg`` with
-    an exact int64 micro-unit sum + one division, removing that caveat
-    entirely (the c3b/pqb discipline).
-
-    Returns one row per input: ``(id, v, cell, d2)`` with ``d2`` the
-    squared distance to the FINAL centroid (deterministic survivor /
-    exemplar picks key on it downstream). With
-    ``with_centroids=True``, returns ``(assignments, centroids)``
-    where ``centroids`` is the final ``(cell, cvec)`` frame (the
-    half-up-6dp rounded means the last assignment used — index
-    metadata, ≤ k×dim values).
-
-    EAGER CONTRACT: materializes the projected input via
-    stage_checkpoint (lazily) and runs one Spark job per round for the
-    centroid means; see with_global_ntiles for the checkpoint
-    fault-tolerance caveats and the reliable opt-in.
-    """
+    Building runs Spark jobs: ``stage_checkpoint(eager=False)`` still
+    truncates each update round's centroid lineage at build time, and
+    with AQE on that executes the round's shuffle and broadcast stages
+    then — 4 jobs per update round for a standalone call, none at
+    ``lloyd_rounds=1``. Only the final assignment waits for the first
+    action. ``perfbench/run.py --trace 1`` reports ``plans.build_jobs``
+    15 for pipeline_e2e_det and 13 for text_tfidf_md5kmeans, each
+    including one two-round fit."""
     v0 = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     ).transform(stage_checkpoint, eager=False)
-
-    init = (
-        v0.withColumn("_h", F.md5(F.col("id").cast("string")))
-        .orderBy("_h", "id")
-        .limit(k)
+    return md5_lloyd(
+        v0, md5_seed_cells(v0, k), rounds=lloyd_rounds, exact_mean=exact_mean
     )
-    # k rows — constant-key window over the seed set only (tiny_window)
-    w_seed = tiny_window("_h", "id", key="_h")
-    cdf = init.withColumn("cell", F.row_number().over(w_seed) - 1).select(
-        "cell", F.col("v").alias("cvec")
-    )
-
-    d2_expr = F.aggregate(
-        F.zip_with("v", "cvec", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-    def _assign(centroids: DataFrame) -> DataFrame:
-        # argmin as a map-side-combinable min_by aggregate (the
-        # partitionBy(id) window form shuffles AND sorts the n×k
-        # candidate frame); ties impossible — cell is unique per id
-        j = v0.crossJoin(F.broadcast(centroids)).withColumn("d2", d2_expr)
-        best = j.groupBy("id").agg(
-            F.min_by(
-                F.struct("cell", "v", "d2"), F.struct("d2", "cell")
-            ).alias("_best")
-        )
-        return best.select("id", "_best.v", "_best.cell", "_best.d2")
-
-    for _ in range(lloyd_rounds - 1):
-        a = _assign(cdf)
-        ex = a.select("cell", F.posexplode("v").alias("pos", "val"))
-        if exact_mean:
-            # valid ONLY for 6-dp-quantized inputs: sum the micro-unit
-            # integers exactly (order-free), divide once — removes the
-            # F.avg association-order caveat (the c3b discipline)
-            micro = F.floor(F.col("val") * F.lit(1e6) + F.lit(0.5)).cast("long")
-            cm = ex.groupBy("cell", "pos").agg(
-                (
-                    F.floor(
-                        F.sum(micro).cast("double") / F.count("*") + F.lit(0.5)
-                    )
-                    / F.lit(1e6)
-                ).alias("cv")
-            )
-        else:
-            cm = ex.groupBy("cell", "pos").agg(
-                (F.floor(F.avg("val") * 1e6 + 0.5) / 1e6).alias("cv")
-            )
-        cdf = cm.groupBy("cell").agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "cv"))), lambda s: s.cv
-            ).alias("cvec")
-        ).transform(stage_checkpoint, eager=False)
-        # ≤ k rows — checkpointing each round's centroid table means a
-        # consumer that BOTH collects the centroids (with_centroids →
-        # IVF index metadata) and evaluates the assignment runs the
-        # Lloyd rounds once, not once per consumer (guide §2.4)
-    out = _assign(cdf)
-    if with_centroids:
-        return out, cdf
-    return out
-
-
-def deterministic_lloyd_assign_multi(
-    df: DataFrame,
-    ks: tuple[int, ...],
-    id_col: str = "id",
-    vec_col: str = "v",
-    lloyd_rounds: int = 2,
-) -> DataFrame:
-    """All of :func:`deterministic_lloyd_assign`'s fits for SEVERAL k
-    values as ONE keyed plan — the model-selection shape (c4b runs
-    k = 2..6 over the same points). Per-k arithmetic is IDENTICAL to
-    the single-k form: the md5 seed order is shared (the k smallest-md5
-    seeds are a prefix of the max(ks) seed set), assignment is the same
-    (d2, cell) min_by argmin grouped by (k, id), and centroid means
-    aggregate per (k, cell, pos) — so each k's assignment equals its
-    standalone twin while the five separate Lloyd DAGs (≈5× exchanges
-    plus 5× job-scheduling constants, the measured 3.8-4.1 s of c4b's
-    sf0.1 cost) collapse into one round-trip per Lloyd round (guide
-    §2.4 — share one exchange between same-keyed work).
-
-    Returns ``(k, id, v, cell, d2)`` — one row per (k, input row)."""
-    kmax = max(ks)
-    v0 = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    ).transform(stage_checkpoint, eager=False)
-
-    init = (
-        v0.withColumn("_h", F.md5(F.col("id").cast("string")))
-        .orderBy("_h", "id")
-        .limit(kmax)
-    )
-    w_seed = tiny_window("_h", "id", key="_h")
-    seeds = init.withColumn("cell", F.row_number().over(w_seed) - 1).select(
-        "cell", F.col("v").alias("cvec")
-    )
-    ksdf = df.sparkSession.createDataFrame([(int(k),) for k in ks], "k int")
-    # per-k initial centroids: the k-prefix of the shared seed ranking
-    cdf = seeds.join(F.broadcast(ksdf), F.col("cell") < F.col("k")).select(
-        "k", "cell", "cvec"
-    )
-
-    d2_expr = F.aggregate(
-        F.zip_with("v", "cvec", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-    def _assign(centroids: DataFrame) -> DataFrame:
-        j = v0.crossJoin(F.broadcast(centroids)).withColumn("d2", d2_expr)
-        best = j.groupBy("k", "id").agg(
-            F.min_by(F.struct("cell", "v", "d2"), F.struct("d2", "cell")).alias(
-                "_best"
-            )
-        )
-        return best.select("k", "id", "_best.v", "_best.cell", "_best.d2")
-
-    for _ in range(lloyd_rounds - 1):
-        a = _assign(cdf)
-        ex = a.select("k", "cell", F.posexplode("v").alias("pos", "val"))
-        cm = ex.groupBy("k", "cell", "pos").agg(
-            (F.floor(F.avg("val") * 1e6 + 0.5) / 1e6).alias("cv")
-        )
-        cdf = cm.groupBy("k", "cell").agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "cv"))), lambda s: s.cv
-            ).alias("cvec")
-        )
-    return _assign(cdf)
 
 
 def bisecting_lloyd_assign(
@@ -235,12 +190,11 @@ def bisecting_lloyd_assign(
     """Deterministic bisecting k-means assignment — the
     cross-engine-replayable twin of MLlib's BisectingKMeans (whose
     split RNG and float reductions are implementation-defined), built
-    from the same parity disciplines as
-    :func:`deterministic_lloyd_assign`.
+    on :func:`md5_lloyd` (parity disciplines there, ``F.avg`` means).
 
     Start with every row in cluster 0; repeat ``k−1`` times (step s):
     split the LARGEST cluster (ties → smallest label) with a
-    two-centroid, two-round Lloyd seeded by the cluster's two
+    two-centroid, two-round md5-Lloyd seeded by the cluster's two
     smallest-md5(id) members; members assigned to the second centroid
     take the new label ``s``. Labels are therefore the split-step ids
     0..k−1 — deterministic, no relabeling pass. A cluster too small to
@@ -258,22 +212,6 @@ def bisecting_lloyd_assign(
         F.lit(0).alias("lab"),
     ).transform(stage_checkpoint, eager=True)
 
-    d2_expr = F.aggregate(
-        F.zip_with("v", "cvec", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-    def _assign(members: DataFrame, centroids: DataFrame) -> DataFrame:
-        j = members.crossJoin(F.broadcast(centroids)).withColumn("d2", d2_expr)
-        return (
-            j.groupBy("id")
-            .agg(
-                F.min_by(F.struct("cell", "v"), F.struct("d2", "cell")).alias("_b")
-            )
-            .select("id", "_b.v", "_b.cell")
-        )
-
     for step in range(1, k):
         tgt = (
             labels.groupBy("lab")
@@ -282,27 +220,9 @@ def bisecting_lloyd_assign(
             .limit(1)
         )
         mem = labels.join(F.broadcast(tgt.select("lab")), "lab").select("id", "v")
-        seeds = (
-            mem.withColumn("_h", F.md5(F.col("id").cast("string")))
-            .orderBy("_h", "id")
-            .limit(2)
-        )
-        w_seed = tiny_window("_h", "id", key="_h")
-        cdf = seeds.withColumn("cell", F.row_number().over(w_seed) - 1).select(
-            "cell", F.col("v").alias("cvec")
-        )
-        a = _assign(mem, cdf)
-        cm = a.select("cell", F.posexplode("v").alias("pos", "val")).groupBy(
-            "cell", "pos"
-        ).agg((F.floor(F.avg("val") * 1e6 + 0.5) / 1e6).alias("cv"))
-        cdf2 = cm.groupBy("cell").agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "cv"))), lambda s: s.cv
-            ).alias("cvec")
-        )
-        b = _assign(mem, cdf2).select("id", F.col("cell").alias("_cell"))
+        b, _ = md5_lloyd(mem, md5_seed_cells(mem, 2), rounds=2)
         labels = (
-            labels.join(b, "id", "left")
+            labels.join(b.select("id", F.col("cell").alias("_cell")), "id", "left")
             .select(
                 "id",
                 "v",
@@ -821,16 +741,7 @@ def kshape_md5_assign(
         "v",
     ).select("id", "v").transform(stage_checkpoint, eager=False)
 
-    init = (
-        v0.withColumn("_h", F.md5(F.col("id").cast("string")))
-        .orderBy("_h", "id")
-        .limit(k)
-    )
-    # k rows — constant-key window over the seed set only (tiny_window)
-    w_seed = tiny_window("_h", "id", key="_h")
-    cdf = init.withColumn("cell", F.row_number().over(w_seed) - 1).select(
-        "cell", F.col("v").alias("cvec")
-    )
+    cdf = md5_seed_cells(v0, k)
 
     lag_arr = F.array(*[F.lit(w) for w in range(-max_lag, max_lag + 1)])
 
@@ -971,17 +882,10 @@ def gmm_md5em_assign(
     )
     n_total = v0.count()
 
-    init = (
-        v0.withColumn("_h", F.md5(F.col("id").cast("string")))
-        .orderBy("_h", "id")
-        .limit(k)
-    )
-    # k rows — constant-key window over the seed set only (tiny_window)
-    w_seed = tiny_window("_h", "id", key="_h")
-    params = init.withColumn("cell", F.row_number().over(w_seed) - 1).select(
+    params = md5_seed_cells(v0, k).select(
         "cell",
-        F.col("v").alias("mu"),
-        F.transform(F.col("v"), lambda _: F.lit(1.0)).alias("var"),
+        F.col("cvec").alias("mu"),
+        F.transform(F.col("cvec"), lambda _: F.lit(1.0)).alias("var"),
         F.lit(1.0 / k).alias("w"),
     )
 
@@ -1155,16 +1059,7 @@ def pam_md5_assign(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    init = (
-        pts.withColumn("_h", F.md5(F.col("id").cast("string")))
-        .orderBy("_h", "id")
-        .limit(k)
-    )
-    # k rows — constant-key window over the seed set only (tiny_window)
-    w_seed = tiny_window("_h", "id", key="_h")
-    meds = init.withColumn("cell", F.row_number().over(w_seed) - 1).select(
-        "cell", F.col("v").alias("mvec")
-    )
+    meds = md5_seed_cells(pts, k).withColumnRenamed("cvec", "mvec")
 
     def _d2(a: str, b: str) -> F.Column:
         # fixed-order sum of IEEE products — no pow(), no fold

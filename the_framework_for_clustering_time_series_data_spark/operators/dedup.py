@@ -18,17 +18,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-def stage_checkpoint(df, eager=True):
-    """Lazy proxy for functions.plan_tools.stage_checkpoint: this
-    module is imported by functions/__init__, so a module-level
-    import of the functions package would be circular."""
-    from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import (
-        stage_checkpoint as _sc,
-    )
-
-    return _sc(df, eager=eager)
-
-
+from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import (
+    ensure_min_parallelism,
+    stage_checkpoint,
+)
+from the_framework_for_clustering_time_series_data_spark.operators.cluster import deterministic_lloyd_assign
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -192,8 +186,6 @@ def ngram_jaccard_pairs(
     Losslessness is locked by tests/test_plans.py::
     test_prefix_filter_jaccard_lossless either way.
     """
-    from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import ensure_min_parallelism
-
     sh_col = (
         _shingles(text_col, n)
         if shingle_hash is None
@@ -387,8 +379,6 @@ def minhash_lsh_pairs(
     from xxhash64-of-band to the raw signature tuple, keeping every
     step reproducible cross-engine.
     """
-    from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import ensure_min_parallelism
-
     if hash_family not in ("xxhash64", "md5"):
         raise ValueError(f"unknown hash_family {hash_family!r}")
 
@@ -538,8 +528,6 @@ def simhash(
     ``bits=60`` with it), giving the registered query a full value-hash
     oracle; see minhash_lsh_pairs for the family definition.
     """
-    from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import ensure_min_parallelism
-
     if hash_family == "md5":
         tok_hash = md5_60bit_hash("tok")
     else:
@@ -987,24 +975,16 @@ def semantic_dedup_deterministic(
     of :func:`semantic_dedup` (whose MLlib k-means seeding is
     RNG-/implementation-defined and therefore rows-only at the gate).
 
-    Cells come from ``lloyd_rounds`` fixed Lloyd assignment rounds
-    seeded by the ``n_cells`` vectors with the smallest md5(id) (the
-    engine's standard deterministic-sample family), expressed entirely
-    as DataFrame ops. Parity disciplines making a DuckDB twin
-    value-identical:
+    Cells come from one md5-Lloyd fit (``cluster.deterministic_lloyd_assign``:
+    ``n_cells`` smallest-md5(id) seeds, ``lloyd_rounds`` fixed rounds),
+    whose parity disciplines make the cell assignment DuckDB-replayable.
+    On top of them:
 
-    * assignment distances are SEQUENTIAL left-to-right folds over the
-      array (``zip_with``+``aggregate`` ↔ DuckDB
-      ``list_transform``+``list_aggregate``) — bit-identical given
-      identical inputs;
-    * updated centroid components round half-up to 6 dp with the
-      engine-agnostic ``floor(x*1e6 + 0.5)/1e6`` form in BOTH engines,
-      absorbing the mean's partial-aggregation association drift;
     * the pair-stage cosine runs as one BLAS matmul per cell (speed)
       but its threshold DECISION keys on the same half-up-6dp round in
       both engines, so matmul-vs-fold ulp drift cannot flip a pair;
-    * argmin assignment keys on (d2, cell); the survivor pick on
-      (d2-to-own-centroid, id) — all deterministic ties.
+    * the survivor pick keys on (d2-to-own-centroid, id) — a
+      deterministic tie.
 
     Output matches semantic_dedup: one row per vector,
     ``(id, cell, group_id, group_size, keep)``.
@@ -1016,11 +996,10 @@ def semantic_dedup_deterministic(
     (not convergence-driven) — determinism over optimality, which is
     fine for cell BOUNDING where any reasonable partition works.
     """
-    from the_framework_for_clustering_time_series_data_spark.operators.cluster import deterministic_lloyd_assign
-
-    final = deterministic_lloyd_assign(
+    final, _ = deterministic_lloyd_assign(
         emb, n_cells, id_col=id_col, vec_col=vec_col, lloyd_rounds=lloyd_rounds
-    ).transform(stage_checkpoint, eager=True)
+    )
+    final = final.transform(stage_checkpoint, eager=True)
 
     # pair scan as ONE matmul per cell (the semantic_dedup lesson: an
     # interpreted zip_with/aggregate HOF per pair costs ~µs per ELEMENT
@@ -1826,8 +1805,6 @@ def _span_audit_rollup(df: DataFrame, spans: F.Column, id_col: str) -> DataFrame
     document-frequency count and the join back), so it is
     checkpointed — without it Spark re-ran the whole window-build map
     stage per consumer (6.4 → ~3.8 s at sf0.1)."""
-    from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import stage_checkpoint
-
     sp = df.select(F.col(id_col).alias("id"), F.explode(spans).alias("sh")).transform(
         stage_checkpoint, eager=False
     )

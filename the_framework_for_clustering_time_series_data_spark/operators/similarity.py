@@ -12,6 +12,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import (
+    lit_double_array,
+    stage_checkpoint,
+)
+from the_framework_for_clustering_time_series_data_spark.operators.cluster import (
+    deterministic_lloyd_assign,
+    md5_lloyd,
+    md5_seed_cells,
+)
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     """JVM-side dot product of two array<double> columns (zip_with +
@@ -382,23 +392,20 @@ def ivf_topk_deterministic(
     oracle-checkable twin of :func:`ivf_topk`, whose MLlib KMeans index
     build is RNG/impl-defined.
 
-    The index build is ``cluster.deterministic_lloyd_assign``
-    (md5-seeded, fixed rounds, sequential-fold distances, half-up-6dp
-    centroid means — every value a DuckDB twin reproduces); the probe
-    tail is the SAME ``_ivf_probe_scored`` the MLlib variant uses, fed
-    the collected final centroids (≤ n_cells×dim values — index
-    metadata, the legitimate collect class). Probe-cell ranking keys
-    on (fold distance, cell) — bit-identical across engines because
-    the centroid literals are.
+    The index build is one md5-Lloyd fit
+    (``cluster.deterministic_lloyd_assign``; its parity disciplines
+    make every value DuckDB-replayable); the probe tail is the SAME
+    ``_ivf_probe_scored`` the MLlib variant uses, fed the collected
+    final centroids (≤ n_cells×dim values — index metadata, the
+    legitimate collect class). Probe-cell ranking keys on (fold
+    distance, cell) — bit-identical across engines because the
+    centroid literals are.
     """
-    from the_framework_for_clustering_time_series_data_spark.operators.cluster import deterministic_lloyd_assign
-
     corpus = emb.select(
         F.col(id_col).alias("nbr_id"), F.col(vec_col).cast("array<double>").alias("v")
     )
     assign, cdf = deterministic_lloyd_assign(
-        corpus, n_cells, id_col="nbr_id", vec_col="v",
-        lloyd_rounds=lloyd_rounds, with_centroids=True,
+        corpus, n_cells, id_col="nbr_id", vec_col="v", lloyd_rounds=lloyd_rounds
     )
     cells = assign.select(F.col("id").alias("nbr_id"), "v", "cell")
     crows = sorted(
@@ -479,8 +486,6 @@ def _sq_dist_expr(vcol: Column, center: list[float]) -> Column:
     two byte-identical copies had grown, and a numeric fix applied to
     one would silently break the probe-identity contract the streaming
     IVF test pins)."""
-    from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import lit_double_array
-
     c = lit_double_array(center)  # one py4j call, not dim+1 (guide §7.3)
     return F.aggregate(
         F.zip_with(vcol, c, lambda a, b: (a - b) * (a - b)),
@@ -568,7 +573,7 @@ def build_ivf_index_deterministic(
     vec_col: str = "embedding",
 ) -> None:
     """Persist an IVF index whose coarse quantizer is the DETERMINISTIC
-    md5-seeded Lloyd build (``cluster.deterministic_lloyd_assign``, the
+    md5-Lloyd build (``cluster.deterministic_lloyd_assign``, the
     sim_ivfb_topk quantizer) instead of MLlib KMeans — same serving
     layout as :func:`build_ivf_index` (hive-partitioned ``cells`` +
     ``centroids`` metadata), but every persisted value is
@@ -576,14 +581,11 @@ def build_ivf_index_deterministic(
     a full value-hash oracle (sim_ivfb_persisted). The deterministic
     build can leave empty cells; the centroid table's explicit ``cell``
     labels (not positional 0..k-1) carry that through the probe."""
-    from the_framework_for_clustering_time_series_data_spark.operators.cluster import deterministic_lloyd_assign
-
     corpus = emb.select(
         F.col(id_col).alias("nbr_id"), F.col(vec_col).cast("array<double>").alias("v")
     )
     assign, cdf = deterministic_lloyd_assign(
-        corpus, n_cells, id_col="nbr_id", vec_col="v",
-        lloyd_rounds=lloyd_rounds, with_centroids=True,
+        corpus, n_cells, id_col="nbr_id", vec_col="v", lloyd_rounds=lloyd_rounds
     )
     # one file per cell (see build_ivf_index's repartition note)
     assign.select(F.col("id").alias("nbr_id"), "v", "cell").repartition(
@@ -791,97 +793,40 @@ def _r6(c: Column) -> Column:
 def _pq_det_build(
     corpus: DataFrame, m: int, n_codes: int, sub: int, lloyd_rounds: int
 ) -> tuple[DataFrame, DataFrame]:
-    """Deterministic per-subspace md5-Lloyd codebook build + code
-    assignment over a 6-dp-quantized corpus ``(nbr_id, v)`` — the
-    replayable core shared by :func:`pq_topk_deterministic` and
-    :func:`ivfpq_topk_deterministic`. ONE grouped dataflow trains all
-    ``m`` subspaces (seed centroids = slices of the n_codes
-    smallest-md5(id) vectors; sequential-fold distances; argmin ties →
-    smaller code; centroid means as exact int64 micro-unit sums of the
-    6-dp quanta — association-order-proof, the c3b discipline).
+    """Deterministic per-subspace codebook build + code assignment over
+    a 6-dp-quantized corpus ``(nbr_id, v)`` — the replayable core
+    shared by :func:`pq_topk_deterministic` and
+    :func:`ivfpq_topk_deterministic`. ONE keyed md5-Lloyd
+    (``cluster.md5_lloyd`` with ``keys=("j",)`` and ``exact_mean``;
+    parity disciplines there) trains all ``m`` subspaces; subspace
+    ``j``'s seeds are the ``j``-th slices of the n_codes smallest-md5(id)
+    vectors. The codebook feeds both the code assignment and the
+    per-query ADC LUT broadcast, so the kernel's per-round centroid
+    checkpoint keeps the rounds from running once per consumer.
     Returns ``(codes_arr, cdf)``: per-vector code arrays (j-ordered)
     and the final ``(j, cell, cvec)`` codebooks."""
-    from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import tiny_window
-
     jgrid = F.array(*[F.lit(j) for j in range(m)])
-    subrows = corpus.select(
-        "nbr_id",
-        F.explode(jgrid).alias("j"),
-        F.col("v"),
-    ).select(
-        "nbr_id",
-        "j",
-        F.transform(
-            F.sequence(F.lit(1), F.lit(sub)),
-            lambda p: F.element_at(F.col("v"), (F.col("j") * sub + p).cast("int")),
-        ).alias("sv"),
-    )
 
-    seeds = (
-        corpus.withColumn("_h", F.md5(F.col("nbr_id").cast("string")))
-        .orderBy("_h", "nbr_id")
-        .limit(n_codes)
-    )
-    # n_codes rows — constant-key window over the seed set only
-    w_seed = tiny_window("_h", "nbr_id", key="_h")
-    seedc = seeds.withColumn("cell", F.row_number().over(w_seed) - 1)
-    cdf = seedc.select(
-        F.explode(jgrid).alias("j"),
-        "cell",
-        F.col("v"),
-    ).select(
-        "j",
-        "cell",
-        F.transform(
-            F.sequence(F.lit(1), F.lit(sub)),
-            lambda p: F.element_at(F.col("v"), (F.col("j") * sub + p).cast("int")),
-        ).alias("cvec"),
-    )
-
-    d2_expr = F.aggregate(
-        F.zip_with("sv", "cvec", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-    def _assign(cents: DataFrame) -> DataFrame:
-        j = subrows.join(F.broadcast(cents), "j").withColumn("d2", d2_expr)
-        return (
-            j.groupBy("nbr_id", "j")
-            .agg(
-                F.min_by(
-                    F.struct("cell", "sv"), F.struct("d2", "cell")
-                ).alias("_b")
-            )
-            .select("nbr_id", "j", "_b.sv", "_b.cell")
-        )
-
-    a = _assign(cdf)
-    for _ in range(lloyd_rounds - 1):
-        ex = a.select("j", "cell", F.posexplode("sv").alias("pos", "val"))
-        micro = F.floor(F.col("val") * F.lit(1e6) + F.lit(0.5)).cast("long")
-        cm = ex.groupBy("j", "cell", "pos").agg(
-            (
-                F.floor(
-                    F.sum(micro).cast("double") / F.count("*") + F.lit(0.5)
-                )
-                / F.lit(1e6)
-            ).alias("cv")
-        )
-        cdf = cm.groupBy("j", "cell").agg(
+    def _slices(frame: DataFrame, key: str, vec: str) -> DataFrame:
+        # one row per subspace j, the vector replaced by its j-th slice
+        return frame.select(key, F.explode(jgrid).alias("j"), vec).select(
+            key,
+            "j",
             F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "cv"))),
-                lambda s: s.cv,
-            ).alias("cvec")
+                F.sequence(F.lit(1), F.lit(sub)),
+                lambda p: F.element_at(F.col(vec), (F.col("j") * sub + p).cast("int")),
+            ).alias(vec),
         )
-        # m×n_codes rows — the codebook feeds BOTH the code assignment
-        # and the per-query ADC LUT broadcast; without the checkpoint
-        # the per-subspace Lloyd rounds re-execute for each (guide §2.4)
-        from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import stage_checkpoint
-        cdf = cdf.transform(stage_checkpoint, eager=False)
-        a = _assign(cdf)
 
-    codes_arr = a.groupBy("nbr_id").agg(
+    points = corpus.select(F.col("nbr_id").alias("id"), "v")
+    a, cdf = md5_lloyd(
+        _slices(points, "id", "v"),
+        _slices(md5_seed_cells(points, n_codes), "cell", "cvec"),
+        keys=("j",),
+        rounds=lloyd_rounds,
+        exact_mean=True,
+    )
+    codes_arr = a.groupBy(F.col("id").alias("nbr_id")).agg(
         F.transform(
             F.sort_array(F.collect_list(F.struct("j", "cell"))),
             lambda s: s.cell,
@@ -1020,12 +965,9 @@ def pq_topk_deterministic(
     seeded-numpy codebooks are RNG/impl-defined.
 
     Replayable build: vectors quantize to 6 dp; each of the ``m``
-    subspaces trains an ``n_codes``-centroid Lloyd quantizer in ONE
-    grouped dataflow (seed centroids = slices of the n_codes
-    smallest-md5(id) vectors — identical seed ids across subspaces;
-    sequential-fold distances; argmin ties → smaller code; centroid
-    means as exact int64 micro-unit sums of the 6-dp quanta —
-    association-order-proof, the c3b discipline). ADC lookup tables are
+    subspaces trains an ``n_codes``-centroid md5-Lloyd quantizer in ONE
+    keyed dataflow (:func:`_pq_det_build` — identical seed ids across
+    subspaces, exact-mean centroids). ADC lookup tables are
     computed as a DataFrame (dense (subspace, code) grid per query —
     missing codes hold 0.0 placeholders that encoded vectors can never
     reference), the approximate distance is a SEQUENTIAL fold over the
@@ -1040,8 +982,6 @@ def pq_topk_deterministic(
     memory story), LUTs are |Q|·m·n_codes rows broadcast, and the
     exact re-rank is bounded at |Q|·rerank rows.
     """
-    from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import stage_checkpoint
-
     sub = dim // m
 
     corpus = emb.select(
@@ -1095,8 +1035,6 @@ def sq8_topk(
     bounded at |Q|·rerank, and there is no training step at all —
     SQ8's operational advantage over PQ/IVF (re-quantize = one pass,
     no codebook drift on append)."""
-    from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import stage_checkpoint
-
     corpus = _r6_corpus(emb, id_col, vec_col)
     # one-row frame, but its SUBTREE is a corpus-wide aggregation —
     # checkpoint it so the corpus and query encoders don't each rerun
@@ -1377,9 +1315,6 @@ def ivfpq_topk_deterministic(
     per-corpus state is (cell, m small ints) per vector; the probe
     join broadcasts |Q|·nprobe rows; rerank is bounded at |Q|·rerank.
     """
-    from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import stage_checkpoint
-    from the_framework_for_clustering_time_series_data_spark.operators.cluster import deterministic_lloyd_assign
-
     sub = dim // m
 
     corpus = emb.select(
@@ -1391,7 +1326,7 @@ def ivfpq_topk_deterministic(
 
     coarse, coarse_cdf = deterministic_lloyd_assign(
         corpus, n_cells, id_col="nbr_id", vec_col="v",
-        lloyd_rounds=lloyd_rounds, with_centroids=True, exact_mean=True,
+        lloyd_rounds=lloyd_rounds, exact_mean=True,
     )
     cells = coarse.select(F.col("id").alias("nbr_id"), "cell")
 

@@ -10,17 +10,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-def stage_checkpoint(df, eager=True):
-    """Lazy proxy for functions.plan_tools.stage_checkpoint: this
-    module is imported by functions/__init__, so a module-level
-    import of the functions package would be circular."""
-    from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import (
-        stage_checkpoint as _sc,
-    )
-
-    return _sc(df, eager=eager)
-
-
+from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import stage_checkpoint
 
 TOKEN_RE = r"\s+"
 
@@ -621,8 +611,6 @@ def quality_logit_det(
     The DuckDB oracle needed the same fix as MATERIALIZED CTEs.
     """
     import math
-
-    from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import stage_checkpoint
 
     def r6(c: Column) -> Column:
         return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)

@@ -148,9 +148,10 @@ class TimeSeriesPipeline:
             v = nested.select(
                 "series_id", F.transform("values", r6).alias("v")
             )
-            self._det_assign = cluster.deterministic_lloyd_assign(
+            assign, _ = cluster.deterministic_lloyd_assign(
                 v, k or 4, id_col="series_id", vec_col="v", exact_mean=True
-            ).cache()
+            )
+            self._det_assign = assign.cache()
             out = self._det_assign.select(
                 F.col("id").alias("series_id"),
                 F.col("cell").cast("int").alias("prediction"),

@@ -456,7 +456,7 @@ def c1b_kmeans_md5lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     means, (d2, cell) ties)."""
     e = _emb_xy(spark, sf_dir)
     v = e.select("series_id", F.array("x", "y").alias("v"))
-    out = cluster.deterministic_lloyd_assign(
+    out, _ = cluster.deterministic_lloyd_assign(
         v, _C1B_K, id_col="series_id", vec_col="v"
     )
     return out.select(
@@ -558,18 +558,21 @@ def c4b_selection_md5lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import stage_checkpoint
 
     e = _emb_xy(spark, sf_dir)
-    v = e.select(F.col("series_id").alias("id"), F.array("x", "y").alias("v"))
-    # round 12: ONE keyed Lloyd for all five k's (identical per-k
-    # arithmetic — deterministic_lloyd_assign_multi shares the md5
-    # seed prefix and groups every aggregate by k) instead of five
-    # unioned Lloyd DAGs; the five fits' scheduling constants were
-    # the measured bulk of this plan's cost (3.8-4.1 s of ~4.6 at
-    # sf0.1), the silhouette only 1.7-2.7 s.
+    v = e.select(F.col("series_id").alias("id"), F.array("x", "y").alias("v")).transform(
+        stage_checkpoint, eager=False
+    )
+    # ONE keyed md5-Lloyd for all five k's instead of five Lloyd DAGs
+    # (the five fits' scheduling constants were the measured bulk of
+    # this plan's cost, 3.8-4.1 s of ~4.6 at sf0.1). Per-k arithmetic
+    # is identical to the standalone fit: each k's seeds are the
+    # k-prefix of one md5 ranking, and every aggregate groups by k.
+    ks = spark.createDataFrame([(k,) for k in _C4B_KS], "k int")
+    seeds = cluster.md5_seed_cells(v, max(_C4B_KS)).join(
+        F.broadcast(ks), F.col("cell") < F.col("k")
+    ).select("k", "cell", "cvec")
+    assign, _ = cluster.md5_lloyd(v, seeds, keys=("k",))
     allpred = (
-        cluster.deterministic_lloyd_assign_multi(
-            v, _C4B_KS, id_col="id", vec_col="v"
-        )
-        .select(
+        assign.select(
             "k",
             F.col("id").alias("series_id"),
             F.col("v")[0].alias("x"),
@@ -1716,7 +1719,6 @@ def c8b_graph_md5pic(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction distributed.
 
     Returns (doc_id, cluster, v) for every node of the pair graph."""
-    from the_framework_for_clustering_time_series_data_spark.operators.cluster import deterministic_lloyd_assign
     from the_framework_for_clustering_time_series_data_spark.operators import dedup
     from the_framework_for_clustering_time_series_data_spark.plans.dedup_plans import _JACCARD_DOC_CAP
 
@@ -1784,7 +1786,7 @@ def c8b_graph_md5pic(spark: SparkSession, sf_dir: str) -> DataFrame:
             .transform(stage_checkpoint, eager=False)
         )
     arr = v.select("id", F.array(F.col("v")).alias("vec"))
-    assign = deterministic_lloyd_assign(
+    assign, _ = cluster.deterministic_lloyd_assign(
         arr, _C8B_K, id_col="id", vec_col="vec", exact_mean=True
     )
     return assign.select(
@@ -1994,7 +1996,7 @@ def text_tfidf_md5kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.transform(F.col("raw"), lambda x: x * F.lit(0.0)))
         .alias("v"),
     )
-    out = cluster.deterministic_lloyd_assign(
+    out, _ = cluster.deterministic_lloyd_assign(
         vec, _TTK_K, id_col="id", vec_col="v", exact_mean=True
     )
     return out.select(
@@ -2408,9 +2410,10 @@ def c12_validity_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
     K = _C1B_K
     e = _emb_xy(spark, sf_dir)
     v = e.select("series_id", F.array("x", "y").alias("v"))
-    a1 = cluster.deterministic_lloyd_assign(
+    a1, _ = cluster.deterministic_lloyd_assign(
         v, K, id_col="series_id", vec_col="v"
-    ).transform(stage_checkpoint, eager=False)
+    )
+    a1 = a1.transform(stage_checkpoint, eager=False)
 
     def fdiv(a, b):
         return F.floor(a.cast("double") / b.cast("double")).cast("long")

@@ -978,7 +978,6 @@ def ivf_maintain_batch(
                 id_col="nbr_id",
                 vec_col="v",
                 lloyd_rounds=lloyd_rounds,
-                with_centroids=True,
             )
             cdf.select(
                 F.col("cell").cast("int").alias("cell"),
@@ -1625,8 +1624,7 @@ def ivf_recenter(
 
     shutil.rmtree(staged, ignore_errors=True)
     assign, cdf = deterministic_lloyd_assign(
-        corpus, k, id_col="nbr_id", vec_col="v",
-        lloyd_rounds=lloyd_rounds, with_centroids=True,
+        corpus, k, id_col="nbr_id", vec_col="v", lloyd_rounds=lloyd_rounds
     )
     cdf.select(
         F.col("cell").cast("int").alias("cell"), F.col("cvec").alias("center")
@@ -1673,11 +1671,11 @@ def ivf_recenter_partial(
     >1.2× the mean); when no cell clears it, the single argmax cell
     (ties → lowest id) — a rebuild that fires must always improve the
     worst cell. Each hot cell c splits into
-    ``k_c = ceil(n_c · n_cells / total)`` sub-cells via the same
-    md5-seeded fixed-round Lloyd discipline as the full retrain,
-    RESTRICTED to the cell's own members (seeds = k_c smallest md5(id)
-    within the cell; sequential-fold distances; half-up-6dp means;
-    argmin ties to the lower sub-cell). Sub-cells take fresh ids above
+    ``k_c = ceil(n_c · n_cells / total)`` sub-cells with the same
+    md5-Lloyd as the full retrain (``cluster.md5_lloyd`` keyed by hot
+    cell; parity disciplines there), RESTRICTED to the cell's own
+    members: seeds = the k_c smallest-md5(id) members of the cell,
+    argmin ties to the lower sub-cell. Sub-cells take fresh ids above
     the current max, ordered by (hot cell id, sub index), so cold cell
     ids — and their dynamic-partition-pruned layouts — never move.
 
@@ -1689,6 +1687,7 @@ def ivf_recenter_partial(
     from pyspark.sql.window import Window
 
     from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import stage_checkpoint
+    from the_framework_for_clustering_time_series_data_spark.operators.cluster import md5_lloyd
 
     root = Path(index_dir)
     if (root / "_requant_commit").exists():
@@ -1762,55 +1761,34 @@ def ivf_recenter_partial(
         .join(kc_df, "cell")
         .transform(stage_checkpoint, eager=True)
     )
+    # per-hot-cell md5 seeds: the kc smallest-md5(id) members, ranked
+    # within their cell (key "hot"; the kernel's cell is the sub-cell)
     w_seed = Window.partitionBy("cell").orderBy(
         F.md5(F.col("nbr_id").cast("string")), "nbr_id"
     )
-    cdf = (
+    seeds = (
         hm.withColumn("_rn", F.row_number().over(w_seed))
         .where(F.col("_rn") <= F.col("kc"))
-        .select("cell", (F.col("_rn") - 1).alias("sub"), F.col("v").alias("cvec"))
+        .select(
+            F.col("cell").alias("hot"),
+            (F.col("_rn") - 1).alias("cell"),
+            F.col("v").alias("cvec"),
+        )
     )
-    d2_expr = F.aggregate(
-        F.zip_with("v", "cvec", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    a2, cdf = md5_lloyd(
+        hm.select(F.col("cell").alias("hot"), F.col("nbr_id").alias("id"), "v"),
+        seeds,
+        keys=("hot",),
+        rounds=lloyd_rounds,
     )
-
-    def _assign(centroids) -> "DataFrame":
-        j = (
-            hm.select("nbr_id", "v", "cell")
-            .join(F.broadcast(centroids), "cell")
-            .withColumn("d2", d2_expr)
-        )
-        best = j.groupBy("nbr_id").agg(
-            F.min_by(
-                F.struct("cell", "sub", "v"), F.struct("d2", "sub")
-            ).alias("_b")
-        )
-        return best.select("nbr_id", "_b.v", "_b.cell", "_b.sub")
-
-    for _ in range(lloyd_rounds - 1):
-        a = _assign(cdf)
-        cm = (
-            a.select("cell", "sub", F.posexplode("v").alias("pos", "val"))
-            .groupBy("cell", "sub", "pos")
-            .agg((F.floor(F.avg("val") * 1e6 + 0.5) / 1e6).alias("cv"))
-        )
-        cdf = cm.groupBy("cell", "sub").agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "cv"))),
-                lambda s: s.cv,
-            ).alias("cvec")
-        )
-    cdf = cdf.transform(stage_checkpoint, eager=True)
     # two consumers (the staged write + the sub-cell meta counts):
     # materialize once or the hot Lloyd assign runs twice
-    a2 = _assign(cdf).transform(stage_checkpoint, eager=True)
+    a2 = a2.transform(stage_checkpoint, eager=True)
 
     ren = F.broadcast(
         spark.createDataFrame(
             [(c, j, nid) for (c, j), nid in new_id.items()],
-            "cell int, sub int, ncell int",
+            "hot int, cell int, ncell int",
         )
     )
     import shutil
@@ -1820,7 +1798,7 @@ def ivf_recenter_partial(
     new_cent = (
         cent.where(~F.col("cell").isin(hot_lit))
         .unionByName(
-            cdf.join(ren, ["cell", "sub"]).select(
+            cdf.join(ren, ["hot", "cell"]).select(
                 F.col("ncell").cast("int").alias("cell"),
                 F.col("cvec").alias("center"),
             )
@@ -1833,8 +1811,8 @@ def ivf_recenter_partial(
     # majority, and the sources stay intact until phase 2 (the
     # two-phase swap's contract: phase 1 must not destroy anything)
     (
-        a2.join(ren, ["cell", "sub"])
-        .select("nbr_id", "v", F.col("ncell").alias("cell"))
+        a2.join(ren, ["hot", "cell"])
+        .select(F.col("id").alias("nbr_id"), "v", F.col("ncell").alias("cell"))
         .repartition("cell")  # one file per cell (small-file fix)
         .write.mode("overwrite")
         .partitionBy("cell")
@@ -1854,7 +1832,7 @@ def ivf_recenter_partial(
     # commit marker, which is the only gate readers honor)
     sub_counts = {
         (int(r["cell"])): int(r["n"])
-        for r in a2.join(ren, ["cell", "sub"])
+        for r in a2.join(ren, ["hot", "cell"])
         .groupBy("ncell")
         .agg(F.count("*").alias("n"))
         .select(F.col("ncell").alias("cell"), "n")
