@@ -99,21 +99,24 @@ def lit_double_array(values):
     one ``array(1.0D, …)`` SQL string JVM-side yields the IDENTICAL
     Literal array: ``repr(float)`` is the shortest round-trip decimal
     and Java's double parse is correctly rounded, so values are
-    bit-identical (asserted in tests/test_plans.py)."""
-    import math
-
+    bit-identical (asserted in tests/test_build_cost.py)."""
     from pyspark.sql import functions as F
 
-    parts = []
-    for x in values:
-        x = float(x)
-        if math.isfinite(x):
-            parts.append(repr(x) + "D")
-        elif math.isnan(x):
-            parts.append("CAST('NaN' AS DOUBLE)")
-        else:
-            parts.append(f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)")
-    return F.expr("array(" + ",".join(parts) + ")")
+    return F.expr("array(" + ",".join(_sql_double(x) for x in values) + ")")
+
+
+def _sql_double(x) -> str:
+    """``x`` as a SQL double literal that parses to the identical bits
+    (NaN and the infinities through a string cast, which Catalyst types
+    as nullable)."""
+    import math
+
+    x = float(x)
+    if math.isfinite(x):
+        return repr(x) + "D"
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
 
 
 def lit_long_array(values):
@@ -122,6 +125,28 @@ def lit_long_array(values):
     from pyspark.sql import functions as F
 
     return F.expr("array(" + ",".join(f"{int(x)}L" for x in values) + ")")
+
+
+def lit_int_map(items, value_type: str):
+    """A literal ``map<int, value_type>`` Column in one py4j round trip,
+    equal to ``F.create_map(F.lit(k), F.lit(v).cast(value_type), ...)``
+    over ``items`` ((key, value) pairs), which costs ~4 py4j calls per
+    entry. Keys are ints; values are ints, floats (the bit-exact
+    :func:`lit_double_array` form) or ``Decimal`` (a ``BD`` literal in
+    plain notation, so the cast sees the exact decimal)."""
+    from decimal import Decimal
+
+    from pyspark.sql import functions as F
+
+    def value(v) -> str:
+        if isinstance(v, Decimal):
+            return f"{v:f}BD"
+        if isinstance(v, float):
+            return _sql_double(v)
+        return f"{int(v)}L"
+
+    entries = ",".join(f"{int(k)},CAST({value(v)} AS {value_type})" for k, v in items)
+    return F.expr(f"map({entries})")
 
 
 def tiny_window(*order_cols, key: str):

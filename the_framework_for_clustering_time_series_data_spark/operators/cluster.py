@@ -171,7 +171,7 @@ def deterministic_lloyd_assign(
     then — 4 jobs per update round for a standalone call, none at
     ``lloyd_rounds=1``. Only the final assignment waits for the first
     action. ``perfbench/run.py --trace 1`` reports ``plans.build_jobs``
-    15 for pipeline_e2e_det and 13 for text_tfidf_md5kmeans, each
+    14 for pipeline_e2e_det and 12 for text_tfidf_md5kmeans, each
     including one two-round fit."""
     v0 = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")

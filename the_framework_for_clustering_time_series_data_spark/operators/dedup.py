@@ -422,30 +422,30 @@ def minhash_lsh_pairs(
     # per-doc collect_set arrays is O(corpus tokens) memory and the GC
     # hazard that made this stage jittery; at fleet scale it's simply
     # impossible, so the design is: signatures for everyone, shingle
-    # sets only for candidates in pass 2).
+    # sets only for candidates in pass 2). The signature and the band
+    # array are each ONE parsed SQL expression, one py4j round trip
+    # where building them Column by Column cost several per element.
     sig = shingle(df).groupBy("id").agg(
-        F.array(*[F.min(F.col("sh").bitwiseXOR(F.lit(r))) for r in rs]).alias("sig"),
+        F.expr("array(" + ",".join(f"min(sh ^ {r}L)" for r in rs) + ")").alias("sig"),
     )
+
     def band_key(b):
-        elems = [F.element_at("sig", b * band_size + j + 1) for j in range(band_size)]
+        elems = [f"element_at(sig, {b * band_size + j + 1})" for j in range(band_size)]
         if hash_family == "md5":
             # portable: the raw signature tuple IS the bucket key — no
             # engine-specific band hash between Spark and the oracle
-            return F.struct(*[e.alias(f"e{j}") for j, e in enumerate(elems)])
-        return F.xxhash64(*elems)
+            return "named_struct(" + ",".join(f"'e{j}', {e}" for j, e in enumerate(elems)) + ")"
+        return f"xxhash64({','.join(elems)})"
 
     bands = sig.select(
         "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        band_key(b).alias("band_hash"),
-                    )
-                    for b in range(n_bands)
-                ]
+        F.expr(
+            "explode(array("
+            + ",".join(
+                f"named_struct('band_id', {b}, 'band_hash', {band_key(b)})"
+                for b in range(n_bands)
             )
+            + "))"
         ).alias("bb"),
     ).select("id", "bb.band_id", "bb.band_hash")
     buckets = (

@@ -10,8 +10,9 @@ per-series tables a 100 TB corpus produces.
 
 This module computes the *bit-identical* ntile result distributively:
 
-1. **Range buckets from a sketch.** One eager ``approxQuantile`` pass
-   over the numeric proxies of all leading sort keys yields ~``buckets``
+1. **Range buckets from a sketch.** One eager sketch pass (the
+   ``percentile_approx`` aggregate behind ``approxQuantile``) over the
+   numeric proxies of all leading sort keys yields ~``buckets``
    boundary values per spec, held on the driver (≤ buckets×specs
    doubles) and embedded as array LITERALS. Every row's bucket =
    #boundaries ≤ its proxy, a JVM ``size(filter(...))`` over a
@@ -59,12 +60,30 @@ from pyspark.sql.window import Window
 
 from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import (
     lit_double_array,
+    lit_int_map,
     stage_checkpoint,
 )
 
 # Rank exactness does not depend on sketch accuracy (see module
-# docstring), so approxQuantile runs at a loose 0.01 relative error.
-_SKETCH_RELATIVE_ERROR = 0.01
+# docstring), so the sketch runs at a loose 0.01 relative error
+# (percentile_approx accuracy 100 = 1 / relative error).
+_SKETCH_ACCURACY = 100
+
+
+def _sketch_bounds(base: DataFrame, cols: list[str], buckets: int) -> list[list[float]]:
+    """``buckets - 1`` equi-depth boundaries per column of ``base`` in one
+    collect: the values ``base.stat.approxQuantile(cols, probs, 0.01)``
+    returns. Spark 4.1 runs approxQuantile as this same
+    ``percentile_approx`` aggregate over each column's non-null, non-NaN
+    values, but PySpark's wrapper passes the probabilities in and
+    converts the ``double[][]`` result out one element per py4j round
+    trip (433 calls for two columns at 64 buckets)."""
+    probs = lit_double_array([i / buckets for i in range(1, buckets)])
+    sketches = [
+        F.percentile_approx(F.expr(f"IF(isnan({c}), NULL, {c})"), probs, _SKETCH_ACCURACY)
+        for c in cols
+    ]
+    return [list(b or []) for b in base.select(*sketches).collect()[0]]
 
 
 def with_global_ntiles(
@@ -111,10 +130,7 @@ def with_global_ntiles(
     # 1. all boundary arrays in ONE eager pass, driver-held, embedded
     # as literals (see module docstring: exchange reuse does not dedupe
     # a lazy sketch across this plan's multiple consumers of the input)
-    probs = [i / buckets for i in range(1, buckets)]
-    all_bounds = base.stat.approxQuantile(
-        [f"_pv{i}" for i in range(len(specs))], probs, _SKETCH_RELATIVE_ERROR
-    )
+    all_bounds = _sketch_bounds(base, [f"_pv{i}" for i in range(len(specs))], buckets)
 
     def _le_pv(i: int):
         return lambda b: b <= F.col(f"_pv{i}")
@@ -159,13 +175,7 @@ def with_global_ntiles(
             offs[bk] = acc
             acc += cnt
         big_n = acc
-        off_map = F.create_map(
-            *[
-                c
-                for bk, off in offs.items()
-                for c in (F.lit(bk), F.lit(off).cast("long"))
-            ]
-        )
+        off_map = lit_int_map(offs.items(), "bigint")
         rank = F.element_at(off_map, F.col(f"_bk{i}")) + F.row_number().over(w_in)
         q, rem = divmod(big_n, n)
         thr = rem * (q + 1)
@@ -217,8 +227,7 @@ def with_global_cumsum(
     # driver-held boundary literals, one eager pass — same rationale as
     # with_global_ntiles (exchange reuse does not dedupe a lazy sketch
     # across the histogram and output lineages)
-    probs = [i / buckets for i in range(1, buckets)]
-    bounds = base.stat.approxQuantile("_pv", probs, _SKETCH_RELATIVE_ERROR)
+    (bounds,) = _sketch_bounds(base, ["_pv"], buckets)
     barr = lit_double_array(bounds)
     tagged = base.withColumn(
         "_bk", F.size(F.filter(barr, lambda b: b <= F.col("_pv")))
@@ -238,9 +247,7 @@ def with_global_cumsum(
     for bk, tot in btot:
         offs[bk] = acc
         acc += tot
-    off_map = F.create_map(
-        *[c for bk, off in offs.items() for c in (F.lit(bk), F.lit(off).cast(off_t))]
-    )
+    off_map = lit_int_map(offs.items(), off_t)
     w_in = (
         Window.partitionBy("_bk")
         .orderBy(*order_by)
