@@ -5,8 +5,8 @@ costs py4j round trips for every Column built and Spark jobs for every
 eager step. These tests pin both so the cost cannot creep back:
 
 * the py4j ``send_command`` calls of each interactive-session query's
-  build stay under a committed budget (the count measured when the
-  budget was set, plus 15%);
+  and each SemDeDup query's build stay under a committed budget (the
+  count measured when the budget was set, plus 15%);
 * a repeated ``load_table`` of an unchanged table launches no Spark job
   (its schema comes from the per-session memo), and a table rewritten
   in place is re-inferred;
@@ -37,7 +37,9 @@ from the_framework_for_clustering_time_series_data_spark.sources.tables import l
 # (local[nproc], 8 shuffle partitions), second build of the session:
 # the measured count + 15%. Measured counts: p5 261, g6 250,
 # pipeline_e2e_det 940, e2c 381, t5 529, dedup_minhash_lsh 691,
-# text_tfidf_md5kmeans 940, curate_corpus 927.
+# text_tfidf_md5kmeans 940, curate_corpus 927, dedup_semantic 491,
+# dedup_semantic_scaled 491, dedup_semantic_prod 404,
+# dedup_semantic_coarse 550.
 PY4J_BUDGET = {
     "p5_preprocess_table": 301,
     "g6_dtw_align": 288,
@@ -47,6 +49,10 @@ PY4J_BUDGET = {
     "dedup_minhash_lsh": 795,
     "text_tfidf_md5kmeans": 1081,
     "curate_corpus": 1067,
+    "dedup_semantic": 565,
+    "dedup_semantic_scaled": 565,
+    "dedup_semantic_prod": 465,
+    "dedup_semantic_coarse": 633,
 }
 
 #: py4j's garbage-collection detach commands start with this; they depend

@@ -3,6 +3,7 @@ the exact brute-force neighbors on the embeddings test table."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_ORACLE
@@ -367,7 +368,13 @@ def test_bounded_corpus_guard_names_scale_route(spark):
 def test_exact_kernels_follow_string_ids(spark):
     # round-1 advice: vectorized kernels hard-coded int64 ids/schemas;
     # sliding-window series ids are strings and must survive unchanged
-    from the_framework_for_clustering_time_series_data_spark.operators.dedup import embedding_cosine_pairs, semantic_dedup
+    from the_framework_for_clustering_time_series_data_spark.operators.dedup import (
+        embedding_cosine_pairs,
+        semantic_dedup,
+        semantic_dedup_coarse,
+        semantic_dedup_deterministic,
+        semantic_dedup_prod,
+    )
     from the_framework_for_clustering_time_series_data_spark.operators.similarity import brute_force_topk
 
     rows = [
@@ -384,9 +391,23 @@ def test_exact_kernels_follow_string_ids(spark):
     topk = brute_force_topk(emb, emb.where(F.col("vec_id") == "s_a"), k=2).collect()
     assert [r["nbr_id"] for r in topk] == ["s_b", "s_d"]
 
-    sd = semantic_dedup(emb, n_cells=2, threshold=0.9).collect()
-    assert {r["id"] for r in sd} == {"s_a", "s_b", "s_c", "s_d"}
-    assert all(isinstance(r["group_id"], str) for r in sd)
+    # all four SemDeDup entry points: ids and group ids stay strings
+    # through the assignment and the in-task closure
+    outs = {
+        "mllib": semantic_dedup(emb, n_cells=2, threshold=0.9).collect(),
+        "deterministic": semantic_dedup_deterministic(emb, n_cells=2, threshold=0.9).collect(),
+        "prod": semantic_dedup_prod(emb, threshold=0.9).collect(),
+        "coarse": semantic_dedup_coarse(emb, threshold=0.9).collect(),
+    }
+    for sd in outs.values():
+        assert {r["id"] for r in sd} == {"s_a", "s_b", "s_c", "s_d"}
+        assert all(isinstance(r["group_id"], str) for r in sd)
+    # prod and coarse put the four rows in one cell (k = ceil(4/250)):
+    # the closure joins each near-parallel pair under its smaller id
+    for sd in (outs["prod"], outs["coarse"]):
+        assert {r["id"]: r["group_id"] for r in sd} == {
+            "s_a": "s_a", "s_b": "s_a", "s_c": "s_c", "s_d": "s_c"
+        }
 
 
 def test_simhash_pairs_pigeonhole_holds_beyond_three(spark):
@@ -605,15 +626,18 @@ def test_semantic_dedup_coarse_routing_parity_and_invariants(spark):
     assert sorted(map(tuple, out.collect())) == duck
 
 
-def test_semantic_dedup_coarse_explicit_kc_knob(spark):
-    """The coarse_cells knob overrides ceil(sqrt(k)); a kc=1 degenerate
-    routing reduces to prod-style flat assignment over one bucket and
-    still satisfies the invariants."""
-    from the_framework_for_clustering_time_series_data_spark.operators.dedup import semantic_dedup_coarse
+@pytest.mark.parametrize(
+    "fn", ["semantic_dedup_deterministic", "semantic_dedup_prod", "semantic_dedup_coarse"]
+)
+def test_semantic_dedup_empty_input(spark, fn):
+    """The md5 entry points return an empty frame with the shared output
+    schema on an empty input; coarse's quantizer must route an empty
+    (0 × dim) seed matrix."""
+    from the_framework_for_clustering_time_series_data_spark.operators import dedup
 
-    emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    out = semantic_dedup_coarse(
-        emb, target_cell_size=100, threshold=0.4, coarse_cells=1
-    ).cache()
-    assert out.count() == emb.count()
-    assert out.where("keep").count() == out.select("group_id").distinct().count()
+    emb = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    out = getattr(dedup, fn)(emb, threshold=0.9)
+    assert out.schema.simpleString() == (
+        "struct<id:bigint,cell:int,group_id:bigint,group_size:bigint,keep:boolean>"
+    )
+    assert out.collect() == []

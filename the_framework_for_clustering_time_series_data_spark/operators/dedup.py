@@ -23,6 +23,7 @@ from the_framework_for_clustering_time_series_data_spark.functions.plan_tools im
     stage_checkpoint,
 )
 from the_framework_for_clustering_time_series_data_spark.operators.cluster import deterministic_lloyd_assign
+from the_framework_for_clustering_time_series_data_spark.operators.corpus_guard import id_spark_type
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -596,10 +597,7 @@ def embedding_cosine_pairs(
     import numpy as np
     import pandas as pd
 
-    from the_framework_for_clustering_time_series_data_spark.operators.corpus_guard import (
-        id_spark_type,
-        require_bounded_corpus,
-    )
+    from the_framework_for_clustering_time_series_data_spark.operators.corpus_guard import require_bounded_corpus
 
     require_bounded_corpus(
         emb,
@@ -881,12 +879,21 @@ def semantic_dedup(
     single member CLOSEST to its cell centroid (the best exemplar of
     the local mode).
 
+    Cells come from MLlib ``KMeans`` (kmeans|| seeding, ``seed``
+    pinned); everything after the assignment is the shared per-cell
+    tail (:func:`_cell_groups_fn`: half-up-6dp cosine decision, in-task
+    closure, (d2, id) survivor). MLlib's seeding and float
+    reductions are implementation-defined, so this form is rows-only;
+    :func:`semantic_dedup_deterministic` is its replayable sibling.
+    ``KMeans.fit`` raises on an empty input.
+
     Returns one row per input vector:
     (id, cell, group_id, group_size, keep) — singletons keep
     themselves with group_size 1. Cross-cell duplicates are missed by
     construction; that is the accepted recall trade the paper makes to
     scale past brute force.
     """
+    import numpy as np
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -897,68 +904,11 @@ def semantic_dedup(
     model = KMeans(
         k=n_cells, seed=seed, featuresCol="_features", predictionCol="cell"
     ).fit(vecs)
-    pred = model.transform(vecs).drop("_features").transform(stage_checkpoint, eager=True)
-
-    # within-cell pair scan as ONE matmul per cell (applyInPandas on
-    # the cell key) — the interpreted per-pair cosine fold this
-    # replaces was ~20× slower at 5k×64 (same lesson as
-    # embedding_cosine_pairs' vectorized path)
-    import numpy as np
-    import pandas as pd
-
-    from the_framework_for_clustering_time_series_data_spark.operators.corpus_guard import id_spark_type
-
-    id_t = id_spark_type(emb, id_col)
-
-    def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        # id dtype follows the input column (string ids stay strings)
-        ids = pdf["id"].to_numpy()
-        mat = np.array(pdf["v"].tolist(), dtype=np.float64)
-        mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        sims = mat @ mat.T
-        ri, ci = np.nonzero((sims >= threshold) & (ids[None, :] > ids[:, None]))
-        return pd.DataFrame({"id_a": ids[ri], "id_b": ids[ci]})
-
-    pairs = (
-        pred.select("cell", "id", "v")
-        .groupBy("cell")
-        .applyInPandas(cell_pairs, f"id_a {id_t}, id_b {id_t}")
-    )
-    groups = duplicate_groups(pairs)  # (doc_id, group_id, group_size)
-
-    centers = model.clusterCenters()
-    spark = emb.sparkSession
-    cdf = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centers)], "cell int, cvec array<double>"
-    )
-    # distance to own-cell centroid decides the group representative
-    with_d = pred.join(F.broadcast(cdf), "cell").select(
-        "id",
-        "cell",
-        F.aggregate(
-            F.zip_with("v", "cvec", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("d2"),
-    )
-    member = with_d.join(
-        groups.select(F.col("doc_id").alias("id"), "group_id", "group_size"),
-        "id",
-        "left",
-    ).select(
-        "id",
-        "cell",
-        F.coalesce("group_id", "id").alias("group_id"),
-        F.coalesce("group_size", F.lit(1)).alias("group_size"),
-        "d2",
-    )
-    w = Window.partitionBy("group_id").orderBy("d2", "id")
-    return member.select(
-        "id",
-        "cell",
-        "group_id",
-        "group_size",
-        (F.row_number().over(w) == 1).alias("keep"),
+    return _close_cells(
+        model.transform(vecs).select("cell", "id", "v"),
+        id_spark_type(emb, id_col),
+        threshold,
+        centers=np.array(model.clusterCenters(), dtype=np.float64),
     )
 
 
@@ -968,23 +918,18 @@ def semantic_dedup_deterministic(
     vec_col: str = "embedding",
     n_cells: int = 8,
     threshold: float = 0.9,
-    lloyd_rounds: int = 2,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) with a DETERMINISTIC,
-    cross-engine-replayable cell assignment — the oracle-checkable twin
-    of :func:`semantic_dedup` (whose MLlib k-means seeding is
-    RNG-/implementation-defined and therefore rows-only at the gate).
-
-    Cells come from one md5-Lloyd fit (``cluster.deterministic_lloyd_assign``:
-    ``n_cells`` smallest-md5(id) seeds, ``lloyd_rounds`` fixed rounds),
-    whose parity disciplines make the cell assignment DuckDB-replayable.
-    On top of them:
-
-    * the pair-stage cosine runs as one BLAS matmul per cell (speed)
-      but its threshold DECISION keys on the same half-up-6dp round in
-      both engines, so matmul-vs-fold ulp drift cannot flip a pair;
-    * the survivor pick keys on (d2-to-own-centroid, id) — a
-      deterministic tie.
+    cross-engine-replayable cell assignment: ``n_cells`` cells from one
+    two-round md5-Lloyd fit (``cluster.deterministic_lloyd_assign``,
+    parity disciplines in ``cluster.md5_lloyd``), so the DuckDB twin
+    (``plans.dedup_plans._semantic_oracle_sql``) replays every cell.
+    It differs from :func:`semantic_dedup` only in that assignment;
+    the pair decision, closure and survivor pick are the shared
+    per-cell tail (:func:`_cell_groups_fn`): the cosine runs as one
+    BLAS matmul per cell but its threshold DECISION keys on the
+    half-up-6dp round in both engines, and the survivor is the
+    (d2-to-own-centroid, id) argmin.
 
     Output matches semantic_dedup: one row per vector,
     ``(id, cell, group_id, group_size, keep)``.
@@ -996,64 +941,8 @@ def semantic_dedup_deterministic(
     (not convergence-driven) — determinism over optimality, which is
     fine for cell BOUNDING where any reasonable partition works.
     """
-    final, _ = deterministic_lloyd_assign(
-        emb, n_cells, id_col=id_col, vec_col=vec_col, lloyd_rounds=lloyd_rounds
-    )
-    final = final.transform(stage_checkpoint, eager=True)
-
-    # pair scan as ONE matmul per cell (the semantic_dedup lesson: an
-    # interpreted zip_with/aggregate HOF per pair costs ~µs per ELEMENT
-    # — |pairs|·dim elements — measured 9.9 s vs ~2 s at sf0.1). The
-    # cosine DECISION keys on the half-up-6dp round in BOTH engines, so
-    # BLAS-vs-sequential-fold ulp drift cannot flip a pair across the
-    # threshold.
-    import numpy as np
-    import pandas as pd
-
-    from the_framework_for_clustering_time_series_data_spark.operators.corpus_guard import id_spark_type
-
-    id_t = id_spark_type(emb, id_col)
-
-    def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy()
-        mat = np.array(pdf["v"].tolist(), dtype=np.float64)
-        norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
-        sims = (mat @ mat.T) / np.outer(norms, norms)
-        simsr = np.floor(sims * 1e6 + 0.5) / 1e6
-        ri, ci = np.nonzero((simsr >= threshold) & (ids[None, :] > ids[:, None]))
-        # condition (r, c) reads ids[c] > ids[r] → id_a is the row id
-        return pd.DataFrame({"id_a": ids[ri], "id_b": ids[ci]})
-
-    pairs = (
-        final.select("cell", "id", "v")
-        .groupBy("cell")
-        .applyInPandas(cell_pairs, f"id_a {id_t}, id_b {id_t}")
-    )
-    return _semantic_close_groups(final, pairs)
-
-
-def _semantic_close_groups(final: DataFrame, pairs: DataFrame) -> DataFrame:
-    """The shared SemDeDup tail: transitive closure of the in-cell
-    near-dup pairs, group sizes, and the centroid-closest survivor pick
-    on the deterministic (d2, id) key. ``final`` carries one row per
-    vector ``(id, cell, d2)``(+extras); ``pairs`` the thresholded
-    ``(id_a, id_b)`` edges."""
-    comp = connected_components(pairs)  # (node, component) — min-id label
-    gsz = comp.groupBy("component").agg(F.count("*").alias("group_size"))
-    mem = (
-        final.join(comp.withColumnRenamed("node", "id"), "id", "left")
-        .withColumn("group_id", F.coalesce("component", "id"))
-        .join(gsz.withColumnRenamed("component", "group_id"), "group_id", "left")
-        .withColumn("group_size", F.coalesce("group_size", F.lit(1).cast("long")))
-    )
-    w_keep = Window.partitionBy("group_id").orderBy("d2", "id")
-    return mem.select(
-        "id",
-        "cell",
-        "group_id",
-        "group_size",
-        (F.row_number().over(w_keep) == 1).alias("keep"),
-    )
+    final, _ = deterministic_lloyd_assign(emb, n_cells, id_col=id_col, vec_col=vec_col)
+    return _close_cells(final, id_spark_type(emb, id_col), threshold)
 
 
 def _micro_mat(series, dim: int):
@@ -1124,73 +1013,223 @@ def _int_d2_matrix(X, C, dim: int):
     )
 
 
-def _int_cell_groups_fn(dim: int, threshold: float):
-    """The shared int-exact SemDeDup per-cell tail (used by
-    :func:`semantic_dedup_prod` and :func:`semantic_dedup_coarse`):
-    in-cell cosine pairs over micro-unit int64 vectors (half-up-6dp
-    decision), LOCAL union-find closure, group sizes, and the
-    centroid-closest (d2, id) survivor — the dup graph's edges are
-    in-cell by construction, so the whole closure runs inside one
-    applyInPandas group instead of a distributed star-contraction
-    pass (~11.6 s of the sf10 profile before round 11)."""
+def _nearest(X, C, dim: int):
+    """Each int64 row of ``X``'s nearest row of ``C`` and its exact int
+    d2. np.argmin takes the FIRST min and ``C`` is sorted by cell, so an
+    exact-int tie goes to the lower cell — the oracle's ORDER BY d2,
+    cell. An empty ``X`` yields empty arrays (argmin refuses a 0×0
+    matrix, which an empty corpus's seed table produces)."""
+    import numpy as np
+
+    if not len(X):
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    d2 = _int_d2_matrix(X, C, dim)
+    rows = np.argmin(d2, axis=1)
+    return rows, d2[np.arange(len(rows)), rows].astype(np.int64)
+
+
+def _cell_sums(X, labels):
+    """Per-label int64 sums of ``X``'s rows: ``(labels present
+    ascending, sums, counts)``. Integer sums are order-free, so a mean
+    over partials equals the oracle's mean over members exactly."""
+    import numpy as np
+
+    order = np.argsort(labels, kind="stable")
+    present, starts = np.unique(labels[order], return_index=True)
+    sums = (
+        np.add.reduceat(X[order], starts, axis=0)
+        if len(starts)
+        else np.empty((0, X.shape[1]), dtype=np.int64)
+    )
+    return present, sums, np.diff(np.append(starts, len(labels)))
+
+
+_PARTIALS_SCHEMA = "cell int, vsum array<long>, n long"
+
+
+def _partials_frame(X, cells):
+    """One Lloyd update's per-task partials: ``X``'s rows reduced to
+    per-cell ``(cell, vsum, n)``, at most k×dim per batch, so the
+    update never ships the ``(id, v)`` payload to a regroup."""
+    import numpy as np
+    import pandas as pd
+
+    present, sums, cnts = _cell_sums(X, cells)
+    return pd.DataFrame(
+        {"cell": present.astype(np.int32), "vsum": list(sums), "n": cnts}
+    )
+
+
+def _fold_centroids(parts: DataFrame, bc, dim: int):
+    """The Lloyd centroid update shared by prod and coarse: fold the
+    per-task ``(cell, vsum, n)`` partials (:func:`_partials_frame`) in
+    ONE exchange — an int64 ``zip_with`` sum per cell (order-free exact
+    adds), then ``floor(sum/cnt + 0.5)`` per component (the DuckDB
+    twins' avg-over-members, value for value). Cells the round left
+    empty drop, as in the twins. Returns ``(cells, k×dim int64
+    centroids)`` sorted by cell and drops the round's centroid
+    broadcast ``bc``, which the collect fully consumed."""
+    import numpy as np
+
+    zero = F.array_repeat(F.lit(0).cast("long"), dim)
+    rows = (
+        parts.groupBy("cell")
+        .agg(
+            F.sum("n").alias("ntot"),
+            F.aggregate(
+                F.collect_list("vsum"),
+                zero,
+                lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b),
+            ).alias("vs"),
+        )
+        .select(
+            "cell",
+            F.transform(
+                "vs",
+                lambda s: F.floor(
+                    s.cast("double") / F.col("ntot") + F.lit(0.5)
+                ).cast("long"),
+            ).alias("cvec"),
+        )
+        .orderBy("cell")
+        .collect()
+    )
+    bc.unpersist(blocking=False)
+    return (
+        np.array([r["cell"] for r in rows], dtype=np.int64),
+        np.array([r["cvec"] for r in rows], dtype=np.int64).reshape(len(rows), dim),
+    )
+
+
+def _micro_seeds(emb: DataFrame, id_col: str, vec_col: str, target_cell_size: int):
+    """The prologue shared by prod and coarse: vectors quantized ONCE
+    to int64 micro-units ``floor(x·1e6 + 0.5)`` (both engines compute
+    the same fp64 product and floor), ``n`` and ``dim`` from one job,
+    and the ``k = ceil(n / target_cell_size)`` smallest-md5(id) seed
+    rows. Returns ``(v0, dim, seeds)``: the ``(id, v)`` frame and the
+    k×dim int64 seed matrix (cell = row index), ``(0, dim)`` on an
+    empty input."""
+    import math
+
+    import numpy as np
+
+    v0 = emb.select(
+        F.col(id_col).alias("id"),
+        F.transform(
+            F.col(vec_col).cast("array<double>"),
+            lambda x: F.floor(x * F.lit(1e6) + F.lit(0.5)).cast("long"),
+        ).alias("v"),
+    ).transform(stage_checkpoint, eager=False)
+    # F.first is order-arbitrary but dim is constant across rows
+    nd = v0.agg(F.count("*").alias("n"), F.first("v").alias("v1")).head()
+    dim = len(nd["v1"]) if nd["v1"] is not None else 0
+    seeds = (
+        v0.withColumn("_h", F.md5(F.col("id").cast("string")))
+        .orderBy("_h", "id")
+        .limit(max(1, math.ceil(nd["n"] / target_cell_size)))
+        .collect()
+    )
+    return (
+        v0,
+        dim,
+        np.array([r["v"] for r in seeds], dtype=np.int64).reshape(len(seeds), dim),
+    )
+
+
+def _groups_schema(id_t: str) -> str:
+    return f"id {id_t}, cell int, group_id {id_t}, group_size long, keep boolean"
+
+
+def _in_cell_roots(X, threshold: float):
+    """Closure of one cell whose rows are sorted by id: the pair
+    decision is cosine ≥ ``threshold`` after the half-up-6dp round,
+    and each row's root is the row index of its group's smallest id.
+    The cosine is one matmul; the denominator is sqrt(n2a)·sqrt(n2b) —
+    the oracle's exact op chain — NOT sqrt(n2a·n2b), whose single sqrt
+    rounds differently. Int64 micro-unit rows take fp64 BLAS inside
+    the 2^53 bound (exact integers) and the int64 path past it."""
+    import numpy as np
+
+    if X.dtype.kind == "i" and not _f64_exact_ok(X.shape[1], X):
+        _int64_exact_or_raise(X.shape[1], X)
+        dots = (X @ X.T).astype(np.float64)
+        n2 = np.einsum("ij,ij->i", X, X).astype(np.float64)
+    else:
+        Xf = X.astype(np.float64, copy=False)
+        dots, n2 = Xf @ Xf.T, np.einsum("ij,ij->i", Xf, Xf)
+    norms = np.sqrt(n2)
+    sims = np.floor(dots / np.outer(norms, norms) * 1e6 + 0.5) / 1e6
+    a, b = np.nonzero(np.triu(sims >= threshold, 1))
+    # min-label union with pointer jumping until no edge lowers a root
+    root = np.arange(len(X))
+    while len(a):
+        nxt = root.copy()
+        lo = np.minimum(root[a], root[b])
+        np.minimum.at(nxt, a, lo)
+        np.minimum.at(nxt, b, lo)
+        nxt = nxt[nxt]
+        if np.array_equal(nxt, root):
+            break
+        root = nxt
+    return root
+
+
+def _cell_groups_fn(threshold: float, centers=None):
+    """The per-cell SemDeDup tail all four entry points share, after
+    their cell assignment: in-cell cosine pairs (half-up-6dp decision,
+    :func:`_in_cell_roots`), an in-task closure, group sizes and the
+    centroid-closest (d2, id) survivor. Rows arrive as ``(cell, id, v,
+    d2)`` — ``v`` ``array<double>`` (semantic_dedup,
+    semantic_dedup_deterministic) or int64 micro-units (prod, coarse);
+    with ``centers`` (the k×dim float centroids) ``d2`` is computed
+    here as the same sequential left-to-right fold Spark's
+    ``aggregate`` runs. Every duplicate edge is in-cell by
+    construction, so the closure needs no distributed
+    connected-components pass; one call may carry several cells (the
+    coarse bucket) or none. Returns ``(id, cell, group_id, group_size,
+    keep)`` per row; group_id is the group's smallest id."""
     import numpy as np
     import pandas as pd
 
     def cell_groups(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy()
-        d2 = pdf["d2"].to_numpy()
-        mat = _micro_mat(pdf["v"], dim)
-        if _f64_exact_ok(dim, mat):  # fp64 dgemm returns exact integers
-            mf = mat.astype(np.float64)
-            dots = mf @ mf.T
-            norms = np.sqrt(np.einsum("ij,ij->i", mf, mf))
+        pdf = pdf.sort_values(["cell", "id"], ignore_index=True)
+        ids, cell = pdf["id"].to_numpy(), pdf["cell"].to_numpy()
+        vals = pdf["v"].to_numpy()
+        X = np.stack(vals) if len(vals) else np.empty((0, 0))
+        if centers is None:
+            d2 = pdf["d2"].to_numpy()
         else:
-            _int64_exact_or_raise(dim, mat)
-            dots = (mat @ mat.T).astype(np.float64)
-            norms = np.sqrt(np.einsum("ij,ij->i", mat, mat).astype(np.float64))
-        # denominator as sqrt(n2a)·sqrt(n2b) — the oracle's exact op
-        # chain — NOT sqrt(n2a·n2b), whose single sqrt rounds differently
-        sims = dots / np.outer(norms, norms)
-        simsr = np.floor(sims * 1e6 + 0.5) / 1e6
-        ri, ci = np.nonzero(
-            (simsr >= threshold) & (ids[None, :] > ids[:, None])
-        )
-        parent = np.arange(len(ids))
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in zip(ri, ci):
-            ra, rb = find(int(a)), find(int(b))
-            if ra != rb:
-                parent[rb] = ra
-        roots = np.array([find(int(i)) for i in range(len(ids))])
-        out_gid = np.empty(len(ids), dtype=ids.dtype)
-        out_size = np.empty(len(ids), dtype=np.int64)
+            d2 = np.cumsum((X - centers[cell]) ** 2, axis=1)[:, -1]
+        root = np.arange(len(ids))
+        for seg in np.split(root.copy(), np.flatnonzero(cell[1:] != cell[:-1]) + 1):
+            if len(seg):
+                root[seg] = seg[0] + _in_cell_roots(X[seg], threshold)
+        # survivor: the first row of each group by (d2, id) — lexsort is
+        # stable and rows are in id order within a cell
+        order = np.lexsort((d2, root))
+        first = np.ones(len(ids), dtype=bool)
+        first[1:] = root[order][1:] != root[order][:-1]
         keep = np.zeros(len(ids), dtype=bool)
-        for r in np.unique(roots):
-            m = roots == r
-            out_gid[m] = ids[m].min()
-            out_size[m] = int(m.sum())
-            # survivor = centroid-closest, ties to the lower id — the
-            # (d2, id) argmin the fixed-k twin's window applies
-            idxs = np.nonzero(m)[0]
-            best = idxs[np.lexsort((ids[idxs], d2[idxs]))[0]]
-            keep[best] = True
+        keep[order[first]] = True
         return pd.DataFrame(
             {
                 "id": ids,
-                "cell": pdf["cell"].to_numpy(),
-                "group_id": out_gid,
-                "group_size": out_size,
+                "cell": cell,
+                "group_id": ids[root],
+                "group_size": np.bincount(root, minlength=len(ids))[root].astype(np.int64),
                 "keep": keep,
             }
         )
 
     return cell_groups
+
+
+def _close_cells(cells: DataFrame, id_t: str, threshold: float, centers=None) -> DataFrame:
+    """Run the shared tail (:func:`_cell_groups_fn`) once per cell of
+    a one-row-per-vector ``(cell, id, v[, d2])`` frame."""
+    return cells.groupBy("cell").applyInPandas(
+        _cell_groups_fn(threshold, centers), _groups_schema(id_t)
+    )
 
 
 def semantic_dedup_prod(
@@ -1199,7 +1238,6 @@ def semantic_dedup_prod(
     vec_col: str = "embedding",
     target_cell_size: int = 250,
     threshold: float = 0.9,
-    lloyd_rounds: int = 2,
 ) -> DataFrame:
     """SemDeDup's PRODUCTION sizing (Abbas et al. 2023 §3: the cluster
     count scales with the corpus): ``k = ceil(n / target_cell_size)``
@@ -1212,9 +1250,8 @@ def semantic_dedup_prod(
 
     Exactness discipline (STRONGER than the fixed-k twin's accepted
     float caveats): vectors are quantized ONCE to integer micro-units
-    (``floor(x·1e6 + 0.5)`` as int64 — both engines compute the same
-    fp64 product and floor, so the ints are identical), and every
-    distance/dot is integer arithmetic from there:
+    (:func:`_micro_seeds`), and every distance/dot is integer
+    arithmetic from there:
 
     * assignment d2 = Σ(x−c)² over int64 — EXACT in any summation
       order, so the Spark-side matmul argmin and the DuckDB sequential
@@ -1228,169 +1265,60 @@ def semantic_dedup_prod(
       the half-up-6dp decision round on top;
     * survivor pick keys on (int d2, id) — deterministic.
 
+    Two Lloyd rounds (md5 seeds, one update), the schedule the DuckDB
+    twin replays.
+
     Scale shape: the per-round centroid table is ``k = n/target`` rows
     (metadata by construction — a 250× reduction; 64-dim int64
     centroids stay under a 100 MB broadcast up to ~50 M vectors, past
-    which raise ``target_cell_size`` or route assignment through a
-    coarse IVF level), assignment is one Arrow-batched int64 matmul
-    argmin per partition (n·k·dim flops, the cost the SemDeDup paper
-    pays in faiss), the centroid update aggregates map-side to
-    k·dim rows, and the pair scan is one int64 matmul per cell over
-    ~target-sized groups. No shuffle carries more than the (id, v,
-    cell) frame itself.
+    which raise ``target_cell_size`` or use
+    :func:`semantic_dedup_coarse`), assignment is one Arrow-batched
+    int64 matmul argmin per partition (n·k·dim flops, the cost the
+    SemDeDup paper pays in faiss), the centroid update aggregates
+    map-side to k·dim rows, and the pair scan is one int64 matmul per
+    cell over ~target-sized groups. No shuffle carries more than the
+    (id, v, cell) frame itself.
 
     Output schema matches the siblings: one row per vector,
     ``(id, cell, group_id, group_size, keep)``."""
-    import math
-
     import numpy as np
     import pandas as pd
 
-    from the_framework_for_clustering_time_series_data_spark.operators.corpus_guard import id_spark_type
-
     id_t = id_spark_type(emb, id_col)
-    v0 = emb.select(
-        F.col(id_col).alias("id"),
-        F.transform(
-            F.col(vec_col).cast("array<double>"),
-            lambda x: F.floor(x * F.lit(1e6) + F.lit(0.5)).cast("long"),
-        ).alias("v"),
-    ).transform(stage_checkpoint, eager=False)
-    # one job for both scalars (guide §1 — don't pay two action
-    # barriers for metadata one scan yields): n and dim together;
-    # F.first is order-arbitrary but dim is constant across rows
-    nd = v0.agg(F.count("*").alias("n"), F.first("v").alias("v1")).head()
-    n = nd["n"]
-    k = max(1, math.ceil(n / target_cell_size))
-    dim = len(nd["v1"]) if nd["v1"] is not None else 0
-
-    seeds = (
-        v0.withColumn("_h", F.md5(F.col("id").cast("string")))
-        .orderBy("_h", "id")
-        .limit(k)
-        .collect()
-    )
-    cell_ids = np.arange(k, dtype=np.int64)  # cell = rank in seed order
-    cent = np.array([r["v"] for r in seeds], dtype=np.int64)  # k×dim
-
+    v0, dim, cent = _micro_seeds(emb, id_col, vec_col, target_cell_size)
     sp = emb.sparkSession
 
-    # distance kernels: the shared int-exact module helpers
-    # (_micro_mat / _int_d2_matrix) — fp64 BLAS inside the 2^53
-    # bound, int64 einsum inside the 2^63 bound, loud refusal past
-
-    def _assign(ids_arr: np.ndarray, cmat: np.ndarray):
+    def _flat(cells: np.ndarray, cmat: np.ndarray, partials: bool):
         # returns (frame, broadcast handle): each call ships a fresh
         # k×dim centroid broadcast (up to ~100 MB at the documented
-        # 50M-vector ceiling) — callers unpersist it once the stage
-        # that consumed it has materialized, or multi-round Lloyd runs
-        # accumulate dead broadcast blocks for the life of the job
-        # (round-11 advice)
-        bc = sp.sparkContext.broadcast((ids_arr, cmat))
+        # 50M-vector ceiling); the update round's is dropped once its
+        # fold collected, the final one lives until the caller
+        # materializes the returned frame
+        bc = sp.sparkContext.broadcast((cells, cmat))
 
         def kernel(batches):
             labels, C = bc.value  # cells sorted ascending, k×dim int64
             for pdf in batches:
                 X = _micro_mat(pdf["v"], dim)
-                # np.argmin takes the FIRST min, and rows are sorted by
-                # cell, so an (exact-int) tie goes to the lowest cell —
-                # the oracle's ORDER BY d2, cell
-                d2 = _int_d2_matrix(X, C, dim)
-                rows = np.argmin(d2, axis=1)
-                yield pd.DataFrame(
-                    {
-                        "id": pdf["id"],
-                        "v": pdf["v"],
-                        "cell": labels[rows].astype(np.int32),
-                        "d2": d2[np.arange(len(rows)), rows].astype(np.int64),
-                    }
-                )
+                rows, d2 = _nearest(X, C, dim)
+                if partials:
+                    yield _partials_frame(X, labels[rows])
+                else:
+                    yield pd.DataFrame(
+                        {
+                            "id": pdf["id"],
+                            "v": pdf["v"],
+                            "cell": labels[rows].astype(np.int32),
+                            "d2": d2,
+                        }
+                    )
 
-        return (
-            v0.mapInPandas(kernel, f"id {id_t}, v array<long>, cell int, d2 long"),
-            bc,
-        )
+        schema = _PARTIALS_SCHEMA if partials else f"id {id_t}, v array<long>, cell int, d2 long"
+        return v0.mapInPandas(kernel, schema), bc
 
-    def _partial_sums(ids_arr: np.ndarray, cmat: np.ndarray):
-        # the Lloyd-round kernel: assign the batch AND reduce it to
-        # per-cell (sum vector, count) partials — k×dim per batch
-        # instead of the full corpus round-tripping v through Arrow and
-        # a 64-way posexplode (the sf10 profile's two dominant costs).
-        # Integer partial sums are order-free, so the final mean is the
-        # exact quantity the oracle's avg-over-members computes.
-        bc = sp.sparkContext.broadcast((ids_arr, cmat))
-
-        def kernel(batches):
-            labels, C = bc.value
-            for pdf in batches:
-                X = _micro_mat(pdf["v"], dim)
-                rows = np.argmin(_int_d2_matrix(X, C, dim), axis=1)
-                present = np.unique(rows)
-                sums = np.zeros((len(present), X.shape[1]), dtype=np.int64)
-                cnts = np.zeros(len(present), dtype=np.int64)
-                for i, r in enumerate(present):
-                    m = rows == r
-                    sums[i] = X[m].sum(axis=0)
-                    cnts[i] = int(m.sum())
-                yield pd.DataFrame(
-                    {
-                        "cell": labels[present].astype(np.int32),
-                        "vsum": list(sums),
-                        "n": cnts,
-                    }
-                )
-
-        return v0.mapInPandas(kernel, "cell int, vsum array<long>, n long"), bc
-
-    for _ in range(lloyd_rounds - 1):
-        parts, parts_bc = _partial_sums(cell_ids, cent)
-        cm = (
-            parts.select(
-                "cell", "n", F.posexplode("vsum").alias("pos", "val")
-            )
-            .groupBy("cell", "pos")
-            .agg(
-                F.floor(
-                    F.sum("val").cast("double") / F.sum("n") + F.lit(0.5)
-                )
-                .cast("long")
-                .alias("cv")
-            )
-        )
-        rows = (
-            cm.groupBy("cell")
-            .agg(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("pos", "cv"))),
-                    lambda s: s.cv,
-                ).alias("cvec")
-            )
-            .orderBy("cell")  # cells a round left EMPTY drop, as in the
-            .collect()  # fixed-k twin (the oracle rebuilds c1 from cm)
-        )
-        cell_ids = np.array([r["cell"] for r in rows], dtype=np.int64)
-        cent = np.array([r["cvec"] for r in rows], dtype=np.int64)
-        # the collect above fully consumed this round's centroid
-        # broadcast — drop its executor copies now, not at job end
-        parts_bc.unpersist(blocking=False)
-
-    # single consumer below — no checkpoint needed. The final
-    # broadcast stays live (it is consumed when the CALLER materializes
-    # the returned frame — the one bounded in-flight copy); the
-    # per-round ones above are the accumulation hazard.
-    final, _final_bc = _assign(cell_ids, cent)
-
-    # The dup graph's edges are IN-CELL by construction, so the
-    # entire closure + group-size + survivor tail runs locally per
-    # cell (see _int_cell_groups_fn)
-    return (
-        final.select("cell", "id", "v", "d2")
-        .groupBy("cell")
-        .applyInPandas(
-            _int_cell_groups_fn(dim, threshold),
-            f"id {id_t}, cell int, group_id {id_t}, group_size long, keep boolean",
-        )
-    )
+    cells, cent = _fold_centroids(*_flat(np.arange(len(cent)), cent, True), dim)
+    final, _ = _flat(cells, cent, False)
+    return _close_cells(final, id_t, threshold)
 
 
 def semantic_dedup_coarse(
@@ -1399,8 +1327,6 @@ def semantic_dedup_coarse(
     vec_col: str = "embedding",
     target_cell_size: int = 250,
     threshold: float = 0.9,
-    lloyd_rounds: int = 2,
-    coarse_cells: int | None = None,
 ) -> DataFrame:
     """SemDeDup with TWO-LEVEL (coarse-routed) assignment — the
     documented next lever past :func:`semantic_dedup_prod`'s ~50M-vector
@@ -1408,12 +1334,12 @@ def semantic_dedup_coarse(
     whole k×dim fine-centroid table (k = ceil(n/target) grows with the
     corpus: ~100 MB at 50M vectors) and pays n·k·dim flops per
     assignment round. Here assignment routes through a SMALL coarse
-    quantizer (kc = ceil(sqrt(k)) by default, the classic IVF sizing):
+    quantizer of kc = ceil(sqrt(k)) centers (the classic IVF sizing):
 
-    1. fine seeds = k smallest-md5 rows (exactly prod's seeding);
-       coarse seeds = the FIRST kc fine seeds, refined by one
-       exact-int Lloyd round over the fine-seed table (a k-row
-       metadata computation), then FROZEN;
+    1. fine seeds = k smallest-md5 rows (prod's prologue,
+       :func:`_micro_seeds`); coarse seeds = the FIRST kc fine seeds,
+       refined by one exact-int Lloyd round over the fine-seed table
+       (a k-row metadata computation), then FROZEN;
     2. each round, fine centroids route to their nearest coarse center
        (k·kc·dim driver-side flops — metadata), and each VECTOR takes
        coarse-argmin over the ≤kc live coarse centers (a tiny
@@ -1422,7 +1348,10 @@ def semantic_dedup_coarse(
        the k×dim table is SHUFFLED in ~sqrt(k)-sized slices, never
        broadcast whole, and per-vector flops drop from n·k·dim to
        ~2·n·sqrt(k)·dim (the measured fan-in bound);
-    3. the pair scan + local union-find tail is prod's, verbatim.
+    3. two Lloyd rounds with prod's centroid fold, and the shared
+       per-cell tail runs INSIDE the final bucket task (a fine cell's
+       members are exactly the vectors of its bucket that argmin to
+       it), so the (id, v) payload shuffles once.
 
     The routed argmin is the standard two-level APPROXIMATION (a
     vector's true nearest fine centroid may sit in a neighboring
@@ -1443,211 +1372,60 @@ def semantic_dedup_coarse(
     import numpy as np
     import pandas as pd
 
-    from the_framework_for_clustering_time_series_data_spark.operators.corpus_guard import id_spark_type
-
     id_t = id_spark_type(emb, id_col)
-    v0 = emb.select(
-        F.col(id_col).alias("id"),
-        F.transform(
-            F.col(vec_col).cast("array<double>"),
-            lambda x: F.floor(x * F.lit(1e6) + F.lit(0.5)).cast("long"),
-        ).alias("v"),
-    ).transform(stage_checkpoint, eager=False)
-    # one job for both scalars (guide §1 — don't pay two action
-    # barriers for metadata one scan yields): n and dim together;
-    # F.first is order-arbitrary but dim is constant across rows
-    nd = v0.agg(F.count("*").alias("n"), F.first("v").alias("v1")).head()
-    n = nd["n"]
-    k = max(1, math.ceil(n / target_cell_size))
-    dim = len(nd["v1"]) if nd["v1"] is not None else 0
+    v0, dim, cent = _micro_seeds(emb, id_col, vec_col, target_cell_size)
+    sp = emb.sparkSession
 
-    seeds = (
-        v0.withColumn("_h", F.md5(F.col("id").cast("string")))
-        .orderBy("_h", "id")
-        .limit(k)
-        .collect()
-    )
-    cell_ids = np.arange(k, dtype=np.int64)
-    cent = np.array([r["v"] for r in seeds], dtype=np.int64)
-
-    kc = max(1, min(int(coarse_cells or math.ceil(math.sqrt(k))), k))
     # coarse quantizer: first kc fine seeds, one exact-int refinement
     # round over the k fine seeds (ties to the lower g; half-up int
     # mean; a coarse seed no fine seed picked drops) — then FROZEN
-    g_seed = cent[:kc]
-    glab = np.argmin(_int_d2_matrix(cent, g_seed, dim), axis=1)
-    g_ids, g_rows = [], []
-    for g in range(kc):
-        m = glab == g
-        if m.any():
-            s = cent[m].sum(axis=0, dtype=np.int64)
-            g_rows.append(
-                np.floor(s.astype(np.float64) / int(m.sum()) + 0.5).astype(
-                    np.int64
-                )
-            )
-            g_ids.append(g)
-    g_ids = np.array(g_ids, dtype=np.int64)
-    gmat = np.stack(g_rows)
+    kc = math.ceil(math.sqrt(len(cent)))
+    g_ids, gsum, gcnt = _cell_sums(cent, _nearest(cent, cent[:kc], dim)[0])
+    gmat = np.floor(gsum / gcnt[:, None] + 0.5).astype(np.int64)
+    cell_fn = _cell_groups_fn(threshold)
 
-    sp = emb.sparkSession
-
-    def _routed(cell_ids_arr: np.ndarray, cmat: np.ndarray, partials: bool):
+    def _routed(cells: np.ndarray, cmat: np.ndarray, partials: bool):
         # fine->coarse routing table: k rows, driver-side metadata
-        route = g_ids[np.argmin(_int_d2_matrix(cmat, gmat, dim), axis=1)]
-        present = np.unique(route)
-        keepm = np.isin(g_ids, present)
-        bc = sp.sparkContext.broadcast((g_ids[keepm], gmat[keepm]))
+        route = g_ids[_nearest(cmat, gmat, dim)[0]]
+        live = np.isin(g_ids, route)
+        bc = sp.sparkContext.broadcast((g_ids[live], gmat[live]))
 
         def coarse_kernel(batches):
             gids, G = bc.value  # live buckets only, g ascending
             for pdf in batches:
-                X = _micro_mat(pdf["v"], dim)
-                rows = np.argmin(_int_d2_matrix(X, G, dim), axis=1)
+                rows, _ = _nearest(_micro_mat(pdf["v"], dim), G, dim)
                 yield pd.DataFrame(
-                    {
-                        "id": pdf["id"],
-                        "v": pdf["v"],
-                        "g": gids[rows].astype(np.int32),
-                    }
+                    {"id": pdf["id"], "v": pdf["v"], "g": gids[rows].astype(np.int32)}
                 )
 
-        routed = v0.mapInPandas(
-            coarse_kernel, f"id {id_t}, v array<long>, g int"
-        )
+        routed = v0.mapInPandas(coarse_kernel, f"id {id_t}, v array<long>, g int")
         fine = sp.createDataFrame(
             [
-                (int(route[i]), int(cell_ids_arr[i]), [int(x) for x in cmat[i]])
-                for i in range(len(cell_ids_arr))
+                (int(route[i]), int(cells[i]), [int(x) for x in cmat[i]])
+                for i in range(len(cells))
             ],
             "g int, cell int, cvec array<long>",
         )
 
-        def _bucket(l: pd.DataFrame, r: pd.DataFrame):
-            r = r.sort_values("cell")  # ties -> lower fine cell
-            C = _micro_mat(r["cvec"], dim)
-            cells = r["cell"].to_numpy()
+        def bucket(l: pd.DataFrame, r: pd.DataFrame):
+            # fine-argmin among the bucket's centroids, ties → lower cell
+            r = r.sort_values("cell")
             X = _micro_mat(l["v"], dim)
-            d2 = _int_d2_matrix(X, C, dim)
-            rows = np.argmin(d2, axis=1) if len(X) else np.empty(0, np.int64)
-            return X, cells, rows, d2
+            rows, d2 = _nearest(X, _micro_mat(r["cvec"], dim), dim)
+            cell = r["cell"].to_numpy()[rows].astype(np.int32)
+            if partials:
+                return _partials_frame(X, cell)
+            return cell_fn(pd.DataFrame({"id": l["id"], "v": l["v"], "cell": cell, "d2": d2}))
 
-        if partials:
-
-            def fine_partials(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-                X, cells, rows, _ = _bucket(l, r)
-                present_c = np.unique(rows)
-                sums = np.zeros((len(present_c), dim), dtype=np.int64)
-                cnts = np.zeros(len(present_c), dtype=np.int64)
-                for i, rr in enumerate(present_c):
-                    m = rows == rr
-                    sums[i] = X[m].sum(axis=0)
-                    cnts[i] = int(m.sum())
-                return pd.DataFrame(
-                    {
-                        "cell": cells[present_c].astype(np.int32),
-                        "vsum": list(sums),
-                        "n": cnts,
-                    }
-                )
-
-            out = (
-                routed.groupBy("g")
-                .cogroup(fine.groupBy("g"))
-                .applyInPandas(fine_partials, "cell int, vsum array<long>, n long")
-            )
-        else:
-            # FUSED final kernel (guide §8 — move the payload once):
-            # a fine cell's members are exactly the vectors of its own
-            # coarse bucket that argmin to it, so the per-cell
-            # union-find tail can run INSIDE the bucket task — the
-            # pre-r12 shape re-shuffled the full (id, v) payload a
-            # second time by cell and paid one more Python stage for
-            # the same per-cell row sets.
-            cell_fn = _int_cell_groups_fn(dim, threshold)
-
-            def fine_groups(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-                X, cells, rows, d2 = _bucket(l, r)
-                if not len(X):
-                    # len(X) == len(l) by construction (_bucket builds X
-                    # from l["v"]); build every column zero-length so a
-                    # future rows-without-centroids case fails loudly
-                    # instead of a length-mismatch constructor crash
-                    empty = l.iloc[0:0]
-                    return pd.DataFrame(
-                        {
-                            "id": empty["id"],
-                            "cell": pd.Series([], dtype="int32"),
-                            "group_id": empty["id"],
-                            "group_size": pd.Series([], dtype="int64"),
-                            "keep": pd.Series([], dtype="bool"),
-                        }
-                    )
-                d2v = d2[np.arange(len(rows)), rows].astype(np.int64)
-                parts_out = []
-                for ci in np.unique(rows):
-                    m = rows == ci
-                    parts_out.append(
-                        cell_fn(
-                            pd.DataFrame(
-                                {
-                                    "id": l["id"].to_numpy()[m],
-                                    "v": l["v"].to_numpy()[m],
-                                    "cell": np.full(
-                                        int(m.sum()), cells[ci], dtype=np.int32
-                                    ),
-                                    "d2": d2v[m],
-                                }
-                            )
-                        )
-                    )
-                return pd.concat(parts_out, ignore_index=True)
-
-            out = (
-                routed.groupBy("g")
-                .cogroup(fine.groupBy("g"))
-                .applyInPandas(
-                    fine_groups,
-                    f"id {id_t}, cell int, group_id {id_t}, "
-                    "group_size long, keep boolean",
-                )
-            )
+        out = (
+            routed.groupBy("g")
+            .cogroup(fine.groupBy("g"))
+            .applyInPandas(bucket, _PARTIALS_SCHEMA if partials else _groups_schema(id_t))
+        )
         return out, bc
 
-    for _ in range(lloyd_rounds - 1):
-        parts, parts_bc = _routed(cell_ids, cent, partials=True)
-        # ONE exchange (guide §2.3 — aggregate before you shuffle): the
-        # per-task partial sums fold elementwise per cell via an int64
-        # array zip (order-free exact adds), replacing the pre-r12
-        # posexplode → groupBy(cell,pos) → groupBy(cell) two-exchange
-        # regroup; the half-up mean per component is value-identical.
-        zero = F.array_repeat(F.lit(0).cast("long"), dim)
-        cm = parts.groupBy("cell").agg(
-            F.sum("n").alias("ntot"),
-            F.aggregate(
-                F.collect_list("vsum"),
-                zero,
-                lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b),
-            ).alias("vs"),
-        )
-        rows = (
-            cm.select(
-                "cell",
-                F.transform(
-                    "vs",
-                    lambda s: F.floor(
-                        s.cast("double") / F.col("ntot") + F.lit(0.5)
-                    ).cast("long"),
-                ).alias("cvec"),
-            )
-            .orderBy("cell")  # empty cells drop, as in prod
-            .collect()
-        )
-        cell_ids = np.array([r["cell"] for r in rows], dtype=np.int64)
-        cent = np.array([r["cvec"] for r in rows], dtype=np.int64)
-        parts_bc.unpersist(blocking=False)
-
-    final, _final_bc = _routed(cell_ids, cent, partials=False)
+    cells, cent = _fold_centroids(*_routed(np.arange(len(cent)), cent, True), dim)
+    final, _ = _routed(cells, cent, False)
     return final
 
 

@@ -394,10 +394,10 @@ def _semantic_assign_sql(src: str, cent: str, out: str, dim: int) -> str:
 
 
 def _semantic_oracle_sql(n_cells: int, threshold: float, dim: int = 64) -> str:
-    """DuckDB twin of ``semantic_dedup_deterministic(lloyd_rounds=2)``:
-    md5-seeded centroids → assign → half-up-6dp mean update → final
-    assign → in-cell cosine pairs (all sequential folds) → recursive-CTE
-    transitive closure → centroid-closest survivor."""
+    """DuckDB twin of ``semantic_dedup_deterministic`` (two md5-Lloyd
+    rounds): md5-seeded centroids → assign → half-up-6dp mean update →
+    final assign → in-cell cosine pairs (all sequential folds) →
+    recursive-CTE transitive closure → centroid-closest survivor."""
     seq = f"range(1, {dim + 1})"
     cos = (
         f"list_aggregate(list_transform({seq}, k -> a.v[k] * b.v[k]), 'sum')"
@@ -497,7 +497,7 @@ def dedup_semantic_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semantic_prod_oracle_sql(target: int, threshold: float, dim: int = 64) -> str:
-    """DuckDB twin of ``semantic_dedup_prod(lloyd_rounds=2)``: identical
+    """DuckDB twin of ``semantic_dedup_prod`` (two Lloyd rounds): identical
     SemDeDup pipeline shape to :func:`_semantic_oracle_sql`, but k is
     DERIVED (ceil(n/target), the paper's k ∝ n sizing) and every
     distance/dot runs on int64 micro-unit quantized vectors — exact in
@@ -589,7 +589,7 @@ def dedup_semantic_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semantic_coarse_oracle_sql(target: int, threshold: float, dim: int = 64) -> str:
-    """DuckDB twin of ``semantic_dedup_coarse(lloyd_rounds=2)``: the
+    """DuckDB twin of ``semantic_dedup_coarse`` (two Lloyd rounds): the
     two-level routed assignment replayed bit-for-bit — fine seeds as in
     the prod twin, coarse seeds = first ceil(sqrt(k)) fine seeds with
     one exact-int refinement round then FROZEN, every vector routed
