@@ -188,12 +188,23 @@ def test_interpolation_between_neighbors(spark):
         by_series.setdefault(r["series_id"], []).append(r)
     for rs in by_series.values():
         rs.sort(key=lambda r: r["bucket"])
+        # nearest observed bucket on each side of every row, one linear
+        # pass each way (a scan per gap row was quadratic in the series)
+        prev_obs, last = [], None
+        for i, r in enumerate(rs):
+            prev_obs.append(last)
+            if not r["is_gap"]:
+                last = i
+        next_obs, last = [None] * len(rs), None
+        for i in range(len(rs) - 1, -1, -1):
+            next_obs[i] = last
+            if not rs[i]["is_gap"]:
+                last = i
         for i, r in enumerate(rs):
             if r["is_gap"]:
-                prev_obs = max(j for j in range(i) if not rs[j]["is_gap"])
-                next_obs = min(j for j in range(i + 1, len(rs)) if not rs[j]["is_gap"])
-                lo = min(rs[prev_obs]["v_interp"], rs[next_obs]["v_interp"])
-                hi = max(rs[prev_obs]["v_interp"], rs[next_obs]["v_interp"])
+                assert prev_obs[i] is not None and next_obs[i] is not None, r
+                lo = min(rs[prev_obs[i]]["v_interp"], rs[next_obs[i]]["v_interp"])
+                hi = max(rs[prev_obs[i]]["v_interp"], rs[next_obs[i]]["v_interp"])
                 assert lo - 1e-6 <= r["v_interp"] <= hi + 1e-6
 
 

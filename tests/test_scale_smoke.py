@@ -938,6 +938,7 @@ def test_semantic_dedup_coarse_1m_vectors(spark):
         emb, target_cell_size=250, threshold=0.999999
     ).cache()
     hc = twin_hits(coarse)
+    coarse.unpersist()  # not held for the rest of the session
     # grouped twins exist at scale; the full coarse-vs-flat twin and
     # wall-clock comparison at 1M runs in tools/coarse_smoke.py (flat
     # prod costs ~6 min here — measured once into SCALE_COARSE_1M.json,
