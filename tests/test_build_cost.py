@@ -4,9 +4,10 @@ Building a registry query (``QUERIES[name](spark, sf_dir)``, no action)
 costs py4j round trips for every Column built and Spark jobs for every
 eager step. These tests pin both so the cost cannot creep back:
 
-* the py4j ``send_command`` calls of each interactive-session query's
-  and each SemDeDup query's build stay under a committed budget (the
-  count measured when the budget was set, plus 15%);
+* the py4j ``send_command`` calls of each interactive-session query's,
+  each SemDeDup query's and each ANN top-k query's build stay under a
+  committed budget (the count measured when the budget was set, plus
+  15%);
 * a repeated ``load_table`` of an unchanged table launches no Spark job
   (its schema comes from the per-session memo), and a table rewritten
   in place is re-inferred;
@@ -39,7 +40,9 @@ from the_framework_for_clustering_time_series_data_spark.sources.tables import l
 # pipeline_e2e_det 940, e2c 381, t5 529, dedup_minhash_lsh 691,
 # text_tfidf_md5kmeans 940, curate_corpus 927, dedup_semantic 491,
 # dedup_semantic_scaled 491, dedup_semantic_prod 404,
-# dedup_semantic_coarse 550.
+# dedup_semantic_coarse 550, sim_bruteforce_topk 157, sim_ivf_topk 541,
+# sim_ivfb_topk 816, sim_pq_topk 602, sim_pqb_topk 1525,
+# sim_ivfpq_topk 775, sim_ivfpqb_topk 2103, sim_sq8_topk 1100.
 PY4J_BUDGET = {
     "p5_preprocess_table": 301,
     "g6_dtw_align": 288,
@@ -53,6 +56,14 @@ PY4J_BUDGET = {
     "dedup_semantic_scaled": 565,
     "dedup_semantic_prod": 465,
     "dedup_semantic_coarse": 633,
+    "sim_bruteforce_topk": 181,
+    "sim_ivf_topk": 623,
+    "sim_ivfb_topk": 939,
+    "sim_pq_topk": 693,
+    "sim_pqb_topk": 1754,
+    "sim_ivfpq_topk": 892,
+    "sim_ivfpqb_topk": 2419,
+    "sim_sq8_topk": 1265,
 }
 
 #: py4j's garbage-collection detach commands start with this; they depend

@@ -641,3 +641,31 @@ def test_semantic_dedup_empty_input(spark, fn):
         "struct<id:bigint,cell:int,group_id:bigint,group_size:bigint,keep:boolean>"
     )
     assert out.collect() == []
+
+
+def test_small_corpus_build_refuses_with_its_size(spark):
+    """A corpus with fewer vectors than n_cells / n_codes: the MLlib and
+    numpy forms refuse at build with a ValueError naming the corpus
+    size and the count needed, not a task failure inside MLlib's fit
+    or numpy's sampler; their md5-Lloyd twins still return rows."""
+    import numpy as np
+
+    rng = np.random.default_rng(0)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(64)]) for i in range(10)],
+        "vec_id long, embedding array<float>",
+    )
+    qs = emb.where(F.col("vec_id") < 3)
+    for fn, needed in (
+        (similarity.ivf_topk, "n_cells=16"),
+        (similarity.pq_topk, "n_codes=16"),
+        (similarity.ivfpq_topk, "n_cells=16"),
+    ):
+        with pytest.raises(ValueError, match=rf"has 10 vectors.*{needed} needs at least 16"):
+            fn(emb, qs, k=3)
+    for fn in (
+        similarity.ivf_topk_deterministic,
+        similarity.pq_topk_deterministic,
+        similarity.ivfpq_topk_deterministic,
+    ):
+        assert fn(emb, qs, k=3).count() > 0

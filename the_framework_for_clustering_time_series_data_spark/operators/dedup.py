@@ -557,43 +557,22 @@ def embedding_cosine_pairs(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool = True,
     max_corpus_rows: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cosine ≥ threshold).
 
     Brute-force O(n²) pairwise — the correct baseline; at scale use
-    LSH bucketing (similarity.ann_lsh) to prune candidates first.
+    LSH bucketing (similarity.ann_lsh_topk) to prune candidates first.
 
-    Physical strategy (``vectorized``, default): the corpus matrix is
-    small by this operator's contract (brute force is only ever run on
-    a bounded corpus), so it broadcasts L2-normalized to every
-    executor and each Arrow batch scores ITSELF against the whole
-    corpus with one BLAS matmul, emitting only above-threshold pairs
-    with the id_a < id_b dedup applied in NumPy — the same
-    broadcast-matmul shape as similarity.brute_force_topk's scoring
-    pass. The interpreted-HOF self-join fallback
-    (``vectorized=False``) keeps a no-Python path; it is ~40× slower
-    at 5k×64 because every pair pays an interpreted zip_with fold
-    rather than amortizing into a matrix multiply.
+    Physical strategy: the corpus matrix is small by this operator's
+    contract (brute force is only ever run on a bounded corpus,
+    enforced by ``require_bounded_corpus``), so it broadcasts
+    L2-normalized to every executor and each Arrow batch scores ITSELF
+    against the whole corpus with one BLAS matmul, emitting only
+    above-threshold pairs with the id_a < id_b dedup applied in NumPy
+    — the same broadcast-matmul shape as similarity.brute_force_topk's
+    scoring pass.
     """
-    if not vectorized:
-        from the_framework_for_clustering_time_series_data_spark.operators.similarity import cosine_expr
-
-        v = emb.select(
-            F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-        )
-        a, b = v.alias("a"), v.alias("b")
-        return (
-            a.join(b, F.col("a.id") < F.col("b.id"))
-            .select(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.round(cosine_expr(F.col("a.v"), F.col("b.v")), 6).alias("cosine"),
-            )
-            .where(F.col("cosine") >= threshold)
-        )
-
     import numpy as np
     import pandas as pd
 

@@ -1,7 +1,14 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k (exact). Scale path: LSH-bucketed
-(random hyperplane signs) candidate pruning — both pure DataFrame ops.
+Baseline: brute-force cosine top-k (exact). Scale paths: multi-probe
+LSH buckets, IVF cells, PQ and SQ8 codes, and IVF×PQ (IVFADC) — each
+in an RNG-defined MLlib/numpy form and a DuckDB-replayable md5-Lloyd
+twin. Every form keeps only its own quantizer or candidate step and
+ends in one serving tail: :func:`_top_per_query` (the per-query
+``row_number`` cut behind every final top-k and every pre-rerank cut),
+:func:`_score_topk` (6-dp cosine, (cosine DESC, nbr_id) top-k) and,
+for the compressed scans, :func:`_exact_rerank` /
+:func:`_pq_adc_rank`.
 """
 
 from __future__ import annotations
@@ -10,16 +17,18 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, IntegerType, LongType
 from pyspark.sql.window import Window
 
-from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import (
-    lit_double_array,
-    stage_checkpoint,
-)
+from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import stage_checkpoint
 from the_framework_for_clustering_time_series_data_spark.operators.cluster import (
     deterministic_lloyd_assign,
     md5_lloyd,
     md5_seed_cells,
+)
+from the_framework_for_clustering_time_series_data_spark.operators.corpus_guard import (
+    id_spark_type,
+    require_bounded_corpus,
 )
 
 
@@ -41,117 +50,136 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
+def _corpus(df: DataFrame, id_col: str, vec_col: str, query: bool = False) -> DataFrame:
+    """The raw projection every float form starts from: ``(nbr_id, v)``,
+    or ``(query_id, qv)`` for the query side."""
+    ids, v = ("query_id", "qv") if query else ("nbr_id", "v")
+    return df.select(F.col(id_col).alias(ids), F.col(vec_col).cast("array<double>").alias(v))
+
+
+def _r6_corpus(df: DataFrame, id_col: str, vec_col: str, query: bool = False) -> DataFrame:
+    """The 6-dp-quantized twin of :func:`_corpus` every deterministic
+    ANN build (and its query side) starts from."""
+    ids, v = ("query_id", "qv") if query else ("nbr_id", "v")
+    return df.select(
+        F.col(id_col).alias(ids),
+        F.transform(F.col(vec_col).cast("array<double>"), _r6).alias(v),
+    )
+
+
+def _top_per_query(df: DataFrame, n: int, *order) -> DataFrame:
+    """The first ``n`` rows of each ``query_id`` under ``order``,
+    numbered 1..n in ``rank`` — the one cut behind every final top-k
+    and every pre-rerank candidate window. Every caller's order ends
+    on a unique key (``nbr_id`` or ``cell``), so the cut is the same
+    in both engines."""
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return df.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= n)
+
+
+def _score_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact cosine of ``(query_id, nbr_id, qv, v)`` pairs, rounded to
+    6 dp, and the final (cosine DESC, nbr_id) top-``k`` — the output
+    shape ``(query_id, nbr_id, cosine, rank)`` every form returns."""
+    scored = pairs.select(
+        "query_id",
+        "nbr_id",
+        F.round(cosine_expr(F.col("qv"), F.col("v")), 6).alias("cosine"),
+    )
+    return _top_per_query(scored, k, F.desc("cosine"), "nbr_id").select(
+        "query_id", "nbr_id", "cosine", "rank"
+    )
+
+
+def _exact_rerank(cand: DataFrame, vectors: DataFrame, qs: DataFrame, k: int) -> DataFrame:
+    """The exact re-rank every compressed scan ends with: the candidate
+    ``(query_id, nbr_id)`` ids fetch their stored vectors
+    (``vectors``' ``(nbr_id, v)``) and the broadcast query vectors
+    ``qs (query_id, qv)``, then :func:`_score_topk`. Bounded at
+    |Q|·rerank rows, so emitted scores are true cosines and only the
+    ordering beyond the candidate window is approximate."""
+    return _score_topk(
+        cand.select("query_id", "nbr_id")
+        .join(vectors.select("nbr_id", "v"), "nbr_id")
+        .join(F.broadcast(qs), "query_id"),
+        k,
+    )
+
+
+def _collect_queries(
+    queries: DataFrame, id_col: str, vec_col: str, op: str, scale_route: str
+) -> tuple[list, list, str]:
+    """The query side the driver-side forms collect — small by
+    contract, enforced, not assumed. Returns ``(ids, vectors,
+    id_type)``; ids keep the query frame's type (string ids stay
+    strings)."""
+    require_bounded_corpus(queries, op=op, scale_route=scale_route, limit=100_000)
+    rows = _corpus(queries, id_col, vec_col, query=True).collect()
+    return [r["query_id"] for r in rows], [r["qv"] for r in rows], id_spark_type(queries, id_col)
+
+
 def brute_force_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool = True,
 ) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector.
 
-    The query side is small by contract (it is broadcast either way);
-    the corpus is scanned once. Two physical strategies, same result:
+    The query side is small by contract (collected and broadcast); the
+    corpus is scanned once by mapInPandas — each Arrow batch scores
+    ALL queries against the batch with ONE NumPy matrix multiply and
+    emits only its per-batch top-k per query (exact: top-k is
+    distributive over batches; ties at the k-th place are cut by the
+    same (-cosine, nbr_id) total order the final cut uses). Rows
+    entering the final :func:`_top_per_query` shuffle: n_batches × |Q|
+    × k, independent of corpus size.
 
-    - ``vectorized`` (default): mapInPandas — each Arrow batch scores
-      ALL queries against the batch with ONE NumPy matrix multiply and
-      emits only its per-batch top-k per query (exact: top-k is
-      distributive over batches; ties at the k-th place are cut by the
-      same (-cosine, nbr_id) total order the final window uses). Rows
-      entering the final exact top-k shuffle: n_batches × |Q| × k,
-      independent of corpus size. ~3× faster than the HOF path even at
-      2k×10 — the gap widens with |Q|·d since the matmul is BLAS.
-    - HOF fallback (``vectorized=False``): pure-JVM zip_with/aggregate
-      dot per pair + windowed row_number — no Python workers at all;
-      interpreted lambda evaluation makes it the slow path for dense
-      math, kept for environments without Arrow.
-
-    At cluster scale both are the classic broadcast-NN scan:
+    At cluster scale this is the classic broadcast-NN scan:
     O(|corpus| · |Q| · d) flops distributed over corpus partitions, no
     shuffle of the corpus itself.
     """
-    from the_framework_for_clustering_time_series_data_spark.operators.corpus_guard import (
-        id_spark_type,
-        require_bounded_corpus,
+    qids, qvs, qid_t = _collect_queries(
+        queries, id_col, vec_col, "brute_force_topk (query side)",
+        "ann_lsh_topk / ivf_topk (bucketed candidates)",
     )
+    # query_id follows the QUERY frame's id type, nbr_id the corpus's
+    id_t = id_spark_type(emb, id_col)
+    qids = np.array(qids)
+    qmat = np.array(qvs, dtype=np.float64)
+    qmat = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
+    bq = emb.sparkSession.sparkContext.broadcast((qids, qmat))
 
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "nbr_id")
-    if vectorized:
-        import numpy as np
-        import pandas as pd
-
-        # the QUERY side is what gets collected/broadcast — enforce it
-        require_bounded_corpus(
-            queries,
-            op="brute_force_topk (query side)",
-            scale_route="ann_lsh_topk / ivf_topk (bucketed candidates)",
-            limit=100_000,
-        )
-        # query_id follows the QUERY frame's id type, nbr_id the corpus's
-        qid_t = id_spark_type(queries, id_col)
-        id_t = id_spark_type(emb, id_col)
-        qrows = queries.select(
-            F.col(id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("qv")
-        ).collect()
-        # id dtype follows the input column (string ids stay strings)
-        qids = np.array([r["qid"] for r in qrows])
-        qmat = np.array([r["qv"] for r in qrows], dtype=np.float64)
-        qmat = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-        sc = emb.sparkSession.sparkContext
-        bq = sc.broadcast((qids, qmat))
-
-        def score(batches):
-            bqids, bqmat = bq.value
-            for pdf in batches:
-                ids = pdf["nbr_id"].to_numpy()
-                vm = np.array(pdf["v"].tolist(), dtype=np.float64)
-                vm = vm / np.linalg.norm(vm, axis=1, keepdims=True)
-                sim = bqmat @ vm.T  # (|Q|, batch)
-                parts = []
-                for qi, qid in enumerate(bqids):
-                    s = sim[qi]
-                    idx = np.nonzero(ids != qid)[0]
-                    # same total order as the final window: (-cos, id)
-                    take = idx[np.lexsort((ids[idx], -s[idx]))[:k]]
-                    parts.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": qid,
-                                "nbr_id": ids[take],
-                                "cosine": np.round(s[take], 6),
-                            }
-                        )
+    def score(batches):
+        bqids, bqmat = bq.value
+        for pdf in batches:
+            ids = pdf["nbr_id"].to_numpy()
+            vm = np.array(pdf["v"].tolist(), dtype=np.float64)
+            vm = vm / np.linalg.norm(vm, axis=1, keepdims=True)
+            sim = bqmat @ vm.T  # (|Q|, batch)
+            parts = []
+            for qi, qid in enumerate(bqids):
+                s = sim[qi]
+                idx = np.nonzero(ids != qid)[0]
+                # same total order as the final cut: (-cos, id)
+                take = idx[np.lexsort((ids[idx], -s[idx]))[:k]]
+                parts.append(
+                    pd.DataFrame(
+                        {
+                            "query_id": qid,
+                            "nbr_id": ids[take],
+                            "cosine": np.round(s[take], 6),
+                        }
                     )
-                yield pd.concat(parts)
+                )
+            yield pd.concat(parts)
 
-        partial = emb.select(
-            F.col(id_col).alias("nbr_id"), F.col(vec_col).cast("array<double>").alias("v")
-        ).mapInPandas(score, f"query_id {qid_t}, nbr_id {id_t}, cosine double")
-        return (
-            partial.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "nbr_id", "cosine", "rank")
-        )
-
-    corpus = emb.select(
-        F.col(id_col).alias("nbr_id"), F.col(vec_col).cast("array<double>").alias("v")
+    partial = _corpus(emb, id_col, vec_col).mapInPandas(
+        score, f"query_id {qid_t}, nbr_id {id_t}, cosine double"
     )
-    qs = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
-    scored = (
-        corpus.join(F.broadcast(qs), F.col("nbr_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "nbr_id",
-            F.round(cosine_expr(F.col("qv"), F.col("v")), 6).alias("cosine"),
-        )
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
+    return _top_per_query(partial, k, F.desc("cosine"), "nbr_id").select(
+        "query_id", "nbr_id", "cosine", "rank"
     )
 
 
@@ -189,21 +217,12 @@ def mmr_rerank(
     at 100 TB this is exactly the serving rerank topology (candidate
     generation distributed, rerank per query-group).
     """
-    import numpy as np
-    import pandas as pd
-
-    from the_framework_for_clustering_time_series_data_spark.operators.corpus_guard import id_spark_type
-
     qid_t = id_spark_type(queries, id_col)
     id_t = id_spark_type(emb, id_col)
     cands = brute_force_topk(emb, queries, k=pool, id_col=id_col, vec_col=vec_col)
-    cv = cands.join(
-        emb.select(
-            F.col(id_col).alias("nbr_id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        ),
-        "nbr_id",
-    ).select("query_id", "nbr_id", "cosine", "v")
+    cv = cands.join(_corpus(emb, id_col, vec_col), "nbr_id").select(
+        "query_id", "nbr_id", "cosine", "v"
+    )
 
     def greedy(pdf: pd.DataFrame) -> pd.DataFrame:
         qid = pdf["query_id"].iloc[0]
@@ -279,8 +298,6 @@ def ann_lsh_topk(
     driver (tiny: n_tables × n_planes × d floats) and broadcast via
     literal arrays.
     """
-    from pyspark.sql.types import ArrayType, LongType
-
     dim = len(emb.select(vec_col).first()[0])
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_tables, n_planes, dim))
@@ -298,19 +315,13 @@ def ann_lsh_topk(
         codes = bits @ weights  # n × n_tables bucket ints
         return pd.Series(list(codes))
 
-    corpus = emb.select(
-        F.col(id_col).alias("nbr_id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    qs = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
-    c_b = corpus.select(
+    c_b = _corpus(emb, id_col, vec_col).select(
         "nbr_id", "v", F.posexplode(buckets_udf("v")).alias("tbl", "bkt")
     )
     # probe set per table = the exact bucket plus, when probe_bits >= 1,
     # each 1-bit flip — derived from the MATERIALIZED bucket value, so
     # the hyperplane math runs once per query vector, not per probe
-    q_exact = qs.select(
+    q_exact = _corpus(queries, id_col, vec_col, query=True).select(
         "query_id", "qv", F.posexplode(buckets_udf("qv")).alias("tbl", "_b")
     )
     probes = [F.col("_b")]
@@ -325,15 +336,39 @@ def ann_lsh_topk(
         .select("query_id", "nbr_id", "qv", "v")
         .dropDuplicates(["query_id", "nbr_id"])
     )
-    scored = cand.select(
-        "query_id", "nbr_id", F.round(cosine_expr(F.col("qv"), F.col("v")), 6).alias("cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "nbr_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
-    )
+    return _score_topk(cand, k)
+
+
+def _kmeans_cells(
+    corpus: DataFrame, n_cells: int, seed: int
+) -> tuple[DataFrame, list[list[float]]]:
+    """The MLlib coarse quantizer of the IVF family (:func:`ivf_topk`,
+    :func:`build_ivf_index`, :func:`ivfpq_topk`): KMeans fits
+    ``n_cells`` centroids on ``corpus (nbr_id, v)`` and assigns every
+    vector its cell. Returns ``(cells (nbr_id, v, cell), centers)``.
+    A corpus with fewer vectors than ``n_cells`` fails inside MLlib's
+    fit; only then is the corpus counted, to refuse with its size."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors.exceptions.captured import CapturedException
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    vecs = corpus.withColumn("_features", array_to_vector("v"))
+    try:
+        model = KMeans(
+            k=n_cells, seed=seed, featuresCol="_features", predictionCol="_cell"
+        ).fit(vecs)
+    except (Py4JJavaError, CapturedException) as e:
+        n = corpus.count()
+        if n < n_cells:
+            raise ValueError(
+                f"IVF build: the corpus has {n} vectors; n_cells={n_cells} "
+                f"needs at least {n_cells}"
+            ) from e
+        raise
+    centers = [[float(x) for x in c] for c in model.clusterCenters()]
+    cells = model.transform(vecs).select("nbr_id", "v", F.col("_cell").alias("cell"))
+    return cells, centers
 
 
 def ivf_topk(
@@ -349,32 +384,21 @@ def ivf_topk(
     """Approximate top-k via IVF (inverted-file) partitioning — the
     scale path complementing ``ann_lsh_topk``.
 
-    Build: MLlib KMeans (distributed) fits ``n_cells`` centroids; every
-    corpus vector is assigned to its nearest cell — at 100 TB this is
-    the *index build*, done once and persisted as a cell-partitioned
-    table. Probe: each query scores only the vectors in its ``nprobe``
-    nearest cells (centroids are driver-side literals — tiny), so scan
-    cost drops by ~n_cells/nprobe versus brute force while recall stays
-    high for clustered corpora.
+    Build: MLlib KMeans (distributed, :func:`_kmeans_cells`) fits
+    ``n_cells`` centroids; every corpus vector is assigned to its
+    nearest cell — at 100 TB this is the *index build*, done once and
+    persisted as a cell-partitioned table. Probe: each query scores
+    only the vectors in its ``nprobe`` nearest cells (centroids are
+    driver-side literals — tiny), so scan cost drops by
+    ~n_cells/nprobe versus brute force while recall stays high for
+    clustered corpora.
 
     Everything after the fit is pure DataFrame ops: cell assignment via
     model.transform, probe-cell selection via array_sort over literal
     centroid distances, candidate scoring via a (cell) equi-join.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    corpus = emb.select(
-        F.col(id_col).alias("nbr_id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    vecs = corpus.withColumn("_features", array_to_vector("v"))
-    model = KMeans(k=n_cells, seed=seed, featuresCol="_features", predictionCol="_cell").fit(vecs)
-    centers = [[float(x) for x in c] for c in model.clusterCenters()]
-    cells = model.transform(vecs).select("nbr_id", "v", F.col("_cell").alias("cell"))
-
-    qs = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
+    cells, centers = _kmeans_cells(_corpus(emb, id_col, vec_col), n_cells, seed)
+    qs = _corpus(queries, id_col, vec_col, query=True)
     return _ivf_probe_scored(cells, qs, centers, k, nprobe)
 
 
@@ -401,24 +425,17 @@ def ivf_topk_deterministic(
     distance, cell) — bit-identical across engines because the
     centroid literals are.
     """
-    corpus = emb.select(
-        F.col(id_col).alias("nbr_id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
     assign, cdf = deterministic_lloyd_assign(
-        corpus, n_cells, id_col="nbr_id", vec_col="v", lloyd_rounds=lloyd_rounds
+        _corpus(emb, id_col, vec_col), n_cells, id_col="nbr_id", vec_col="v",
+        lloyd_rounds=lloyd_rounds,
     )
     cells = assign.select(F.col("id").alias("nbr_id"), "v", "cell")
-    crows = sorted(
-        ((r["cell"], [float(x) for x in r["cvec"]]) for r in cdf.collect())
+    # ordered by cell id; empty cells simply have no members
+    crows = sorted((r["cell"], [float(x) for x in r["cvec"]]) for r in cdf.collect())
+    return _ivf_probe_scored(
+        cells, _corpus(queries, id_col, vec_col, query=True), [c for _, c in crows],
+        k, nprobe, cell_ids=[i for i, _ in crows],
     )
-    # centers indexed by cell id; empty cells simply have no members
-    centers = {c: v for c, v in crows}
-    center_list = [centers[c] for c in sorted(centers)]
-    cell_ids = sorted(centers)
-    qs = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
-    return _ivf_probe_scored(cells, qs, center_list, k, nprobe, cell_ids=cell_ids)
 
 
 def _ivf_probe_scored(
@@ -431,67 +448,37 @@ def _ivf_probe_scored(
     ``cell_ids`` maps positions in ``centers`` to cell labels when the
     quantizer's cells are not a dense 0..k-1 range (the deterministic
     Lloyd build can leave empty cells)."""
-    ids = cell_ids if cell_ids is not None else list(range(len(centers)))
-    # the whole (distance, cell) ranking expression parses from ONE SQL
-    # string: the Column-by-Column form burned ~140 py4j round trips
-    # per centroid building the fold lambdas (round-13, guide §7.3 —
-    # the probe's bench cost was plan CONSTRUCTION). Parsed tree ==
-    # built tree (same aggregate/zip_with HOFs, same struct order,
-    # repr-exact double literals), so every value is unchanged.
-    structs = ",".join(
-        f"named_struct('d', {_sq_dist_sql('qv', centers[i])}, 'cell', {int(ids[i])})"
-        for i in range(len(centers))
-    )
-    ranked_cells = F.expr(
-        f"slice(array_sort(array({structs})), 1, {nprobe})"
-    )
+    ranked = _cells_by_distance("qv", centers, cell_ids)
     q_probe = qs.select(
-        "query_id", "qv", F.explode(ranked_cells).alias("pc")
-    ).select("query_id", "qv", F.col("pc.cell").alias("cell"))
-
-    scored = (
-        cells.join(F.broadcast(q_probe), "cell")
-        .where(F.col("nbr_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "nbr_id",
-            F.round(cosine_expr(F.col("qv"), F.col("v")), 6).alias("cosine"),
-        )
+        "query_id", "qv",
+        F.expr(f"explode(transform(slice({ranked}, 1, {nprobe}), s -> s.cell))").alias("cell"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "nbr_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
+    return _score_topk(
+        cells.join(F.broadcast(q_probe), "cell").where(F.col("nbr_id") != F.col("query_id")), k
     )
 
 
-def _sq_dist_sql(vname: str, center) -> str:
-    """SQL-string twin of :func:`_sq_dist_expr` — the same sequential
-    zip_with fold against a literal centroid, as text for a single
-    ``F.expr`` parse (guide §7.3; values bit-identical — repr() is the
-    shortest round-trip decimal and the SQL double parse is correctly
-    rounded)."""
-    arr = "array(" + ",".join(repr(float(x)) + "D" for x in center) + ")"
-    return (
-        f"aggregate(zip_with({vname}, {arr}, (a, b) -> (a - b) * (a - b)), "
-        "0.0D, (acc, x) -> acc + x)"
-    )
+def _sq_dist_sql(a: str, b: str) -> str:
+    """Squared Euclidean distance of two array<double> SQL expressions
+    as the sequential zip_with fold — the ONE definition of the IVF
+    probes' cell ranking and of frozen-centroid assignment, as text
+    for a single ``F.expr`` parse (guide §7.3: the Column-by-Column
+    form burned ~140 py4j round trips per centroid; the parsed tree is
+    the same aggregate/zip_with HOFs)."""
+    return f"aggregate(zip_with({a}, {b}, (a, b) -> (a - b) * (a - b)), 0.0D, (acc, x) -> acc + x)"
 
 
-def _sq_dist_expr(vcol: Column, center: list[float]) -> Column:
-    """Squared Euclidean distance to a LITERAL centroid via the
-    sequential zip_with fold — the ONE definition both the IVF probe's
-    cell ranking and frozen-centroid assignment use (hoisted round 9:
-    two byte-identical copies had grown, and a numeric fix applied to
-    one would silently break the probe-identity contract the streaming
-    IVF test pins)."""
-    c = lit_double_array(center)  # one py4j call, not dim+1 (guide §7.3)
-    return F.aggregate(
-        F.zip_with(vcol, c, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def _cells_by_distance(vname: str, centers, cell_ids=None) -> str:
+    """SQL for the literal centroids as ``(d, cell)`` structs sorted
+    nearest first — distance ties break on the cell label. Centroid
+    values are repr() literals, the shortest round-trip decimal, which
+    the SQL double parse reads back bit-identically."""
+    ids = cell_ids if cell_ids is not None else range(len(centers))
+    structs = []
+    for c, i in zip(centers, ids):
+        lit = "array(" + ",".join(repr(float(x)) + "D" for x in c) + ")"
+        structs.append(f"named_struct('d', {_sq_dist_sql(vname, lit)}, 'cell', {int(i)})")
+    return f"array_sort(array({','.join(structs)}))"
 
 
 def assign_cells_frozen(
@@ -510,19 +497,8 @@ def assign_cells_frozen(
     embarrassingly parallel over any batch size. Returns
     ``(nbr_id, v, cell)`` rows shaped exactly like the persisted
     ``cells`` table of :func:`build_ivf_index_deterministic`."""
-    ids = cell_ids if cell_ids is not None else list(range(len(centers)))
-    corpus = emb.select(
-        F.col(id_col).alias("nbr_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    # one SQL parse instead of ~140 py4j round trips per centroid —
-    # the _ivf_probe_scored rationale; the parsed tree is identical
-    structs = ",".join(
-        f"named_struct('d', {_sq_dist_sql('v', centers[i])}, 'cell', {int(ids[i])})"
-        for i in range(len(centers))
-    )
-    nearest = F.expr(f"element_at(array_sort(array({structs})), 1)")
-    return corpus.select("nbr_id", "v", nearest["cell"].alias("cell"))
+    nearest = F.expr(f"element_at({_cells_by_distance('v', centers, cell_ids)}, 1)")
+    return _corpus(emb, id_col, vec_col).select("nbr_id", "v", nearest["cell"].alias("cell"))
 
 
 def build_ivf_index(
@@ -537,31 +513,22 @@ def build_ivf_index(
     its nearest-centroid cell (``<path>/cells/cell=N/``) plus a tiny
     centroid-metadata table (``<path>/centroids``).
 
-    This is the 100 TB serving layout: the expensive KMeans build runs
-    ONCE, and every later probe (``ivf_probe_index``) joins on the
-    partition column, so Spark's dynamic partition pruning reads only
-    the ~nprobe probed cell directories — scan cost drops by
-    ≈ n_cells/nprobe without recomputing anything.
+    This is the 100 TB serving layout: the expensive KMeans build
+    (:func:`_kmeans_cells`) runs ONCE, and every later probe
+    (``ivf_probe_index``) joins on the partition column, so Spark's
+    dynamic partition pruning reads only the ~nprobe probed cell
+    directories — scan cost drops by ≈ n_cells/nprobe without
+    recomputing anything.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    corpus = emb.select(
-        F.col(id_col).alias("nbr_id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    vecs = corpus.withColumn("_features", array_to_vector("v"))
-    model = KMeans(k=n_cells, seed=seed, featuresCol="_features", predictionCol="_cell").fit(vecs)
-    cells = model.transform(vecs).select("nbr_id", "v", F.col("_cell").alias("cell"))
+    cells, centers = _kmeans_cells(_corpus(emb, id_col, vec_col), n_cells, seed)
     # repartition by the partition column first: each cell lands in ONE
     # task, so the layout is one file per cell instead of (tasks x
     # cells) small files — the LSM/delta small-file tax the serving
     # scan otherwise pays (parquet stays splittable if cells grow big)
     cells.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(f"{path}/cells")
-    spark = emb.sparkSession
-    centers = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    spark.createDataFrame(centers, "cell int, center array<double>").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/centroids")
+    emb.sparkSession.createDataFrame(
+        list(enumerate(centers)), "cell int, center array<double>"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
 
 
 def build_ivf_index_deterministic(
@@ -581,11 +548,9 @@ def build_ivf_index_deterministic(
     a full value-hash oracle (sim_ivfb_persisted). The deterministic
     build can leave empty cells; the centroid table's explicit ``cell``
     labels (not positional 0..k-1) carry that through the probe."""
-    corpus = emb.select(
-        F.col(id_col).alias("nbr_id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
     assign, cdf = deterministic_lloyd_assign(
-        corpus, n_cells, id_col="nbr_id", vec_col="v", lloyd_rounds=lloyd_rounds
+        _corpus(emb, id_col, vec_col), n_cells, id_col="nbr_id", vec_col="v",
+        lloyd_rounds=lloyd_rounds,
     )
     # one file per cell (see build_ivf_index's repartition note)
     assign.select(F.col("id").alias("nbr_id"), "v", "cell").repartition(
@@ -615,16 +580,11 @@ def ivf_probe_index(
     tests/test_similarity_ann.py). Cell labels come from the centroid
     table (not positional), so sparse cell id ranges — which the
     deterministic build can produce — probe correctly."""
-    center_rows = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(), key=lambda r: r["cell"]
+    rows = sorted(spark.read.parquet(f"{path}/centroids").collect(), key=lambda r: r["cell"])
+    return _ivf_probe_scored(
+        spark.read.parquet(f"{path}/cells"), _corpus(queries, id_col, vec_col, query=True),
+        [list(r["center"]) for r in rows], k, nprobe, cell_ids=[int(r["cell"]) for r in rows],
     )
-    centers = [list(r["center"]) for r in center_rows]
-    cell_ids = [int(r["cell"]) for r in center_rows]
-    cells = spark.read.parquet(f"{path}/cells")
-    qs = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
-    )
-    return _ivf_probe_scored(cells, qs, centers, k, nprobe, cell_ids=cell_ids)
 
 
 def _train_pq_codebooks(
@@ -657,6 +617,82 @@ def _train_pq_codebooks(
     return books
 
 
+def _numpy_pq(corpus: DataFrame, m: int, n_codes: int, train_sample: int, seed: int):
+    """The numpy-PQ build shared by :func:`pq_topk` and
+    :func:`ivfpq_topk`: a ``train_sample``-row sample of ``corpus (nbr_id,
+    v)``, L2-normalized, trains the codebooks on the driver
+    (:func:`_train_pq_codebooks`), which are broadcast once. Returns
+    ``(encode, unit_lut)``: a pandas UDF mapping ``v`` to its m codes
+    (normalized vector, nearest centroid per subspace), and
+    ``unit_lut(qv) -> (q, lut)``, the normalized query and its flat ADC
+    table ``lut[j·n_codes + c] = <q_j, books[j][c]>`` that
+    :func:`_adc_fold` reads. A sample with fewer vectors than
+    ``n_codes`` is refused with its size (no extra job: the sample is
+    collected anyway)."""
+    sample = np.array(
+        [r["v"] for r in corpus.limit(train_sample).collect()], dtype=np.float64
+    )
+    if len(sample) < n_codes:
+        raise ValueError(
+            f"PQ build: the training sample has {len(sample)} vectors (the corpus, "
+            f"capped at train_sample={train_sample}); n_codes={n_codes} needs at least {n_codes}"
+        )
+    sample /= np.linalg.norm(sample, axis=1, keepdims=True)
+    books = _train_pq_codebooks(sample, m, n_codes, seed)
+    sub = sample.shape[1] // m
+    b_books = corpus.sparkSession.sparkContext.broadcast(books)
+
+    @F.pandas_udf(ArrayType(IntegerType()))
+    def encode(vs: pd.Series) -> pd.Series:
+        B = b_books.value
+        M = np.stack([np.asarray(x, dtype=np.float64) for x in vs])
+        M /= np.linalg.norm(M, axis=1, keepdims=True)
+        codes = np.empty((len(M), m), dtype=np.int32)
+        for j in range(m):
+            X = M[:, j * sub : (j + 1) * sub]
+            d2 = ((X[:, None, :] - B[j][None, :, :]) ** 2).sum(axis=2)
+            codes[:, j] = d2.argmin(axis=1)
+        return pd.Series(list(codes))
+
+    def unit_lut(qv) -> tuple[np.ndarray, list[float]]:
+        q = np.asarray(qv, dtype=np.float64)
+        q /= np.linalg.norm(q)
+        lut = np.stack([q[j * sub : (j + 1) * sub] @ books[j].T for j in range(m)]).ravel()
+        return q, [float(x) for x in lut]
+
+    return encode, unit_lut
+
+
+def _adc_fold(m: int, n_codes: int) -> Column:
+    """The float ADC score of the numpy-PQ forms: Σ_j
+    ``lut[j·n_codes + code_j]``, the approximate cosine of the
+    normalized vectors (larger is nearer)."""
+    return F.aggregate(
+        F.zip_with(
+            F.col("code"),
+            F.sequence(F.lit(0), F.lit(m - 1)),
+            lambda c, j: F.element_at(F.col("lut"), (j * n_codes + c + 1).cast("int")),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _pq_adc_rank(
+    pairs: DataFrame, order: Column, vectors: DataFrame, qs: DataFrame, k: int, rerank: int
+) -> DataFrame:
+    """The ADC serving tail of every PQ form. The caller builds the
+    ``(query_id, nbr_id, code, lut)`` pairs (a cross join against the
+    per-query LUTs for PQ and the persisted probe, the probed-cell
+    join for IVFADC) and names the fold that orders them best first
+    (``_adc_fold6`` ascending for the deterministic forms,
+    ``_adc_fold(...).desc()`` for the numpy ones); this drops
+    self-matches, keeps the top ``rerank`` per query (ties → nbr_id)
+    and hands them to :func:`_exact_rerank`."""
+    pairs = pairs.where(F.col("nbr_id") != F.col("query_id"))
+    return _exact_rerank(_top_per_query(pairs, rerank, order, "nbr_id"), vectors, qs, k)
+
+
 def pq_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -673,115 +709,33 @@ def pq_topk(
 
     The 100 TB memory story: each L2-normalized corpus vector is
     compressed to ``m`` 4-bit-ish codes (64 dims × 4 B → 8 B, 32×), so
-    the first-pass scan touches only the code table. Per query, an ADC
-    lookup table (inner product of each query subvector with each
-    codebook centroid) is broadcast; the approximate score is m array
-    lookups per row — JVM-side, no Python in the scan. The top
-    ``rerank`` candidate IDS then fetch their full vectors back from
-    the corpus (broadcast semi-join on id — bounded at |Q|·rerank rows)
-    for EXACT cosine, so the emitted scores are true cosines and only
-    ordering beyond rank ``rerank`` is approximate.
+    the first-pass scan touches only the code table (:func:`_numpy_pq`
+    trains and encodes). Per query, an ADC lookup table (inner product
+    of each query subvector with each codebook centroid) is broadcast;
+    the approximate score (:func:`_adc_fold`) is m array lookups per
+    row — JVM-side, no Python in the scan. The top ``rerank``
+    candidate IDS then fetch their full vectors back from the corpus
+    (:func:`_pq_adc_rank` → :func:`_exact_rerank`, bounded at
+    |Q|·rerank rows) for EXACT cosine, so the emitted scores are true
+    cosines and only ordering beyond rank ``rerank`` is approximate.
 
     Complements ``ann_lsh_topk`` (hash pruning) and ``ivf_topk`` (cell
     pruning): PQ prunes BYTES per vector, and composes with IVF in
     real systems (IVFADC).
     """
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    corpus = emb.select(
-        F.col(id_col).alias("nbr_id"), F.col(vec_col).cast("array<double>").alias("v")
+    corpus = _corpus(emb, id_col, vec_col)
+    encode, unit_lut = _numpy_pq(corpus, m, n_codes, train_sample, seed)
+    qids, qvs, id_t = _collect_queries(
+        queries, id_col, vec_col, "pq_topk (query side)", "ivf_topk for bulk query fan-out"
     )
-    sample = np.array(
-        [r["v"] for r in corpus.limit(train_sample).collect()], dtype=np.float64
+    luts = emb.sparkSession.createDataFrame(
+        [(qid, unit_lut(qv)[1]) for qid, qv in zip(qids, qvs)],
+        f"query_id {id_t}, lut array<double>",
     )
-    sample /= np.linalg.norm(sample, axis=1, keepdims=True)
-    books = _train_pq_codebooks(sample, m, n_codes, seed)
-    dim = sample.shape[1]
-    sub = dim // m
-    sc = emb.sparkSession.sparkContext
-    b_books = sc.broadcast(books)
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def encode(vs: pd.Series) -> pd.Series:
-        B = b_books.value
-        M = np.stack([np.asarray(x, dtype=np.float64) for x in vs])
-        M /= np.linalg.norm(M, axis=1, keepdims=True)
-        codes = np.empty((len(M), m), dtype=np.int32)
-        for j in range(m):
-            X = M[:, j * sub : (j + 1) * sub]
-            d2 = ((X[:, None, :] - B[j][None, :, :]) ** 2).sum(axis=2)
-            codes[:, j] = d2.argmin(axis=1)
-        return pd.Series(list(codes))
-
-    codes_df = corpus.select("nbr_id", encode("v").alias("codes"))
-
-    # driver-side ADC lookup tables: queries are small by contract —
-    # enforced, not assumed
-    from the_framework_for_clustering_time_series_data_spark.operators.corpus_guard import (
-        id_spark_type as _idt,
-        require_bounded_corpus as _rbc,
-    )
-
-    _rbc(queries, op="pq_topk (query side)",
-         scale_route="ivf_topk for bulk query fan-out", limit=100_000)
-    _id_t = _idt(queries, id_col)
-    _id_py = int if _id_t in ("bigint", "int", "smallint", "tinyint") else str
-    qrows = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("qv")
-    ).collect()
-    lut_rows = []
-    for r in qrows:
-        q = np.asarray(r["qv"], dtype=np.float64)
-        q /= np.linalg.norm(q)
-        # lut[j*n_codes + c] = <q_j, books[j][c]> ; approx cos = Σ_j lut[code_j]
-        lut = np.stack(
-            [q[j * sub : (j + 1) * sub] @ books[j].T for j in range(m)]
-        ).ravel()
-        lut_rows.append((_id_py(r["qid"]), [float(x) for x in lut]))
-    luts = emb.sparkSession.createDataFrame(lut_rows, f"query_id {_id_t}, lut array<double>")
-
-    approx = (
-        codes_df.join(F.broadcast(luts), F.col("nbr_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "nbr_id",
-            F.aggregate(
-                F.zip_with(
-                    F.col("codes"),
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    lambda c, j: F.element_at(
-                        F.col("lut"), (j * n_codes + c + 1).cast("int")
-                    ),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("approx_score"),
-        )
-    )
-    w_pre = Window.partitionBy("query_id").orderBy(F.desc("approx_score"), "nbr_id")
-    cand = (
-        approx.withColumn("_r", F.row_number().over(w_pre))
-        .where(F.col("_r") <= rerank)
-        .select("query_id", "nbr_id")
-    )
-    qs = emb.sparkSession.createDataFrame(
-        [(_id_py(r["qid"]), list(map(float, r["qv"]))) for r in qrows],
-        f"query_id {_id_t}, qv array<double>",
-    )
-    exact = (
-        cand.join(corpus, "nbr_id")
-        .join(F.broadcast(qs), "query_id")
-        .select(
-            "query_id",
-            "nbr_id",
-            F.round(cosine_expr(F.col("qv"), F.col("v")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "nbr_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
+    pairs = corpus.select("nbr_id", encode("v").alias("code")).crossJoin(F.broadcast(luts))
+    return _pq_adc_rank(
+        pairs, _adc_fold(m, n_codes).desc(), corpus,
+        _corpus(queries, id_col, vec_col, query=True), k, rerank,
     )
 
 
@@ -902,52 +856,6 @@ def _adc_fold6(m: int, n_codes: int) -> Column:
     )
 
 
-def _pq_adc_rank(
-    codes_arr: DataFrame,
-    corpus: DataFrame,
-    qs: DataFrame,
-    lut_arr: DataFrame,
-    k: int,
-    m: int,
-    n_codes: int,
-    rerank: int,
-) -> DataFrame:
-    """The PQ serving tail shared by :func:`pq_topk_deterministic`
-    (in-session build) and :func:`pq_probe_index` (persisted index):
-    broadcast-LUT ADC scan over the code table → per-query top-rerank
-    window → exact cosine re-rank against the corpus vectors. The scan
-    side touches only ``(nbr_id, code)`` — when ``codes_arr`` comes
-    from the persisted parquet, column pruning keeps the full vectors
-    out of the hot scan (asserted in tests/test_similarity_ann.py)."""
-    approx = (
-        codes_arr.select("nbr_id", "code")
-        .crossJoin(F.broadcast(lut_arr))
-        .where(F.col("nbr_id") != F.col("query_id"))
-        .select("query_id", "nbr_id", _adc_fold6(m, n_codes).alias("ad6"))
-    )
-    w_pre = Window.partitionBy("query_id").orderBy("ad6", "nbr_id")
-    cand = (
-        approx.withColumn("_r", F.row_number().over(w_pre))
-        .where(F.col("_r") <= rerank)
-        .select("query_id", "nbr_id")
-    )
-    exact = (
-        cand.join(corpus.select("nbr_id", "v"), "nbr_id")
-        .join(F.broadcast(qs), "query_id")
-        .select(
-            "query_id",
-            "nbr_id",
-            F.round(cosine_expr(F.col("qv"), F.col("v")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "nbr_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
-    )
-
-
 def pq_topk_deterministic(
     emb: DataFrame,
     queries: DataFrame,
@@ -973,8 +881,9 @@ def pq_topk_deterministic(
     reference), the approximate distance is a SEQUENTIAL fold over the
     code array in subspace order (j-ordered, like the oracle's list
     fold), rounded 6 dp; the top ``rerank`` candidates per query
-    re-rank by exact cosine on the quantized vectors. Everything —
-    codebooks, codes, ADC, both rankings — replays in DuckDB.
+    re-rank by exact cosine on the quantized vectors (the shared
+    :func:`_pq_adc_rank` tail). Everything — codebooks, codes, ADC,
+    both rankings — replays in DuckDB.
 
     Shape notes for scale: the grouped Lloyd shuffles m·n subvector
     rows (constant fan-out), the code table is the only per-corpus
@@ -983,24 +892,11 @@ def pq_topk_deterministic(
     exact re-rank is bounded at |Q|·rerank rows.
     """
     sub = dim // m
-
-    corpus = emb.select(
-        F.col(id_col).alias("nbr_id"),
-        F.transform(
-            F.col(vec_col).cast("array<double>"), lambda x: _r6(x)
-        ).alias("v"),
-    ).transform(stage_checkpoint, eager=False)
-
+    corpus = _r6_corpus(emb, id_col, vec_col).transform(stage_checkpoint, eager=False)
     codes_arr, cdf = _pq_det_build(corpus, m, n_codes, sub, lloyd_rounds)
-
-    qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.transform(
-            F.col(vec_col).cast("array<double>"), lambda x: _r6(x)
-        ).alias("qv"),
-    )
-    lut_arr = _pq_adc_lut(qs, cdf, m, n_codes, sub)
-    return _pq_adc_rank(codes_arr, corpus, qs, lut_arr, k, m, n_codes, rerank)
+    qs = _r6_corpus(queries, id_col, vec_col, query=True)
+    pairs = codes_arr.crossJoin(F.broadcast(_pq_adc_lut(qs, cdf, m, n_codes, sub)))
+    return _pq_adc_rank(pairs, _adc_fold6(m, n_codes), corpus, qs, k, rerank)
 
 
 def sq8_topk(
@@ -1066,19 +962,6 @@ def sq8_scales(corpus: DataFrame) -> DataFrame:
                 lambda x: x.s,
             ).alias("s")
         )
-    )
-
-
-def _r6_corpus(
-    df: DataFrame, id_col: str, vec_col: str, id_out: str = "nbr_id"
-) -> DataFrame:
-    """The shared 6-dp-quantized ``(id_out, v)`` projection every
-    deterministic ANN build starts from."""
-    return df.select(
-        F.col(id_col).alias(id_out),
-        F.transform(
-            F.col(vec_col).cast("array<double>"), lambda x: _r6(x)
-        ).alias("v"),
     )
 
 
@@ -1151,7 +1034,7 @@ def sq8_rank(
     """The SQ8 serving tail: exact-int64 dot/norm scan over
     ``codes (nbr_id, q8, v)`` against broadcast query codes, 6-dp
     approximate-cosine candidate window, exact re-rank of the top
-    ``rerank`` per query on the stored vectors."""
+    ``rerank`` per query on the stored vectors (:func:`_exact_rerank`)."""
     dot8 = F.aggregate(
         F.zip_with("q8", "qq8", lambda a, b: a * b),
         F.lit(0).cast("long"),
@@ -1182,27 +1065,8 @@ def sq8_rank(
         )
         .where(F.col("cos8").isNotNull())
     )
-    w_pre = Window.partitionBy("query_id").orderBy(F.desc("cos8"), "nbr_id")
-    cand = (
-        scored.withColumn("_r", F.row_number().over(w_pre))
-        .where(F.col("_r") <= rerank)
-        .select("query_id", "nbr_id")
-    )
-    exact = (
-        cand.join(codes.select("nbr_id", "v"), "nbr_id")
-        .join(F.broadcast(qs), "query_id")
-        .select(
-            "query_id",
-            "nbr_id",
-            F.round(cosine_expr(F.col("qv"), F.col("v")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "nbr_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
-    )
+    cand = _top_per_query(scored, rerank, F.desc("cos8"), "nbr_id")
+    return _exact_rerank(cand, codes, qs, k)
 
 
 def build_pq_index_deterministic(
@@ -1264,15 +1128,12 @@ def pq_probe_index(
     path unchanged (sim_pqb_persisted)."""
     sub = dim // m
     codes = spark.read.parquet(f"{path}/codes")
-    cdf = spark.read.parquet(f"{path}/codebooks")
-    qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.transform(
-            F.col(vec_col).cast("array<double>"), lambda x: _r6(x)
-        ).alias("qv"),
-    )
-    lut_arr = _pq_adc_lut(qs, cdf, m, n_codes, sub)
-    return _pq_adc_rank(codes, codes, qs, lut_arr, k, m, n_codes, rerank)
+    qs = _r6_corpus(queries, id_col, vec_col, query=True)
+    lut = _pq_adc_lut(qs, spark.read.parquet(f"{path}/codebooks"), m, n_codes, sub)
+    # the scan reads only (nbr_id, code): column pruning keeps ``v`` out
+    # of it (asserted in tests/test_similarity_ann.py)
+    pairs = codes.select("nbr_id", "code").crossJoin(F.broadcast(lut))
+    return _pq_adc_rank(pairs, _adc_fold6(m, n_codes), codes, qs, k, rerank)
 
 
 def ivfpq_topk_deterministic(
@@ -1302,13 +1163,15 @@ def ivfpq_topk_deterministic(
     * PQ codebooks/codes: the same grouped md5-Lloyd build
       :func:`pq_topk_deterministic` oracles (``_pq_det_build``);
     * probe: each query ranks the coarse centroids by sequential-fold
-      distance (ties → cell) and keeps ``nprobe`` cells — a window
-      over |Q|×n_cells rows, all index metadata;
+      distance (ties → cell) and keeps ``nprobe`` cells — a
+      :func:`_top_per_query` cut over |Q|×n_cells rows, all index
+      metadata;
     * ADC scan: candidates = codes of vectors WHOSE COARSE CELL IS
       PROBED only (the IVF×PQ composition — ≈ n_cells/nprobe scan
-      and 8-byte-code read reduction), folded against the per-query
-      dense LUT (``_pq_adc_lut``/``_adc_fold6``), top ``rerank`` by
-      (ad6, nbr_id), exact cosine re-rank on the quantized vectors.
+      and 8-byte-code read reduction), joined to the per-query dense
+      LUT (``_pq_adc_lut``); the shared :func:`_pq_adc_rank` tail
+      folds them (``_adc_fold6``), keeps the top ``rerank`` by (ad6,
+      nbr_id) and re-ranks by exact cosine on the quantized vectors.
 
     Everything — both quantizers, codes, probe ranking, ADC, and both
     rankings — replays in DuckDB. Scale shape matches ivfpq_topk:
@@ -1316,72 +1179,22 @@ def ivfpq_topk_deterministic(
     join broadcasts |Q|·nprobe rows; rerank is bounded at |Q|·rerank.
     """
     sub = dim // m
-
-    corpus = emb.select(
-        F.col(id_col).alias("nbr_id"),
-        F.transform(
-            F.col(vec_col).cast("array<double>"), lambda x: _r6(x)
-        ).alias("v"),
-    ).transform(stage_checkpoint, eager=False)
-
+    corpus = _r6_corpus(emb, id_col, vec_col).transform(stage_checkpoint, eager=False)
     coarse, coarse_cdf = deterministic_lloyd_assign(
         corpus, n_cells, id_col="nbr_id", vec_col="v",
         lloyd_rounds=lloyd_rounds, exact_mean=True,
     )
-    cells = coarse.select(F.col("id").alias("nbr_id"), "cell")
-
     codes_arr, cdf = _pq_det_build(corpus, m, n_codes, sub, lloyd_rounds)
-
-    qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.transform(
-            F.col(vec_col).cast("array<double>"), lambda x: _r6(x)
-        ).alias("qv"),
+    qs = _r6_corpus(queries, id_col, vec_col, query=True)
+    probed = _top_per_query(
+        qs.crossJoin(F.broadcast(coarse_cdf)), nprobe, F.expr(_sq_dist_sql("qv", "cvec")), "cell"
+    ).select("query_id", "cell")
+    pairs = (
+        codes_arr.join(coarse.select(F.col("id").alias("nbr_id"), "cell"), "nbr_id")
+        .join(F.broadcast(probed), "cell")
+        .join(F.broadcast(_pq_adc_lut(qs, cdf, m, n_codes, sub)), "query_id")
     )
-    probe_d2 = F.aggregate(
-        F.zip_with("qv", "cvec", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w_probe = Window.partitionBy("query_id").orderBy("_d2", "cell")
-    qc = (
-        qs.crossJoin(F.broadcast(coarse_cdf))
-        .withColumn("_d2", probe_d2)
-        .withColumn("_r", F.row_number().over(w_probe))
-        .where(F.col("_r") <= nprobe)
-        .select("query_id", "cell")
-    )
-
-    lut_arr = _pq_adc_lut(qs, cdf, m, n_codes, sub)
-
-    approx = (
-        codes_arr.join(cells, "nbr_id")
-        .join(F.broadcast(qc), "cell")
-        .join(F.broadcast(lut_arr), "query_id")
-        .where(F.col("nbr_id") != F.col("query_id"))
-        .select("query_id", "nbr_id", _adc_fold6(m, n_codes).alias("ad6"))
-    )
-    w_pre = Window.partitionBy("query_id").orderBy("ad6", "nbr_id")
-    cand = (
-        approx.withColumn("_r", F.row_number().over(w_pre))
-        .where(F.col("_r") <= rerank)
-        .select("query_id", "nbr_id")
-    )
-    exact = (
-        cand.join(corpus, "nbr_id")
-        .join(F.broadcast(qs), "query_id")
-        .select(
-            "query_id",
-            "nbr_id",
-            F.round(cosine_expr(F.col("qv"), F.col("v")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "nbr_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
-    )
+    return _pq_adc_rank(pairs, _adc_fold6(m, n_codes), corpus, qs, k, rerank)
 
 
 def ivfpq_topk(
@@ -1409,121 +1222,30 @@ def ivfpq_topk(
     cell residuals — noted refinement; at these dims the plain-code
     recall is already audited ≥ the PQ-only path in tests).
 
-    Plan shape: KMeans fit + one encode pass build the index (both
+    Plan shape: the KMeans fit of :func:`ivf_topk`
+    (:func:`_kmeans_cells`) and the codebooks and encode pass of
+    :func:`pq_topk` (:func:`_numpy_pq`) build the index (both
     one-time, persistable like build_ivf_index); the probe is a
-    broadcast join on (cell) carrying each query's ADC lookup table,
-    an all-JVM array-fold scan, a per-query rerank window over
-    candidate rows only, and a bounded id fetch-back join.
+    broadcast join on (cell) carrying each query's ADC lookup table
+    (probed cells ranked on the driver by distance to the normalized
+    query), then the shared :func:`_pq_adc_rank` tail: an all-JVM
+    array-fold scan, a per-query rerank cut over candidate rows only,
+    and a bounded id fetch-back join.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    from the_framework_for_clustering_time_series_data_spark.operators.corpus_guard import (
-        id_spark_type as _idt,
-        require_bounded_corpus as _rbc,
+    corpus = _corpus(emb, id_col, vec_col)
+    cells, centers = _kmeans_cells(corpus, n_cells, seed)
+    encode, unit_lut = _numpy_pq(corpus, m, n_codes, train_sample, seed)
+    qids, qvs, id_t = _collect_queries(
+        queries, id_col, vec_col, "ivfpq_topk (query side)", "per-cell batch probes"
     )
-
-    corpus = emb.select(
-        F.col(id_col).alias("nbr_id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    vecs = corpus.withColumn("_features", array_to_vector("v"))
-    model = KMeans(
-        k=n_cells, seed=seed, featuresCol="_features", predictionCol="_cell"
-    ).fit(vecs)
-    centers = [[float(x) for x in c] for c in model.clusterCenters()]
-
-    sample = np.array(
-        [r["v"] for r in corpus.limit(train_sample).collect()], dtype=np.float64
-    )
-    sample /= np.linalg.norm(sample, axis=1, keepdims=True)
-    books = _train_pq_codebooks(sample, m, n_codes, seed)
-    dim = sample.shape[1]
-    sub = dim // m
-    b_books = emb.sparkSession.sparkContext.broadcast(books)
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def encode(vs: pd.Series) -> pd.Series:
-        B = b_books.value
-        M = np.stack([np.asarray(x, dtype=np.float64) for x in vs])
-        M /= np.linalg.norm(M, axis=1, keepdims=True)
-        codes = np.empty((len(M), m), dtype=np.int32)
-        for j in range(m):
-            X = M[:, j * sub : (j + 1) * sub]
-            d2 = ((X[:, None, :] - B[j][None, :, :]) ** 2).sum(axis=2)
-            codes[:, j] = d2.argmin(axis=1)
-        return pd.Series(list(codes))
-
-    cells = model.transform(vecs).select(
-        "nbr_id", F.col("_cell").alias("cell"), encode("v").alias("codes")
-    )
-
-    _rbc(queries, op="ivfpq_topk (query side)",
-         scale_route="per-cell batch probes", limit=100_000)
-    _id_t = _idt(queries, id_col)
-    _id_py = int if _id_t in ("bigint", "int", "smallint", "tinyint") else str
-    qrows = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("qv")
-    ).collect()
-    qcl_rows = []
-    for r in qrows:
-        q = np.asarray(r["qv"], dtype=np.float64)
-        q /= np.linalg.norm(q)
-        lut = np.stack(
-            [q[j * sub : (j + 1) * sub] @ books[j].T for j in range(m)]
-        ).ravel()
-        cell_order = np.argsort(
-            [((q - np.asarray(c)) ** 2).sum() for c in centers], kind="stable"
-        )[:nprobe]
-        for c in cell_order:
-            qcl_rows.append(
-                (_id_py(r["qid"]), int(c), [float(x) for x in lut])
-            )
-    qcl = emb.sparkSession.createDataFrame(
-        qcl_rows, f"query_id {_id_t}, cell int, lut array<double>"
-    )
-
-    approx = (
-        cells.join(F.broadcast(qcl), "cell")
-        .where(F.col("nbr_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "nbr_id",
-            F.aggregate(
-                F.zip_with(
-                    F.col("codes"),
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    lambda c, j: F.element_at(
-                        F.col("lut"), (j * n_codes + c + 1).cast("int")
-                    ),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("approx_score"),
-        )
-    )
-    w_pre = Window.partitionBy("query_id").orderBy(F.desc("approx_score"), "nbr_id")
-    cand = (
-        approx.withColumn("_r", F.row_number().over(w_pre))
-        .where(F.col("_r") <= rerank)
-        .select("query_id", "nbr_id")
-    )
-    qs = emb.sparkSession.createDataFrame(
-        [(_id_py(r["qid"]), list(map(float, r["qv"]))) for r in qrows],
-        f"query_id {_id_t}, qv array<double>",
-    )
-    exact = (
-        cand.join(corpus, "nbr_id")
-        .join(F.broadcast(qs), "query_id")
-        .select(
-            "query_id",
-            "nbr_id",
-            F.round(cosine_expr(F.col("qv"), F.col("v")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "nbr_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
+    probes = []
+    for qid, qv in zip(qids, qvs):
+        q, lut = unit_lut(qv)
+        d2 = [((q - np.asarray(c)) ** 2).sum() for c in centers]
+        probes += [(qid, int(c), lut) for c in np.argsort(d2, kind="stable")[:nprobe]]
+    qcl = emb.sparkSession.createDataFrame(probes, f"query_id {id_t}, cell int, lut array<double>")
+    pairs = cells.select("nbr_id", "cell", encode("v").alias("code")).join(F.broadcast(qcl), "cell")
+    return _pq_adc_rank(
+        pairs, _adc_fold(m, n_codes).desc(), corpus,
+        _corpus(queries, id_col, vec_col, query=True), k, rerank,
     )

@@ -14,6 +14,15 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from the_framework_for_clustering_time_series_data_spark.operators.similarity import (
+    _ivf_probe_scored,
+    _r6_corpus,
+    assign_cells_frozen,
+    sq8_encode,
+    sq8_rank,
+    sq8_scales,
+)
+
 
 def windowed_value_stats(
     events: DataFrame,
@@ -954,7 +963,6 @@ def ivf_maintain_batch(
     from pathlib import Path
 
     from the_framework_for_clustering_time_series_data_spark.operators.cluster import deterministic_lloyd_assign
-    from the_framework_for_clustering_time_series_data_spark.operators.similarity import assign_cells_frozen
 
     sp = batch_df.sparkSession
     root = Path(index_dir)
@@ -1506,8 +1514,6 @@ def sq8_requantize(
        sim_sq8_requantize registry plan's posture)."""
     from pathlib import Path
 
-    from the_framework_for_clustering_time_series_data_spark.operators.similarity import sq8_encode, sq8_scales
-
     root = Path(index_dir)
     # Heal BOTH crashed-swap kinds, in reader order (requant first, then
     # compact): a compaction that crashed mid-phase-2 leaves some
@@ -1862,8 +1868,6 @@ def streaming_ivf_probe(
     same-cell candidates across the delta union."""
     from pathlib import Path
 
-    from the_framework_for_clustering_time_series_data_spark.operators.similarity import _ivf_probe_scored
-
     if (Path(index_dir) / "_requant_commit").exists():
         _requant_finish(index_dir)  # never pair old centroids with new cells
     centers, cell_ids = _load_centroids(spark, index_dir)
@@ -1918,12 +1922,6 @@ def sq8_maintain_batch(
     cover the distribution — a re-quantize/rebuild event, exactly the
     role per-cell counts play for the IVF maintainer)."""
     from pathlib import Path
-
-    from the_framework_for_clustering_time_series_data_spark.operators.similarity import (
-        _r6_corpus,
-        sq8_encode,
-        sq8_scales,
-    )
 
     sp = batch_df.sparkSession
     root = Path(index_dir)
@@ -2085,12 +2083,6 @@ def sq8_probe_stream_index(
     against the SAME frozen scales the deltas used, then the shared
     similarity.sq8_rank tail (int64 dot scan + bounded exact re-rank)
     runs over the delta union."""
-    from the_framework_for_clustering_time_series_data_spark.operators.similarity import (
-        _r6_corpus,
-        sq8_encode,
-        sq8_rank,
-    )
-
     from pathlib import Path
 
     if (Path(index_dir) / "_requant_commit").exists():
