@@ -175,6 +175,11 @@ def main() -> None:
     # whole-stage-codegen compilation (~2-5 s for the widest plans —
     # pure per-plan constant, not data-dependent); the second (steady)
     # run is the per-scan cost that actually multiplies at 100 TB.
+    # The steady run skips compilation only while the cold run's classes
+    # stay in Spark's compiled-class cache: get_spark keeps 2,000 (Spark's
+    # default of 100 is fewer than a wide query's own classes). Some
+    # queries still compile on their second run: AQE stage-order
+    # variants and generated limit counters (ROADMAP direction 2).
     # ``value`` totals the steady-state runs; cold runs are reported
     # alongside in ``queries_cold`` for transparency.
     # MEASUREMENT-HYGIENE (round-13 fix, guide §1): collect Python

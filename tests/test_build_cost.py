@@ -12,7 +12,14 @@ eager step. These tests pin both so the cost cannot creep back:
   (its schema comes from the per-session memo), and a table rewritten
   in place is re-inferred;
 * the single-parse literal builders equal their Column-by-Column forms
-  bit for bit, and the rank sketch equals ``approxQuantile``.
+  bit for bit, and the rank sketch equals ``approxQuantile``;
+* a warm pass over the benchmark rotation queries (and two exact
+  similarity forms that collect a bounded frame) compiles no generated
+  class: ``get_spark`` sizes Spark's compiled-class cache above the
+  session's working set, and no query plans a class that can never be
+  reused (a generated limit counter is named from a JVM-wide
+  sequence). At Spark's default of 100 entries every warm rotation
+  recompiled hundreds of classes.
 """
 
 from __future__ import annotations
@@ -66,6 +73,21 @@ PY4J_BUDGET = {
     "sim_sq8_topk": 1265,
 }
 
+#: the perfbench interactive_small and corpus_curation rotations, and two
+#: exact similarity forms that collect a bounded frame
+WARM_QUERIES = (
+    "p5_preprocess_table",
+    "g6_dtw_align",
+    "pipeline_e2e_det",
+    "e2c_pca_powerit",
+    "t5_representative_plotdata",
+    "dedup_minhash_lsh",
+    "text_tfidf_md5kmeans",
+    "curate_corpus",
+    "sim_bruteforce_topk",
+    "sim_knn_graph",
+)
+
 #: py4j's garbage-collection detach commands start with this; they depend
 #: on when Python's GC runs, not on what the build does
 _PY4J_GC_PREFIX = "m\n"
@@ -103,6 +125,48 @@ def test_session_turns_call_site_capture_off(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     F.col("x")  # PySpark reads the flag once, at the first Column call
     assert not is_debugging_enabled()
+
+
+def _compiled_classes(spark) -> int:
+    """Classes Janino has compiled in this JVM so far."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_session_sizes_codegen_cache(spark):
+    if os.environ.get("SPARK_GRAFT_VANILLA"):
+        pytest.skip("the vanilla session keeps Spark's 100-entry compiled-class cache")
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000"
+
+
+def test_warm_pass_compiles_nothing(spark):
+    if os.environ.get("SPARK_GRAFT_VANILLA"):
+        pytest.skip("the vanilla session keeps Spark's 100-entry compiled-class cache")
+    from the_framework_for_clustering_time_series_data_spark.plans.registry import QUERIES
+
+    def run_pass() -> dict[str, int]:
+        compiled = {}
+        for name in WARM_QUERIES:
+            before = _compiled_classes(spark)
+            QUERIES[name](spark, SF_SMALL).write.format("noop").mode("overwrite").save()
+            spark.catalog.clearCache()
+            compiled[name] = _compiled_classes(spark) - before
+        return compiled
+
+    # AQE numbers codegen stages in the order it creates query stages,
+    # which follows whichever shuffle finishes first, and may re-plan a
+    # join by the same race: a warm run can meet a stage order it has
+    # not seen yet and compile it once. Static planning takes that race
+    # out, so the count below moves only on an eviction or a per-run
+    # class.
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        run_pass()
+        run_pass()
+        compiled = {name: n for name, n in run_pass().items() if n}
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert not compiled, f"classes compiled on a warm pass: {compiled}"
 
 
 @pytest.mark.parametrize("name", sorted(PY4J_BUDGET))

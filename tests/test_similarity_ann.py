@@ -669,3 +669,19 @@ def test_small_corpus_build_refuses_with_its_size(spark):
         similarity.ivfpq_topk_deterministic,
     ):
         assert fn(emb, qs, k=3).count() > 0
+
+
+def test_empty_query_side_returns_empty_frame(spark):
+    """An empty query frame (here an empty filter) gives an empty result
+    with the normal output schema from the exact forms, as it does from
+    the ANN forms, instead of a numpy error at build."""
+    emb = load_table(spark, SF_ORACLE, "embeddings")
+    none, some = emb.where(F.col("vec_id") < 0), emb.where(F.col("vec_id") < 3)
+    for fn, kw in (
+        (similarity.brute_force_topk, {"k": 3}),
+        (similarity.mmr_rerank, {"k": 3, "pool": 5}),
+        (similarity.ann_lsh_topk, {"k": 3}),
+    ):
+        empty = fn(emb, none, **kw)
+        assert empty.schema == fn(emb, some, **kw).schema
+        assert empty.collect() == []

@@ -23,7 +23,7 @@ from the_framework_for_clustering_time_series_data_spark.functions.plan_tools im
     stage_checkpoint,
 )
 from the_framework_for_clustering_time_series_data_spark.operators.cluster import deterministic_lloyd_assign
-from the_framework_for_clustering_time_series_data_spark.operators.corpus_guard import id_spark_type
+from the_framework_for_clustering_time_series_data_spark.operators.corpus_guard import collect_bounded, id_spark_type
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -566,7 +566,7 @@ def embedding_cosine_pairs(
 
     Physical strategy: the corpus matrix is small by this operator's
     contract (brute force is only ever run on a bounded corpus,
-    enforced by ``require_bounded_corpus``), so it broadcasts
+    enforced by ``collect_bounded``), so it broadcasts
     L2-normalized to every executor and each Arrow batch scores ITSELF
     against the whole corpus with one BLAS matmul, emitting only
     above-threshold pairs with the id_a < id_b dedup applied in NumPy
@@ -576,20 +576,16 @@ def embedding_cosine_pairs(
     import numpy as np
     import pandas as pd
 
-    from the_framework_for_clustering_time_series_data_spark.operators.corpus_guard import require_bounded_corpus
-
-    require_bounded_corpus(
-        emb,
+    id_t = id_spark_type(emb, id_col)
+    v = emb.select(
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
+    )
+    rows = collect_bounded(
+        v,
         op="embedding_cosine_pairs",
         scale_route="similarity.ann_lsh_topk / semantic_dedup (cell-bounded)",
         limit=max_corpus_rows,
     )
-    id_t = id_spark_type(emb, id_col)
-
-    v = emb.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    rows = v.collect()
     # id dtype follows the input column (string series ids stay strings)
     ids = np.array([r["id"] for r in rows])
     mat = np.array([r["v"] for r in rows], dtype=np.float64)

@@ -27,8 +27,8 @@ from the_framework_for_clustering_time_series_data_spark.operators.cluster impor
     md5_seed_cells,
 )
 from the_framework_for_clustering_time_series_data_spark.operators.corpus_guard import (
+    collect_bounded,
     id_spark_type,
-    require_bounded_corpus,
 )
 
 
@@ -113,8 +113,9 @@ def _collect_queries(
     contract, enforced, not assumed. Returns ``(ids, vectors,
     id_type)``; ids keep the query frame's type (string ids stay
     strings)."""
-    require_bounded_corpus(queries, op=op, scale_route=scale_route, limit=100_000)
-    rows = _corpus(queries, id_col, vec_col, query=True).collect()
+    rows = collect_bounded(
+        _corpus(queries, id_col, vec_col, query=True), op=op, scale_route=scale_route, limit=100_000
+    )
     return [r["query_id"] for r in rows], [r["qv"] for r in rows], id_spark_type(queries, id_col)
 
 
@@ -145,7 +146,22 @@ def brute_force_topk(
         "ann_lsh_topk / ivf_topk (bucketed candidates)",
     )
     # query_id follows the QUERY frame's id type, nbr_id the corpus's
-    id_t = id_spark_type(emb, id_col)
+    schema = f"query_id {qid_t}, nbr_id {id_spark_type(emb, id_col)}, cosine double"
+    if qids:
+        partial = _corpus(emb, id_col, vec_col).mapInPandas(_batch_topk(emb, qids, qvs, k), schema)
+    else:
+        # an empty query side (e.g. an empty filter) scores nothing: the
+        # same output shape, empty
+        partial = emb.sparkSession.createDataFrame([], schema)
+    return _top_per_query(partial, k, F.desc("cosine"), "nbr_id").select(
+        "query_id", "nbr_id", "cosine", "rank"
+    )
+
+
+def _batch_topk(emb: DataFrame, qids: list, qvs: list, k: int):
+    """The mapInPandas scorer of :func:`brute_force_topk`: the
+    L2-normalized query matrix is broadcast once, and each Arrow batch
+    of ``(nbr_id, v)`` emits its own top-``k`` per query."""
     qids = np.array(qids)
     qmat = np.array(qvs, dtype=np.float64)
     qmat = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
@@ -175,12 +191,7 @@ def brute_force_topk(
                 )
             yield pd.concat(parts)
 
-    partial = _corpus(emb, id_col, vec_col).mapInPandas(
-        score, f"query_id {qid_t}, nbr_id {id_t}, cosine double"
-    )
-    return _top_per_query(partial, k, F.desc("cosine"), "nbr_id").select(
-        "query_id", "nbr_id", "cosine", "rank"
-    )
+    return score
 
 
 def mmr_rerank(

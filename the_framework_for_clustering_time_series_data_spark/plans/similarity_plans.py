@@ -1293,22 +1293,21 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from the_framework_for_clustering_time_series_data_spark.operators.corpus_guard import (
+        collect_bounded,
         id_spark_type,
-        require_bounded_corpus,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    require_bounded_corpus(
-        emb,
-        op="sim_knn_graph",
-        scale_route="sim_ann_lsh_topk / sim_ivf_topk as the candidate pass",
-    )
     id_t = id_spark_type(emb, "vec_id")
     v = emb.select(
         F.col("vec_id").alias("id"),
         F.col("embedding").cast("array<double>").alias("v"),
     )
-    rows = v.collect()
+    rows = collect_bounded(
+        v,
+        op="sim_knn_graph",
+        scale_route="sim_ann_lsh_topk / sim_ivf_topk as the candidate pass",
+    )
     # id dtype follows the input column (string ids stay strings)
     ids = np.array([r["id"] for r in rows])
     mat = np.array([r["v"] for r in rows], dtype=np.float64)

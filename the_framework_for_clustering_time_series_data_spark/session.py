@@ -56,6 +56,17 @@ def get_spark(app_name: str = "the_framework_for_clustering_time_series_data_spa
         # an active session, so it must be set here, before any plan is
         # built.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Compiled generated classes, keyed by their source. Spark's
+        # default keeps 100, fewer than one warm rotation of the perfbench
+        # workloads needs (corpus_curation ~190 classes, interactive_small
+        # ~265), so every repeated query recompiled (Janino) and re-JITted
+        # each class; at 2,000 a warm rotation compiles none. The whole
+        # 290-query registry at sf0.001 compiles ~4,400 distinct classes;
+        # JVM Metaspace after one pass over it and a full GC: 258 MB at
+        # 2,000 entries, 244 MB at the default (267-280 MB and 245-298 MB
+        # before the GC, which unloads evicted classes).
+        # A static conf: it must be set before the session exists.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     # measurement seam: SPARK_GRAFT_DRIVER_JAVA_OPTS="-Xlog:gc*:file=…"
     # lets a sweep capture GC logs for heap-pressure adjudication (the
