@@ -426,9 +426,10 @@ def test_exact_jaccard_doc_cap_restricts_ids(spark):
 def test_minhash_portable_prunes_verify_behind_semi_join(spark):
     # pass 2 (exact shingle sets) must scan documents behind a
     # broadcast semi-join on candidate ids, pushed before tokenization.
-    # materialize=False keeps the checkpointed frames symbolic so the
-    # semi-join is visible in one end-to-end plan (the registered query
-    # checkpoints them eagerly, hiding pass 2 from the final explain).
+    # The checkpoint-disabled seam (as in _full_plan) keeps the
+    # checkpointed frames symbolic so the semi-join is visible in one
+    # end-to-end plan (the registered query checkpoints them eagerly,
+    # hiding pass 2 from the final explain).
     import contextlib
     import io
 
@@ -437,10 +438,14 @@ def test_minhash_portable_prunes_verify_behind_semi_join(spark):
 
     spark.catalog.clearCache()
     docs = load_table(spark, SF_ORACLE, "documents")
-    out = dedup.minhash_lsh_pairs(docs, hash_family="md5", materialize=False)
     buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
+    spark.conf.set("spark.graft.checkpoint.disabled", "true")
+    try:
+        out = dedup.minhash_lsh_pairs(docs, hash_family="md5")
+        with contextlib.redirect_stdout(buf):
+            out.explain("formatted")
+    finally:
+        spark.conf.unset("spark.graft.checkpoint.disabled")
     plan = buf.getvalue()
     assert "LeftSemi" in plan
     assert "CartesianProduct" not in plan

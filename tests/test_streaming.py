@@ -418,7 +418,7 @@ def test_foreachbatch_upsert_partitioned(spark, stream_dir, tmp_path):
     sink = str(tmp_path / "table")
     stream = read_events_stream(spark, stream_dir, max_files_per_trigger=2)
     q = write_stream_upsert_partitioned(stream, sink, str(tmp_path / "ckpt"))
-    upsert = q._upsert_fn
+    upsert = q._batch_fn
     q.awaitTermination(120)
     got = spark.read.parquet(sink)
     total = spark.read.parquet(stream_dir).count()
@@ -701,7 +701,7 @@ def test_streaming_merge_apply_matches_batch_across_restart(
         (F2.col("event_type") == "error").alias("is_delete"),
         F2.round(F2.col("value") * 10, 2).alias("new_bal"),
     )
-    q2._merge_fn(replay, last_batch_id)
+    q2._batch_fn(replay, last_batch_id)
     again = {tuple(r) for r in read_merge_target(spark, tgt).collect()}
     assert again == expect
 
@@ -814,7 +814,7 @@ def test_streaming_mv_maintainer_matches_batch_across_restart(
     replay = spark.read.parquet(*batch_files).withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
-    q2._maintain_fn(replay, last_batch_id)
+    q2._batch_fn(replay, last_batch_id)
     got2 = {tuple(r) for r in read_mv_rollup(spark, tgt).collect()}
     assert got2 == expect
 
@@ -912,7 +912,7 @@ def test_streaming_simhash_dedup_matches_batch_across_restart(spark, tmp_path):
         for line in src_log.read_text().splitlines()
         if line.startswith("{")
     ]
-    q2._dedup_fn(spark.read.parquet(*batch_files), last_version - 1)
+    q2._batch_fn(spark.read.parquet(*batch_files), last_version - 1)
     got2 = {
         (r["id"], r["near_dup_of"])
         for r in read_simhash_dedup(spark, idx).collect()
@@ -1037,7 +1037,7 @@ def test_streaming_ivf_maintainer_probe_parity_across_restart(spark, tmp_path):
         for line in src_log.read_text().splitlines()
         if line.startswith("{")
     ]
-    q2._maintain_fn(spark.read.parquet(*batch_files), last_delta - 1)
+    q2._batch_fn(spark.read.parquet(*batch_files), last_delta - 1)
     got2 = {
         tuple(r)
         for r in streaming_ivf_probe(spark, idx, queries, k=5, nprobe=3).collect()
@@ -1261,7 +1261,7 @@ def test_streaming_sq8_maintainer_probe_parity_across_restart(spark, tmp_path):
         for line in src_log.read_text().splitlines()
         if line.startswith("{")
     ]
-    q2._maintain_fn(spark.read.parquet(*batch_files), last_delta - 1)
+    q2._batch_fn(spark.read.parquet(*batch_files), last_delta - 1)
     got2 = {
         tuple(r)
         for r in sq8_probe_stream_index(spark, idx, queries, k=5).collect()
@@ -1919,3 +1919,87 @@ def test_recenter_partial_fold_copy_fallback(spark, tmp_path, monkeypatch):
         map(tuple, ops.streaming_ivf_probe(spark, idx, q, k=5, nprobe=4).collect())
     )
     assert probe(copied) == probe(linked)
+
+
+@pytest.mark.parametrize("which", ["merge", "simhash", "mv"])
+def test_restart_after_crash_while_seeding_v0(spark, tmp_path, which):
+    """A crash while a snapshot maintainer seeds ``{prefix}_v0`` leaves
+    a committer ``_temporary`` dir and no ``_SUCCESS``. The restart must
+    seed again and ingest, ending in the same serving state as a run
+    that never crashed; a seed gated on the dir's existence read the
+    schema-less dir on every restart and failed with
+    UNABLE_TO_INFER_SCHEMA."""
+    from the_framework_for_clustering_time_series_data_spark.sources.tables import load_table
+    from the_framework_for_clustering_time_series_data_spark.streaming import ops
+
+    if which == "simhash":
+        rows = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
+        rows = rows.where(F.col("doc_id") < 12)
+    else:
+        rows = (
+            load_table(spark, SF_SMALL, "events")
+            .where(
+                (F.col("ts") >= F.lit("2024-01-25").cast("timestamp"))
+                & F.col("event_type").isin("purchase", "error")
+            )
+            .orderBy("ts", "event_id")
+            .limit(12)
+        )
+    src = str(tmp_path / "src")
+    rows.coalesce(1).write.parquet(src)
+    customers = load_table(spark, SF_SMALL, "customer")
+    prefix, start, read = {
+        "merge": (
+            "target",
+            lambda s, t, c: ops.streaming_merge_apply(s, customers, t, c),
+            ops.read_merge_target,
+        ),
+        "simhash": ("state", ops.streaming_simhash_dedup, ops.read_simhash_dedup),
+        "mv": ("partials", ops.streaming_mv_daily_maintainer, ops.read_mv_rollup),
+    }[which]
+
+    def run(name: str) -> set:
+        if which == "simhash":
+            stream = spark.readStream.schema(rows.schema).parquet(src)
+        else:
+            stream = ops.read_events_stream(spark, src)
+        target = str(tmp_path / name)
+        q = start(stream, target, str(tmp_path / f"{name}_ckpt"))
+        q.awaitTermination(120)
+        assert q.exception() is None
+        return {tuple(r) for r in read(spark, target).collect()}
+
+    expect = run("clean")
+    (tmp_path / "crashed" / f"{prefix}_v0" / "_temporary" / "0").mkdir(parents=True)
+    assert run("crashed") == expect
+    assert len(expect) > 0
+    assert (tmp_path / "crashed" / f"{prefix}_v0" / "_SUCCESS").exists()
+
+
+# reader → the first version dir its maintainer writes
+_STREAM_READERS = {
+    "read_merge_target": "target_v0",
+    "read_simhash_dedup": "state_v0",
+    "read_mv_rollup": "partials_v0",
+    "read_ivf_stream_index": "cells/delta=1/cell=0",
+    "read_sq8_stream_index": "codes/delta=1",
+}
+
+
+@pytest.mark.parametrize("state", ["empty", "no_success"])
+@pytest.mark.parametrize("reader", sorted(_STREAM_READERS))
+def test_reader_without_complete_version_raises(tmp_path, reader, state):
+    """Every serving-state reader refuses a dir with no complete
+    version — an empty dir, or one whose only version lacks
+    ``_SUCCESS`` (mid-write or crashed) — with FileNotFoundError. The
+    reader gets no session: it must refuse before any Spark work."""
+    from the_framework_for_clustering_time_series_data_spark.streaming import ops
+
+    d = tmp_path / "store"
+    d.mkdir()
+    if state == "no_success":
+        part = d / _STREAM_READERS[reader]
+        part.mkdir(parents=True)
+        (part / "part-00000.parquet").write_bytes(b"")
+    with pytest.raises(FileNotFoundError):
+        getattr(ops, reader)(None, str(d))

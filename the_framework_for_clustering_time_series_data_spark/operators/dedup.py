@@ -331,15 +331,13 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     hash_family: str = "xxhash64",
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash + LSH banding,
     verified with exact Jaccard on the candidates.
 
-    ``materialize=False`` skips the two eager localCheckpoints (the
-    candidate pairs and their shingle sets) so the full logical plan
-    stays inspectable — used by the plan-shape tests; production keeps
-    the default, which pins both candidate-sized frames exactly once.
+    The candidate pairs and their shingle sets are each pinned once by
+    an eager ``stage_checkpoint`` (plan-shape tests inspect the full
+    plan through its ``spark.graft.checkpoint.disabled`` seam).
 
     Pipeline (all DataFrame ops, deterministic):
       1. tokenize → posexplode tokens → ONE codegen'd xxhash64 per
@@ -472,9 +470,8 @@ def minhash_lsh_pairs(
         buckets.select(F.explode(pair_arr).alias("p"))
         .select("p.id_a", "p.id_b")
         .distinct()
+        .transform(stage_checkpoint, eager=True)
     )
-    if materialize:
-        cand = cand.transform(stage_checkpoint, eager=True)
     # Pass 2: exact shingle sets for CANDIDATE docs only. The broadcast
     # semi-join prunes the corpus BEFORE tokenization, so this pass is
     # linear in the candidate count, not the corpus.
@@ -493,9 +490,8 @@ def minhash_lsh_pairs(
         .groupBy("id")
         .agg(F.collect_set("sh").alias("hs"))
         .withColumn("n_sh", F.size("hs"))
+        .transform(stage_checkpoint, eager=True)
     )
-    if materialize:
-        sh = sh.transform(stage_checkpoint, eager=True)
     verified = (
         cand.join(sh.select(F.col("id").alias("id_a"), F.col("hs").alias("sh_a"), F.col("n_sh").alias("n_a")), "id_a")
         .join(sh.select(F.col("id").alias("id_b"), F.col("hs").alias("sh_b"), F.col("n_sh").alias("n_b")), "id_b")
@@ -618,26 +614,15 @@ def embedding_cosine_pairs(
     return v.mapInPandas(score, f"id_a {id_t}, id_b {id_t}, cosine double")
 
 
-def simhash_pairs(
-    df: DataFrame,
-    max_hamming: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 64,
-    hash_family: str = "xxhash64",
-) -> DataFrame:
-    """SimHash near-duplicate pairs: Hamming(simhash_a, simhash_b) ≤
-    ``max_hamming``.
-
-    Pigeonhole banding: the fingerprint splits into ``max_hamming + 1``
-    contiguous bands COVERING all bits (sizes differ by at most one
-    bit); a pair within Hamming distance ``max_hamming`` has fewer
-    differing bits than bands, so it agrees EXACTLY on at least one —
-    candidates = same-(band, value) bucket pairs (one groupBy — same
-    shape as the MinHash banding), then exact verification via
-    bit_count(xor). Never an O(n²) comparison. (A fixed 4-band split
-    would silently drop pairs when max_hamming > 3.)
-    """
+def _simhash_bands(fp: DataFrame, max_hamming: int, bits: int) -> DataFrame:
+    """The pigeonhole band layout of SimHash near-dup search, shared by
+    :func:`simhash_pairs` and the ingest-time form
+    (streaming.ops.streaming_simhash_dedup): ``(id, simhash)`` rows
+    exploded into ``max_hamming + 1`` contiguous bands COVERING all
+    ``bits`` (sizes differ by at most one bit) as
+    ``(id, simhash, band_id, band_val)``. A pair within Hamming distance
+    ``max_hamming`` differs in fewer bits than there are bands, so it
+    agrees exactly on at least one band."""
     n_bands = max_hamming + 1
     base, extra = divmod(bits, n_bands)
     offsets, widths, off = [], [], 0
@@ -646,8 +631,7 @@ def simhash_pairs(
         offsets.append(off)
         widths.append(w)
         off += w
-    fp = simhash(df, text_col=text_col, id_col=id_col, bits=bits, hash_family=hash_family)
-    bands = fp.select(
+    return fp.select(
         "id",
         "simhash",
         F.explode(
@@ -664,6 +648,28 @@ def simhash_pairs(
             )
         ).alias("bb"),
     ).select("id", "simhash", "bb.band_id", "bb.band_val")
+
+
+def simhash_pairs(
+    df: DataFrame,
+    max_hamming: int = 3,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    bits: int = 64,
+    hash_family: str = "xxhash64",
+) -> DataFrame:
+    """SimHash near-duplicate pairs: Hamming(simhash_a, simhash_b) ≤
+    ``max_hamming``.
+
+    Pigeonhole banding (:func:`_simhash_bands`: ``max_hamming + 1``
+    bands covering all bits, so a qualifying pair agrees EXACTLY on at
+    least one): candidates = same-(band, value) bucket pairs (one
+    groupBy — same shape as the MinHash banding), then exact
+    verification via bit_count(xor). Never an O(n²) comparison. (A
+    fixed 4-band split would silently drop pairs when max_hamming > 3.)
+    """
+    fp = simhash(df, text_col=text_col, id_col=id_col, bits=bits, hash_family=hash_family)
+    bands = _simhash_bands(fp, max_hamming, bits)
     buckets = (
         bands.groupBy("band_id", "band_val")
         .agg(F.sort_array(F.collect_list(F.struct("id", "simhash"))).alias("ms"))

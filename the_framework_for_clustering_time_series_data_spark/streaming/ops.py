@@ -10,10 +10,21 @@ batch op in this repo, so correctness is asserted as
 from __future__ import annotations
 
 import os
+import shutil
+from pathlib import Path
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupStateTimeout
+from pyspark.sql.window import Window
 
+from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import stage_checkpoint
+from the_framework_for_clustering_time_series_data_spark.operators import dedup
+from the_framework_for_clustering_time_series_data_spark.operators.cluster import (
+    deterministic_lloyd_assign,
+    md5_lloyd,
+)
 from the_framework_for_clustering_time_series_data_spark.operators.similarity import (
     _ivf_probe_scored,
     _r6_corpus,
@@ -78,49 +89,56 @@ def running_series_stats(
     needs in a streaming deployment: incremental moments instead of a
     full re-scan (app.py:187-192 recomputes from scratch each call).
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    out_schema = (
-        "series_id long, n long, mean double, var_pop double"
-    )
-    state_schema = "n long, mean double, m2 double"
-
-    def update(key, pdfs, state: GroupState):
-        (sid,) = key
-        if state.exists:
-            n, mean, m2 = state.get
-        else:
-            n, mean, m2 = 0, 0.0, 0.0
-        for pdf in pdfs:
-            for v in pdf[value_col].astype(float):
-                n += 1
-                d = v - mean
-                mean += d / n
-                m2 += d * (v - mean)
-        state.update((n, mean, m2))
-        yield pd.DataFrame(
-            [
-                {
-                    "series_id": sid,
-                    "n": n,
-                    "mean": round(mean, 6),
-                    "var_pop": round(m2 / n, 6) if n else 0.0,
-                }
-            ]
+    def update(key, pdfs, state):
+        moments, row = _welford_fold(
+            key[0], state.get if state.exists else None, pdfs, value_col
         )
+        state.update(moments)
+        yield row
 
     return (
         events.select(F.col(key_col).cast("long").alias("_k"), F.col(value_col))
         .groupBy("_k")
         .applyInPandasWithState(
             update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
+            outputStructType=_MOMENTS_OUT,
+            stateStructType=_MOMENTS_STATE,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
+
+
+_MOMENTS_OUT = "series_id long, n long, mean double, var_pop double"
+_MOMENTS_STATE = "n long, mean double, m2 double"
+
+
+def _welford_fold(sid, moments, pdfs, value_col: str):
+    """The running-moments fold both stateful APIs share
+    (:func:`running_series_stats`, :func:`running_series_stats_tws`):
+    fold every value of ``pdfs`` into the (n, mean, M2) ``moments``
+    (None = a new series) with Welford's update, and return the new
+    moments with the one output row (rounded mean and population
+    variance)."""
+    n, mean, m2 = moments or (0, 0.0, 0.0)
+    for pdf in pdfs:
+        for v in pdf[value_col].astype(float):
+            n += 1
+            d = v - mean
+            mean += d / n
+            m2 += d * (v - mean)
+    row = pd.DataFrame(
+        [
+            {
+                "series_id": sid,
+                "n": n,
+                "mean": round(mean, 6),
+                "var_pop": round(m2 / n, 6) if n else 0.0,
+            }
+        ]
+    )
+    return (n, mean, m2), row
 
 
 def read_events_stream(spark, source_dir: str, max_files_per_trigger: int = 1) -> DataFrame:
@@ -318,13 +336,9 @@ def streaming_anomaly_zscore(
     the same flag set. State is three scalars per series, constant in
     stream length; within a micro-batch rows are sorted by (ts, id) so
     replay order matches the batch twin's window order."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     out_schema = "series_id long, event_id long, value double, z double"
-    state_schema = "n long, mean double, m2 double"
 
-    def update(key, pdfs, state: GroupState):
+    def update(key, pdfs, state):
         (sid,) = key
         n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
         pdf = pd.concat(list(pdfs))
@@ -364,7 +378,7 @@ def streaming_anomaly_zscore(
         .applyInPandasWithState(
             update,
             outputStructType=out_schema,
-            stateStructType=state_schema,
+            stateStructType=_MOMENTS_STATE,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
@@ -386,44 +400,27 @@ def running_series_stats_tws(
     modern twin so both stateful APIs stay covered; parity across
     micro-batches is asserted in tests/test_streaming.py (skipped
     where the ``protobuf`` package — the TWS state-server wire
-    protocol's dependency — is unavailable, as in this container)."""
-    import pandas as pd
+    protocol's dependency — is unavailable, as in this container). The
+    arithmetic is :func:`_welford_fold`, the same fold the
+    applyInPandasWithState form runs."""
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
     )
 
-    out_schema = "series_id long, n long, mean double, var_pop double"
-
     class RunningMoments(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "moments", "n long, mean double, m2 double"
-            )
+            self._state = handle.getValueState("moments", _MOMENTS_STATE)
 
         def handleInputRows(self, key, rows, timerValues):
-            (sid,) = key
-            if self._state.exists():
-                n, mean, m2 = self._state.get()
-            else:
-                n, mean, m2 = 0, 0.0, 0.0
-            for pdf in rows:
-                for v in pdf[value_col].astype(float):
-                    n += 1
-                    d = v - mean
-                    mean += d / n
-                    m2 += d * (v - mean)
-            self._state.update((n, mean, m2))
-            yield pd.DataFrame(
-                [
-                    {
-                        "series_id": sid,
-                        "n": n,
-                        "mean": round(mean, 6),
-                        "var_pop": round(m2 / n, 6) if n else 0.0,
-                    }
-                ]
+            moments, row = _welford_fold(
+                key[0],
+                self._state.get() if self._state.exists() else None,
+                rows,
+                value_col,
             )
+            self._state.update(moments)
+            yield row
 
         def close(self) -> None:
             pass
@@ -433,7 +430,7 @@ def running_series_stats_tws(
         .groupBy("_k")
         .transformWithStateInPandas(
             statefulProcessor=RunningMoments(),
-            outputStructType=out_schema,
+            outputStructType=_MOMENTS_OUT,
             outputMode="Update",
             timeMode="None",
         )
@@ -470,14 +467,113 @@ def write_stream_upsert_partitioned(
             .parquet(path)
         )
 
+    return _start_batches(df, upsert, checkpoint)
+
+
+# ---------------------------------------------------------------------------
+# The snapshot-and-delta store. Every foreachBatch maintainer, reader,
+# compaction and rebuild below keeps its state in one on-disk layout,
+# and only these helpers (and the crash-safe swap helpers further down)
+# spell it out:
+#   - a batch-id-versioned snapshot chain ``{prefix}_v{b}``: batch b reads
+#     version b and overwrites version b+1, so a batch replayed after a
+#     restart-before-checkpoint-commit rewrites exactly its own output
+#     from its unchanged input (MERGE idempotence without a
+#     transactional table format);
+#   - the ANN indexes' hive-style ``delta=N`` dirs under one base
+#     (``cells`` or ``codes``), written by batch N-1, read as one
+#     partitioned scan;
+#   - parquet's ``_SUCCESS`` marker, committed last, as the only
+#     completeness gate: a dir without it is mid-write or crashed.
+# ---------------------------------------------------------------------------
+
+
+def _start_batches(df: DataFrame, fn, checkpoint: str):
+    """Start ``fn(batch_df, batch_id)`` as an availableNow foreachBatch
+    sink over ``df``. The query carries ``fn`` as ``_batch_fn`` so a
+    test can replay a batch by hand (the restart-between-write-and-
+    checkpoint-commit case)."""
     q = (
-        df.writeStream.foreachBatch(upsert)
+        df.writeStream.foreachBatch(fn)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
-    q._upsert_fn = upsert  # exposed for idempotence tests
+    q._batch_fn = fn
     return q
+
+
+def _read_version(sp, root, prefix: str, batch_id: int, seed) -> DataFrame:
+    """Batch ``batch_id``'s input snapshot ``{prefix}_v{batch_id}``.
+    First writes ``{prefix}_v0`` from ``seed`` (a DataFrame, or the DDL
+    schema of an empty one) unless a COMPLETE one exists — gated on
+    ``_SUCCESS``, not on the dir: a crash while seeding leaves a
+    committer ``_temporary`` dir with no marker, and an ``exists()``
+    gate would read that schema-less dir on every restart
+    (UNABLE_TO_INFER_SCHEMA) instead of seeding again."""
+    v0 = Path(root) / f"{prefix}_v0"
+    if not (v0 / "_SUCCESS").exists():
+        if not isinstance(seed, DataFrame):
+            seed = sp.createDataFrame([], seed)
+        seed.write.mode("overwrite").parquet(str(v0))
+    return sp.read.parquet(str(Path(root) / f"{prefix}_v{batch_id}"))
+
+
+def _write_version(df: DataFrame, root, prefix: str, batch_id: int) -> None:
+    """Batch ``batch_id``'s output snapshot: (over)write
+    ``{prefix}_v{batch_id + 1}``."""
+    df.write.mode("overwrite").parquet(str(Path(root) / f"{prefix}_v{batch_id + 1}"))
+
+
+def _latest_version(directory, prefix: str) -> int:
+    """Highest complete (``_SUCCESS``-gated) ``{prefix}_v{b}``: a
+    version mid-write (a running stream, or a crash before the marker)
+    is never served."""
+    versions = [
+        int(p.name.rsplit("_v", 1)[1])
+        for p in Path(directory).glob(f"{prefix}_v*")
+        if (p / "_SUCCESS").exists()
+    ]
+    if not versions:
+        raise FileNotFoundError(
+            f"no complete {prefix}_v* snapshot (with _SUCCESS) under {directory}"
+        )
+    return max(versions)
+
+
+def _read_latest(spark, directory, prefix: str) -> DataFrame:
+    """The latest complete snapshot (:func:`_latest_version`)."""
+    v = _latest_version(directory, prefix)
+    return spark.read.parquet(str(Path(directory) / f"{prefix}_v{v}"))
+
+
+def _hive_int(p) -> int:
+    """The integer value of a hive-style ``key=N`` dir."""
+    return int(p.name.split("=", 1)[1])
+
+
+def _complete_deltas(base) -> list:
+    """Every complete (``_SUCCESS``-gated) ``delta=N`` dir under
+    ``base``, sorted by N."""
+    return sorted(
+        (p for p in Path(base).glob("delta=*") if (p / "_SUCCESS").exists()),
+        key=_hive_int,
+    )
+
+
+def _read_complete_deltas(spark, base) -> DataFrame:
+    """Every complete delta under ``base`` as ONE basePath-anchored
+    scan, so ``delta`` and ``cell`` read as partition columns and
+    partition pruning holds (a delta mid-rewrite is skipped until its
+    marker lands — read-committed serving)."""
+    deltas = _complete_deltas(base)
+    if not deltas:
+        raise FileNotFoundError(
+            f"no complete delta=* snapshot (with _SUCCESS) under {base}"
+        )
+    return spark.read.option("basePath", str(base)).parquet(
+        *[str(p) for p in deltas]
+    )
 
 
 def streaming_countmin_sketch(
@@ -568,14 +664,11 @@ def streaming_scd2_compact(
     the file source must deliver time-ordered files (the
     ordered_stream_dir contract, as for streaming_anomaly_zscore).
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     out_schema = "user_id long, version int, tier int, valid_from timestamp"
     state_schema = "tier long, version long"
     NO_TIER = -(1 << 31)
 
-    def update(key, pdfs, state: GroupState):
+    def update(key, pdfs, state):
         (uid,) = key
         tier, version = state.get if state.exists else (NO_TIER, 0)
         pdf = pd.concat(list(pdfs))
@@ -640,8 +733,9 @@ def streaming_merge_apply(
     the standard lakehouse MERGE posture for the same reason.
 
     Exactly-once across restarts comes from BATCH-ID-VERSIONED target
-    snapshots: batch b reads ``target_v{b}`` and (over)writes
-    ``target_v{b+1}`` (``target_v0`` is the seeded base dimension), so
+    snapshots (:func:`_read_version` / :func:`_write_version`): batch b
+    reads ``target_v{b}`` and (over)writes ``target_v{b+1}``
+    (``target_v0`` is the seeded base dimension), so
     a batch replayed after a restart-before-checkpoint-commit rewrites
     exactly its own output version deterministically from its
     unchanged input version — the no-transactional-format equivalent
@@ -656,10 +750,6 @@ def streaming_merge_apply(
     (compact_parquet). Read the serving state with
     :func:`read_merge_target`.
     """
-    from pathlib import Path
-
-    from pyspark.sql.window import Window
-
     feed = events.where(
         (F.col("ts") >= F.lit("2024-01-25").cast("timestamp"))
         & F.col("event_type").isin("purchase", "error")
@@ -671,19 +761,16 @@ def streaming_merge_apply(
         F.round(F.col("value") * 10, 2).alias("new_bal"),
     )
 
+    seed = base.select(
+        F.col("c_custkey").alias("custkey"),
+        F.col("c_name").alias("name"),
+        F.round(F.col("c_acctbal"), 6).alias("acctbal"),
+        F.lit(True).alias("orig"),
+        F.lit(False).alias("touched"),
+        F.lit(False).alias("is_deleted"),
+    )
+
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        root = Path(target_dir)
-        v0 = root / "target_v0"
-        if not v0.exists():
-            base.select(
-                F.col("c_custkey").alias("custkey"),
-                F.col("c_name").alias("name"),
-                F.round(F.col("c_acctbal"), 6).alias("acctbal"),
-                F.lit(True).alias("orig"),
-                F.lit(False).alias("touched"),
-                F.lit(False).alias("is_deleted"),
-            ).write.mode("overwrite").parquet(str(v0))
         w = Window.partitionBy("key").orderBy(
             F.col("ts").desc(), F.col("event_id").desc()
         )
@@ -692,7 +779,7 @@ def streaming_merge_apply(
             .where(F.col("rn") == 1)
             .select("key", "is_delete", "new_bal")
         )
-        cur = sp.read.parquet(str(root / f"target_v{batch_id}"))
+        cur = _read_version(batch_df.sparkSession, target_dir, "target", batch_id, seed)
         merged = cur.join(
             latest, cur["custkey"] == latest["key"], "full_outer"
         ).select(
@@ -710,18 +797,9 @@ def streaming_merge_apply(
             .otherwise(F.coalesce("is_deleted", F.lit(False)))
             .alias("is_deleted"),
         )
-        merged.write.mode("overwrite").parquet(
-            str(root / f"target_v{batch_id + 1}")
-        )
+        _write_version(merged, target_dir, "target", batch_id)
 
-    q = (
-        feed.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q._merge_fn = merge  # exposed for idempotence tests
-    return q
+    return _start_batches(feed, merge, checkpoint)
 
 
 def streaming_simhash_dedup(
@@ -736,18 +814,17 @@ def streaming_simhash_dedup(
     form (round-8 extension): each micro-batch of documents is
     SimHash-fingerprinted (operators/dedup.simhash, the batch kernel),
     banded-joined against the fingerprints of everything ingested so
-    far PLUS its own smaller-id rows (pigeonhole: max_hamming+1
-    contiguous bands — a qualifying pair agrees exactly on ≥ 1 band,
-    so candidates come from an equi-join, never all-pairs), verified
+    far PLUS its own smaller-id rows (the pigeonhole band layout
+    dedup.simhash_pairs uses, ``dedup._simhash_bands``: candidates
+    come from an equi-join, never all-pairs), verified
     with ``bit_count(xor) ≤ max_hamming``, and appended to the state
     with its verdict: ``near_dup_of`` = the smallest earlier doc_id
     within the Hamming radius, −1 when novel.
 
-    State = the cumulative (doc_id, simhash, near_dup_of) table,
-    maintained with streaming_merge_apply's batch-id-versioned
-    exactly-once discipline (batch b reads ``state_v{b}``, overwrites
-    ``state_v{b+1}``; replay after a restart-before-commit rewrites
-    its own version deterministically). Read verdicts with
+    State = the cumulative (doc_id, simhash, near_dup_of) table in the
+    batch-id-versioned snapshot chain streaming_merge_apply uses
+    (:func:`_read_version` / :func:`_write_version`: batch b reads
+    ``state_v{b}``, overwrites ``state_v{b+1}``). Read verdicts with
     :func:`read_simhash_dedup`.
 
     Verdicts equal the batch form (min smaller-id match over ALL
@@ -756,47 +833,12 @@ def streaming_simhash_dedup(
     corpus as of its arrival. At fleet scale the per-batch cost is one
     fingerprint pass over the batch + a banded join whose left side
     prunes to the batch's band values (the index never self-joins)."""
-    from pathlib import Path
-
-    from the_framework_for_clustering_time_series_data_spark.operators import dedup
-
-    n_bands = max_hamming + 1
-    base, extra = divmod(bits, n_bands)
-    offsets, widths, off = [], [], 0
-    for b in range(n_bands):
-        w = base + (1 if b < extra else 0)
-        offsets.append(off)
-        widths.append(w)
-        off += w
-
-    def _bands(fp: DataFrame) -> DataFrame:
-        return fp.select(
-            "id",
-            "simhash",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band_id"),
-                            F.shiftrightunsigned(F.col("simhash"), offsets[b])
-                            .bitwiseAND(F.lit((1 << widths[b]) - 1))
-                            .alias("band_val"),
-                        )
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("id", "simhash", "bb.band_id", "bb.band_val")
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        root = Path(index_dir)
-        v0 = root / "state_v0"
-        if not v0.exists():
-            sp.createDataFrame(
-                [], "id long, simhash long, near_dup_of long"
-            ).write.mode("overwrite").parquet(str(v0))
-        cur = sp.read.parquet(str(root / f"state_v{batch_id}"))
+        cur = _read_version(
+            batch_df.sparkSession, index_dir, "state", batch_id,
+            "id long, simhash long, near_dup_of long",
+        )
         # new_fp feeds THREE plans per batch (pool/a-side, b-side
         # bands, new_rows): persist so the SimHash explode+groupBy
         # fingerprint aggregate runs once per batch, not ~3x (the
@@ -809,7 +851,8 @@ def streaming_simhash_dedup(
             batch_df, bits=bits, hash_family=hash_family
         ).persist()
         pool = cur.select("id", "simhash").unionByName(new_fp)
-        a, b = _bands(pool).alias("a"), _bands(new_fp).alias("b")
+        a = dedup._simhash_bands(pool, max_hamming, bits).alias("a")
+        b = dedup._simhash_bands(new_fp, max_hamming, bits).alias("b")
         cand = (
             a.join(
                 b,
@@ -839,38 +882,18 @@ def streaming_simhash_dedup(
             "simhash",
             F.coalesce("near_dup_of", F.lit(-1)).alias("near_dup_of"),
         )
-        cur.unionByName(new_rows).write.mode("overwrite").parquet(
-            str(root / f"state_v{batch_id + 1}")
-        )
+        _write_version(cur.unionByName(new_rows), index_dir, "state", batch_id)
         # all three consumers are done — reclaim the batch's blocks now
         new_fp.unpersist()
 
-    q = (
-        docs.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q._dedup_fn = apply_batch  # exposed for idempotence tests
-    return q
+    return _start_batches(docs, apply_batch, checkpoint)
 
 
 def read_simhash_dedup(spark, index_dir: str) -> DataFrame:
     """Serving-state reader for :func:`streaming_simhash_dedup`: the
     latest complete (``_SUCCESS``-gated) state version —
     ``(id, simhash, near_dup_of)`` for every ingested document."""
-    from pathlib import Path
-
-    versions = sorted(
-        int(p.name.rsplit("_v", 1)[1])
-        for p in Path(index_dir).glob("state_v*")
-        if (p / "_SUCCESS").exists()
-    )
-    if not versions:
-        raise FileNotFoundError(
-            f"no complete state_v* snapshot (with _SUCCESS) under {index_dir}"
-        )
-    return spark.read.parquet(f"{index_dir}/state_v{versions[-1]}")
+    return _read_latest(spark, index_dir, "state")
 
 
 def streaming_mv_daily_maintainer(
@@ -887,11 +910,10 @@ def streaming_mv_daily_maintainer(
     micro-batches fold in losslessly.
 
     Exactly-once across restarts is streaming_merge_apply's
-    batch-id-versioned snapshot discipline: batch b reads
-    ``partials_v{b}`` and (over)writes ``partials_v{b+1}`` (v0 is the
-    empty table), so a batch replayed after a
-    restart-before-checkpoint-commit deterministically rewrites its
-    own output version. Read the serving state with
+    batch-id-versioned snapshot chain (:func:`_read_version` /
+    :func:`_write_version`: batch b reads ``partials_v{b}`` and
+    (over)writes ``partials_v{b+1}``; v0 is the empty table). Read the
+    serving state with
     :func:`read_mv_rollup` (latest ``_SUCCESS``-gated version, folded
     through the batch plan's mv_merge_partials).
 
@@ -899,38 +921,21 @@ def streaming_mv_daily_maintainer(
     one merge keyed on (series, day) — the stored partials stay
     day-partitionable and snapshots compact at the maintenance
     boundary; with Delta/Iceberg the merge becomes MERGE INTO."""
-    from pathlib import Path
-
     from the_framework_for_clustering_time_series_data_spark.plans.event_plans import (
         merge_daily_partials,
         mv_daily_partials,
     )
 
     def maintain(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        root = Path(target_dir)
-        v0 = root / "partials_v0"
-        if not v0.exists():
-            sp.createDataFrame(
-                [],
-                "series_id long, day timestamp, s decimal(38,0), "
-                "n long, mn long, mx long",
-            ).write.mode("overwrite").parquet(str(v0))
-        cur = sp.read.parquet(str(root / f"partials_v{batch_id}"))
-        new = mv_daily_partials(batch_df)
-        merged = merge_daily_partials(cur.unionByName(new))
-        merged.write.mode("overwrite").parquet(
-            str(root / f"partials_v{batch_id + 1}")
+        cur = _read_version(
+            batch_df.sparkSession, target_dir, "partials", batch_id,
+            "series_id long, day timestamp, s decimal(38,0), "
+            "n long, mn long, mx long",
         )
+        merged = merge_daily_partials(cur.unionByName(mv_daily_partials(batch_df)))
+        _write_version(merged, target_dir, "partials", batch_id)
 
-    q = (
-        events.writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q._maintain_fn = maintain  # exposed for idempotence tests
-    return q
+    return _start_batches(events, maintain, checkpoint)
 
 
 def _load_centroids(spark, index_dir: str) -> tuple[list[list[float]], list[int]]:
@@ -960,14 +965,9 @@ def ivf_maintain_batch(
     the batch to cells, write the hive-style delta and the versioned
     per-cell count metadata. Deterministic per (batch contents,
     batch_id) — a replay rewrites identical output."""
-    from pathlib import Path
-
-    from the_framework_for_clustering_time_series_data_spark.operators.cluster import deterministic_lloyd_assign
-
     sp = batch_df.sparkSession
     root = Path(index_dir)
-    if (root / "_requant_commit").exists():
-        _requant_finish(index_dir)  # complete a crashed recenter swap first
+    _heal(index_dir)  # complete a crashed recenter/compaction swap first
     # the batch feeds two plans on batch 0 (quantizer train + assign
     # write) and the foreachBatch frame re-scans its source files per
     # action: persist so each batch's files are read ONCE (the simhash
@@ -995,32 +995,20 @@ def ivf_maintain_batch(
         assigned = assign_cells_frozen(
             batch_df, centers, cell_ids=cell_ids, id_col=id_col, vec_col=vec_col
         )
-        # hive-style delta level (delta=N) so every delta shares ONE
-        # partition-discovery base: the reader scans them as a single
-        # (delta, cell)-partitioned table and `cell` pruning holds.
         # repartition("cell") first: one task (→ one file) per cell, not
         # (tasks × cells) small files per delta — the delta-layout
         # small-file tax the serving scan otherwise accumulates
         assigned.repartition("cell").write.mode("overwrite").partitionBy(
             "cell"
         ).parquet(str(root / "cells" / f"delta={batch_id + 1}"))
-        m0 = root / "meta_v0"
-        # _SUCCESS-gated like the quantizer dir above: a crash between
-        # mkdir and parquet commit must not strand an uninferable empty
-        # dir across restarts (review finding)
-        if not (m0 / "_SUCCESS").exists():
-            sp.createDataFrame([], "cell int, n long").write.mode(
-                "overwrite"
-            ).parquet(str(m0))
-        cur = sp.read.parquet(str(root / f"meta_v{batch_id}"))
+        cur = _read_version(sp, index_dir, "meta", batch_id, "cell int, n long")
         part = assigned.groupBy("cell").agg(F.count("*").alias("n"))
-        (
+        _write_version(
             cur.unionByName(part)
             .groupBy("cell")
             .agg(F.sum("n").cast("long").alias("n"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(str(root / f"meta_v{batch_id + 1}"))
+            .coalesce(1),
+            index_dir, "meta", batch_id,
         )
     finally:
         # unpersist on EVERY exit — a raising batch (dim-mismatch
@@ -1066,7 +1054,7 @@ def streaming_ivf_index_maintainer(
     no duplicate vectors, held to the batch rebuild by
     tests/test_streaming.py's restart-parity test. Serve with
     :func:`streaming_ivf_probe`; compact deltas at the maintenance
-    boundary with sources.writers.compact_parquet (delta count grows
+    boundary with :func:`compact_ivf_stream_index` (delta count grows
     with batches, not data — the standard LSM-ish trade)."""
     def maintain(batch_df: DataFrame, batch_id: int) -> None:
         ivf_maintain_batch(
@@ -1079,14 +1067,7 @@ def streaming_ivf_index_maintainer(
             vec_col=vec_col,
         )
 
-    q = (
-        vectors.writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q._maintain_fn = maintain  # exposed for idempotence tests
-    return q
+    return _start_batches(vectors, maintain, checkpoint)
 
 
 def read_ivf_stream_index(spark, index_dir: str) -> DataFrame:
@@ -1094,38 +1075,10 @@ def read_ivf_stream_index(spark, index_dir: str) -> DataFrame:
     every complete (``_SUCCESS``-gated) delta read as ONE
     (delta, cell)-partitioned scan under the shared ``cells`` base —
     shaped like build_ivf_index_deterministic's ``cells`` table plus
-    the ``delta`` lineage column. A delta mid-rewrite (replay in
-    flight) is skipped until its _SUCCESS lands: read-committed
-    serving. A committed-but-unfinished compaction (crash between the
-    ``_compact_commit`` marker and the swap) is completed here first —
-    the index is readable at every crash point."""
-    from pathlib import Path
-
-    if (Path(index_dir) / "_requant_commit").exists():
-        _requant_finish(index_dir)
-    if (Path(index_dir) / "_compact_commit").exists():
-        _ivf_compact_finish(index_dir)
-    # one multi-path scan with a single partition-discovery base, not a
-    # union-of-plans: `cell` pruning (and delta pruning) still applies
+    the ``delta`` lineage column. A crashed swap is completed first
+    (:func:`_heal`) — the index is readable at every crash point."""
+    _heal(index_dir)
     return _read_complete_deltas(spark, Path(index_dir) / "cells")
-
-
-def _read_complete_deltas(spark, base) -> DataFrame:
-    """_SUCCESS-gated delta-union reader shared by the IVF and SQ8
-    stream indexes: every complete ``delta=N`` under ``base`` as ONE
-    basePath-anchored scan (a delta mid-rewrite is skipped until its
-    marker lands — read-committed serving)."""
-    deltas = sorted(
-        (p for p in base.glob("delta=*") if (p / "_SUCCESS").exists()),
-        key=lambda p: int(p.name.split("=", 1)[1]),
-    )
-    if not deltas:
-        raise FileNotFoundError(
-            f"no complete delta=* snapshot (with _SUCCESS) under {base}"
-        )
-    return spark.read.option("basePath", str(base)).parquet(
-        *[str(p) for p in deltas]
-    )
 
 
 def _replay_guard(checkpoint: str | None, top: int, action: str) -> None:
@@ -1135,8 +1088,6 @@ def _replay_guard(checkpoint: str | None, top: int, action: str) -> None:
     afterwards and mode("overwrite") the folded delta — which now holds
     EVERY vector — down to just that batch's rows. Shared by
     compaction and the drift-driven requantize/recenter rebuilds."""
-    from pathlib import Path
-
     if checkpoint is None:
         return
     commits = Path(checkpoint) / "commits"
@@ -1167,8 +1118,6 @@ def _fold_file(src, dst) -> None:
     Local delta discovery still walks ``Path.glob`` — the documented
     local-mode contract; a DFS deployment fronts the index root with a
     mounted/fuse path or swaps this module's path layer wholesale."""
-    import shutil
-
     try:
         os.link(src, dst)
     except OSError:
@@ -1182,8 +1131,6 @@ def _index_base_name(index_dir) -> str:
     crashed cells-compaction with base_name='codes' finds nothing to
     swap, falls through to the marker unlink, and permanently hides
     the folded rows (round-11 review finding)."""
-    from pathlib import Path
-
     root = Path(index_dir)
     if (root / "cells").exists():
         return "cells"
@@ -1194,43 +1141,93 @@ def _index_base_name(index_dir) -> str:
     )
 
 
-def _compact_finish(index_dir, base_name: str) -> None:
-    """Complete a committed compaction swap (phase 2): delete the
-    folded deltas and move the staged fold in as ``delta={top}``.
-    Idempotent — safe to re-run after a crash at ANY point past the
-    commit marker. Shared by the IVF (``cells``) and SQ8 (``codes``)
-    stream indexes.
+# ---------------------------------------------------------------------------
+# Crash-safe two-phase swaps. Compaction and the drift-driven rebuilds
+# stage their output beside the index (phase 1), atomically write a
+# commit marker holding the top delta they fold (``_compact_commit`` /
+# ``_requant_commit``: the commit point), then swap (phase 2). Every
+# phase-2 step is idempotent, so any crash past the marker is completed
+# by the next entry point that touches the index (:func:`_heal`).
+# ---------------------------------------------------------------------------
 
-    Ordering matters (round-10 fix): the fold is first moved INSIDE
-    the base under a name the ``delta=*`` glob ignores, and the
-    delete-then-rename pair runs only while that fold dir exists. The
-    previous delete-first ordering had a data-loss window — a crash
-    between the final rename and the marker unlink made the re-run
-    delete ``delta={top}`` (the fold itself) with nothing staged to
-    replace it."""
-    import shutil
-    from pathlib import Path
 
-    root = Path(index_dir)
-    base = root / base_name
-    marker = root / "_compact_commit"
-    staged = root / "_compact_tmp"
-    top = int(marker.read_text().strip())
+def _commit_marker(root: Path, name: str, top: int) -> None:
+    """Atomically write the commit marker ``name`` holding ``top``."""
+    tmp = root / f"{name}.tmp"
+    tmp.write_text(str(top))
+    os.replace(tmp, root / name)
+
+
+def _swap_fold(base: Path, staged: Path, top: int) -> None:
+    """Phase 2's one data step, shared by compaction and the rebuilds:
+    move the staged fold INSIDE ``base`` as ``_fold_{top}`` (a name the
+    ``delta=*`` glob ignores), then — only while that fold dir exists —
+    delete every delta ≤ top and rename the fold to ``delta={top}``.
+    Idempotent at every crash point (round-10 fix): the deletes never
+    run without the fold there to replace them, and a finished swap
+    (nothing staged, no fold) is a no-op."""
     fold = base / f"_fold_{top}"
     if staged.exists():
         staged.rename(fold)
     if fold.exists():
         for p in base.glob("delta=*"):
-            if int(p.name.split("=", 1)[1]) <= top:
+            if _hive_int(p) <= top:
                 shutil.rmtree(p)
         fold.rename(base / f"delta={top}")
-    # else: swap already completed by a prior run — only the marker
-    # remains to clear
+
+
+def _compact_finish(index_dir) -> None:
+    """Complete a committed compaction (phase 2): swap the staged fold
+    in as ``delta={top}`` under the base the LAYOUT owns, then clear the
+    marker."""
+    root = Path(index_dir)
+    marker = root / "_compact_commit"
+    base = root / _index_base_name(index_dir)
+    _swap_fold(base, root / "_compact_tmp", int(marker.read_text()))
     marker.unlink()
 
 
-def _ivf_compact_finish(index_dir) -> None:
-    _compact_finish(index_dir, "cells")
+def _requant_finish(index_dir: str) -> None:
+    """Complete a committed requantize/recenter swap (phase 2): install
+    the staged quantizer metadata (scales/centroids), swap the staged
+    fold into its base (:func:`_swap_fold`) and install the staged meta
+    as ``meta_v{top}``. Each staged child is moved only while it
+    exists, so a re-run after a crash at any point is safe. (Order is
+    not load-bearing: the marker gates every reader, so no reader sees
+    new codes with old scales/centroids.)"""
+    root = Path(index_dir)
+    marker = root / "_requant_commit"
+    staged = root / "_requant_tmp"
+    top = int(marker.read_text())
+    for child in ("scales", "centroids"):
+        if (staged / child).exists():
+            shutil.rmtree(root / child, ignore_errors=True)
+            (staged / child).rename(root / child)
+    for base_name in ("codes", "cells"):
+        _swap_fold(root / base_name, staged / base_name, top)
+    if (staged / "meta").exists():
+        mdest = root / f"meta_v{top}"
+        shutil.rmtree(mdest, ignore_errors=True)
+        (staged / "meta").rename(mdest)
+    shutil.rmtree(staged, ignore_errors=True)
+    marker.unlink()
+
+
+def _heal(index_dir) -> None:
+    """Complete any crashed swap before an index is read, probed,
+    maintained, compacted or rebuilt: requantize/recenter first, then
+    compaction. Both orders of hazard are real — a rebuild or a fold
+    over a mid-phase-2 swap would see a PARTIAL delta union (the other
+    swap's fold sits staged as ``_fold_{top}``, which the delta glob
+    ignores) and install a quantizer or fold built from a partial
+    corpus. The compaction base comes from the layout
+    (:func:`_index_base_name`), never from the calling op, so a
+    wrong-kind call still heals without hiding the fold."""
+    root = Path(index_dir)
+    if (root / "_requant_commit").exists():
+        _requant_finish(index_dir)
+    if (root / "_compact_commit").exists():
+        _compact_finish(index_dir)
 
 
 def compact_ivf_stream_index(
@@ -1256,13 +1253,12 @@ def compact_ivf_stream_index(
       Pass the stream's checkpoint dir whenever one exists.
     - **crash safety**: two-phase swap. Phase 1 stages the fold
       OUTSIDE the cells root (the writers.py nested-path rule) and
-      atomically writes a ``_compact_commit`` marker; phase 2 deletes
-      the folded deltas and renames the stage in. A crash before the
-      marker leaves the index untouched (the orphan stage is
-      overwritten next run); a crash after it is completed
-      IDEMPOTENTLY by the next compact (or read) via
-      :func:`_ivf_compact_finish` — the index is never left
-      unreadable.
+      atomically writes a ``_compact_commit`` marker; phase 2
+      (:func:`_swap_fold`) deletes the folded deltas and renames the
+      stage in. A crash before the marker leaves the index untouched
+      (the orphan stage is overwritten next run); a crash after it is
+      completed IDEMPOTENTLY by the next compact (or read) via
+      :func:`_heal` — the index is never left unreadable.
 
     Returns the number of deltas folded."""
     return _compact_stream_deltas(
@@ -1282,24 +1278,8 @@ def _compact_stream_deltas(
     for the full safety argument) over any delta-structured stream
     index: IVF folds ``cells`` partitioned by ``cell``; SQ8 folds the
     flat ``codes`` table."""
-    import os
-    import shutil
-    from pathlib import Path
-
     root = Path(index_dir)
-    base = root / base_name
-    marker = root / "_compact_commit"
-    # Heal BOTH crashed-swap kinds, in reader order (requant first, then
-    # compact — the order read_*_stream_index uses): a requantize that
-    # crashed mid-phase-2 leaves its fold staged as _fold_{top}, which
-    # the delta=* glob below ignores — compacting over it would fold a
-    # PARTIAL delta set and silently drop the rebuilt corpus.
-    if (root / "_requant_commit").exists():
-        _requant_finish(index_dir)
-    if marker.exists():  # finish a crashed predecessor first — with
-        # the base the LAYOUT owns, in case the wrong-kind compact was
-        # called on this dir (healing must never destroy the fold)
-        _compact_finish(index_dir, _index_base_name(index_dir))
+    _heal(index_dir)
     # Kind guard (round-11 advice): a wrong-kind compaction call (e.g.
     # compact_sq8_stream_index on an IVF dir) used to fall through to
     # an empty foreign-base glob and silently return 0 — masking
@@ -1314,13 +1294,11 @@ def _compact_stream_deltas(
                 f"{index_dir} owns '{owned}' deltas, not '{base_name}' — "
                 f"call the matching compact_*_stream_index op"
             )
-    deltas = sorted(
-        (p for p in base.glob("delta=*") if (p / "_SUCCESS").exists()),
-        key=lambda p: int(p.name.split("=", 1)[1]),
-    )
+    base = root / base_name
+    deltas = _complete_deltas(base)
     if len(deltas) <= 1:
         return len(deltas)
-    top = int(deltas[-1].name.split("=", 1)[1])
+    top = _hive_int(deltas[-1])
     _replay_guard(checkpoint, top, "compact")
     staged = root / "_compact_tmp"
     shutil.rmtree(staged, ignore_errors=True)
@@ -1334,10 +1312,8 @@ def _compact_stream_deltas(
     if partition_by:
         fold = fold.partitionBy(partition_by)
     fold.parquet(str(staged))
-    tmp_marker = root / "_compact_commit.tmp"
-    tmp_marker.write_text(str(top))
-    os.replace(tmp_marker, marker)  # the commit point
-    _compact_finish(index_dir, base_name)
+    _commit_marker(root, "_compact_commit", top)
+    _compact_finish(index_dir)
     return len(deltas)
 
 
@@ -1347,27 +1323,12 @@ def compact_sq8_stream_index(
     """Maintenance-boundary compaction for
     :func:`streaming_sq8_index_maintainer`: fold every complete codes
     delta into one (probe-identical before/after — the fold is a pure
-    row reunion of (nbr_id, q8, v, clipped)), with the SAME replay
-    guard and two-phase crash-safe swap as the IVF form
-    (:func:`compact_ivf_stream_index`'s safety argument applies
-    verbatim; a crashed swap is completed idempotently by the next
-    compact or by :func:`read_sq8_stream_index`). Returns the number
-    of deltas folded."""
+    row reunion of (nbr_id, q8, v, clipped)), through the same kernel
+    as the IVF form (:func:`compact_ivf_stream_index`'s replay guard
+    and two-phase swap; a crashed swap is completed by the next
+    compact, read or probe via :func:`_heal`). Returns the number of
+    deltas folded."""
     return _compact_stream_deltas(spark, index_dir, "codes", checkpoint)
-
-
-def _latest_meta_version(index_dir: str) -> int:
-    """Highest complete (``_SUCCESS``-gated) ``meta_v{b}`` version."""
-    from pathlib import Path
-
-    versions = [
-        int(p.name.rsplit("_v", 1)[1])
-        for p in Path(index_dir).glob("meta_v*")
-        if (p / "_SUCCESS").exists()
-    ]
-    if not versions:
-        raise FileNotFoundError(f"no complete meta_v* under {index_dir}")
-    return max(versions)
 
 
 def ann_index_drift(spark, index_dir: str) -> dict:
@@ -1387,10 +1348,8 @@ def ann_index_drift(spark, index_dir: str) -> dict:
 
     Pure metadata read: one ≤cells-row parquet + one scales/centroids
     head — O(index metadata), never O(index)."""
-    from pathlib import Path
-
     root = Path(index_dir)
-    v = _latest_meta_version(index_dir)
+    v = _latest_version(index_dir, "meta")
     meta = spark.read.parquet(str(root / f"meta_v{v}"))
     if (root / "scales" / "_SUCCESS").exists():
         srow = spark.read.parquet(str(root / "scales")).head()
@@ -1426,55 +1385,40 @@ def ann_index_drift(spark, index_dir: str) -> dict:
     )
 
 
-def _requant_finish(index_dir: str) -> None:
-    """Complete a committed requantize/recenter swap (phase 2):
-    idempotent at EVERY crash point past the ``_requant_commit``
-    marker, using the same fold-inside-base discipline as
-    :func:`_compact_finish` (each staged child is moved only while it
-    exists, and the delete-folded-deltas step runs only while the fold
-    dir exists — no delete-then-crash data-loss window)."""
-    import shutil
-    from pathlib import Path
+# kind → (the drift statistic its policy thresholds, the replay-guard verb)
+_DRIFT_POLICY = {"sq8": ("clip_rate", "requantize"), "ivf": ("cell_skew", "recenter")}
 
+
+def _drift_rebuild(spark, index_dir, kind, limit, force, checkpoint, build) -> bool:
+    """The one prologue and commit of the drift-driven rebuilds
+    (:func:`sq8_requantize`, :func:`ivf_recenter`,
+    :func:`ivf_recenter_partial`): heal any crashed swap, read the
+    drift, refuse a wrong-kind index, decline at or below ``limit``
+    unless ``force``, replay-guard the top delta, and reset the
+    ``_requant_tmp`` stage. ``build(drift, union, deltas, staged)`` then
+    fills the stage — the new quantizer metadata, the fold under the
+    base's name, ``meta`` — from the complete delta ``union`` (and, for
+    file-level reuse, the delta dirs); phase 1 commits the
+    ``_requant_commit`` marker and :func:`_requant_finish` swaps.
+    Returns True iff the rebuild fired."""
+    _heal(index_dir)
+    drift = ann_index_drift(spark, index_dir)
+    stat, action = _DRIFT_POLICY[kind]
+    if drift["kind"] != kind:
+        raise ValueError(f"{index_dir} is not an {kind.upper()} index: {drift['kind']}")
+    if not force and drift[stat] <= limit:
+        return False
     root = Path(index_dir)
-    marker = root / "_requant_commit"
+    base = root / _index_base_name(index_dir)
+    deltas = _complete_deltas(base)
+    top = _hive_int(deltas[-1])
+    _replay_guard(checkpoint, top, action)
     staged = root / "_requant_tmp"
-    top = int(marker.read_text().strip())
-    # quantizer metadata first: a reader that completes this swap must
-    # never pair NEW codes with OLD scales/centroids... both orders are
-    # actually crash-equivalent (the marker gates every reader), so the
-    # simple per-child idempotent walk suffices.
-    for child in ("scales", "centroids"):
-        if (staged / child).exists():
-            shutil.rmtree(root / child, ignore_errors=True)
-            (staged / child).rename(root / child)
-    for base_name in ("codes", "cells"):
-        if (staged / base_name).exists() or (root / base_name / f"_fold_{top}").exists():
-            base = root / base_name
-            fold = base / f"_fold_{top}"
-            if (staged / base_name).exists():
-                (staged / base_name).rename(fold)
-            for p in base.glob("delta=*"):
-                if int(p.name.split("=", 1)[1]) <= top:
-                    shutil.rmtree(p)
-            fold.rename(base / f"delta={top}")
-    if (staged / "meta").exists():
-        mdest = root / f"meta_v{top}"
-        shutil.rmtree(mdest, ignore_errors=True)
-        (staged / "meta").rename(mdest)
     shutil.rmtree(staged, ignore_errors=True)
-    marker.unlink()
-
-
-def _requant_commit(index_dir: str, top: int) -> None:
-    """Atomically commit phase 1 of a requantize/recenter swap."""
-    import os
-    from pathlib import Path
-
-    root = Path(index_dir)
-    tmp = root / "_requant_commit.tmp"
-    tmp.write_text(str(top))
-    os.replace(tmp, root / "_requant_commit")
+    build(drift, _read_complete_deltas(spark, base), deltas, staged)
+    _commit_marker(root, "_requant_commit", top)
+    _requant_finish(index_dir)
+    return True
 
 
 def sq8_requantize(
@@ -1491,11 +1435,10 @@ def sq8_requantize(
     re-derive the per-dim scales over the FULL corpus (one distributed
     pass over the delta union; SQ8's operational edge: no codebook to
     retrain), re-encode every vector, fold into one delta, and reset
-    the clip metadata — under the same replay guard and a crash-safe
-    two-phase swap (phase 1 stages scales+codes+meta outside the bases
-    and atomically writes ``_requant_commit``; phase 2 /
-    :func:`_requant_finish` is idempotent at every crash point and is
-    also completed by the next reader). Runs OFFLINE at the
+    the clip metadata. Decision, replay guard and the crash-safe
+    two-phase swap (scales+codes+meta staged, ``_requant_commit``, an
+    idempotent :func:`_requant_finish` also completed by the next
+    reader) are :func:`_drift_rebuild`'s. Runs OFFLINE at the
     maintenance boundary (stream stopped), like compaction.
 
     After the rebuild the frozen scales ARE the corpus's maxima again:
@@ -1512,63 +1455,34 @@ def sq8_requantize(
        rows — total silent loss. ``None`` is only safe for a
        scratch/batch-built index with no streaming checkpoint (the
        sim_sq8_requantize registry plan's posture)."""
-    from pathlib import Path
 
-    root = Path(index_dir)
-    # Heal BOTH crashed-swap kinds, in reader order (requant first, then
-    # compact): a compaction that crashed mid-phase-2 leaves some
-    # delta=* dirs deleted and its fold staged as _fold_{top}, which the
-    # delta glob ignores — requantizing over that PARTIAL union would
-    # derive scales from a partial corpus and install them, after which
-    # the next reader's _compact_finish reinstalls the full OLD-scales
-    # codes against the NEW scales: silently wrong probes.
-    if (root / "_requant_commit").exists():
-        _requant_finish(index_dir)
-    if (root / "_compact_commit").exists():
-        _compact_finish(index_dir, _index_base_name(index_dir))
-    drift = ann_index_drift(spark, index_dir)
-    if drift["kind"] != "sq8":
-        raise ValueError(f"{index_dir} is not an SQ8 index: {drift['kind']}")
-    if not force and drift["clip_rate"] <= max_clip_rate:
-        return False
-    base = root / "codes"
-    deltas = sorted(
-        (p for p in base.glob("delta=*") if (p / "_SUCCESS").exists()),
-        key=lambda p: int(p.name.split("=", 1)[1]),
-    )
-    top = int(deltas[-1].name.split("=", 1)[1])
-    _replay_guard(checkpoint, top, "requantize")
-    dim = drift["dim"]
-    corpus = _read_complete_deltas(spark, base).select("nbr_id", "v")
-    staged = root / "_requant_tmp"
-    import shutil
+    def build(drift, union, deltas, staged):
+        dim = drift["dim"]
+        corpus = union.select("nbr_id", "v")
+        new_scales = sq8_scales(corpus).withColumn("dim", F.lit(dim))
+        srow = new_scales.head()
+        if srow is None or srow["s"] is None or len(srow["s"]) != dim:
+            raise ValueError(
+                f"requantize derived {None if srow is None else srow['s']} "
+                f"scales; expected dim={dim} — index state is corrupt"
+            )
+        new_scales.coalesce(1).write.mode("overwrite").parquet(str(staged / "scales"))
+        frozen = spark.read.parquet(str(staged / "scales"))
+        sq8_encode(corpus, frozen, dim, with_clip_count=True).write.mode(
+            "overwrite"
+        ).parquet(str(staged / "codes"))
+        (
+            spark.read.parquet(str(staged / "codes"))
+            .agg(
+                F.count("*").cast("long").alias("n"),
+                F.sum("clipped").cast("long").alias("clipped"),
+            )
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(str(staged / "meta"))
+        )
 
-    shutil.rmtree(staged, ignore_errors=True)
-    new_scales = sq8_scales(corpus).withColumn("dim", F.lit(dim))
-    srow = new_scales.head()
-    if srow is None or srow["s"] is None or len(srow["s"]) != dim:
-        raise ValueError(
-            f"requantize derived {None if srow is None else srow['s']} "
-            f"scales; expected dim={dim} — index state is corrupt"
-        )
-    new_scales.coalesce(1).write.mode("overwrite").parquet(str(staged / "scales"))
-    frozen = spark.read.parquet(str(staged / "scales"))
-    sq8_encode(corpus, frozen, dim, with_clip_count=True).write.mode(
-        "overwrite"
-    ).parquet(str(staged / "codes"))
-    (
-        spark.read.parquet(str(staged / "codes"))
-        .agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("clipped").cast("long").alias("clipped"),
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(str(staged / "meta"))
-    )
-    _requant_commit(index_dir, top)
-    _requant_finish(index_dir)
-    return True
+    return _drift_rebuild(spark, index_dir, "sq8", max_clip_rate, force, checkpoint, build)
 
 
 def ivf_recenter(
@@ -1585,11 +1499,12 @@ def ivf_recenter(
     if max(n)/mean(n) exceeds ``max_cell_skew`` (or ``force``), retrain
     the DETERMINISTIC quantizer (cluster.deterministic_lloyd_assign —
     md5-seeded, replayable) over the full delta union, re-assign every
-    vector, and swap centroids+cells+meta with the same replay guard
-    and crash-safe two-phase commit. The retrained index is
-    bit-identical to a from-scratch deterministic batch build over the
-    same corpus (the sim_ivf_recenter registry oracle). Returns True
-    iff the rebuild fired.
+    vector, and swap centroids+cells+meta through
+    :func:`_drift_rebuild` (replay guard, crash-safe two-phase commit).
+    The retrained index is bit-identical to a from-scratch
+    deterministic batch build over the same corpus (the
+    sim_ivf_recenter registry oracle). Returns True iff the rebuild
+    fired.
 
     .. warning:: **Pass ``checkpoint`` whenever the index has a live
        maintainer** — ``checkpoint=None`` disables the replay guard,
@@ -1598,62 +1513,34 @@ def ivf_recenter(
        index down to that batch's rows (see :func:`sq8_requantize`'s
        warning; the scratch-index registry plan is the only safe
        ``None`` caller)."""
-    from pathlib import Path
 
-    from the_framework_for_clustering_time_series_data_spark.operators.cluster import deterministic_lloyd_assign
+    def build(drift, union, deltas, staged):
+        k = n_cells if n_cells is not None else drift["n_cells"]
+        assign, cdf = deterministic_lloyd_assign(
+            union.select("nbr_id", "v"), k, id_col="nbr_id", vec_col="v",
+            lloyd_rounds=lloyd_rounds,
+        )
+        cdf.select(
+            F.col("cell").cast("int").alias("cell"), F.col("cvec").alias("center")
+        ).coalesce(1).write.mode("overwrite").parquet(str(staged / "centroids"))
+        (
+            assign.select(F.col("id").alias("nbr_id"), "v", "cell")
+            .repartition("cell")  # one file per cell (delta small-file fix)
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(str(staged / "cells"))
+        )
+        (
+            spark.read.option("basePath", str(staged / "cells"))
+            .parquet(str(staged / "cells"))
+            .groupBy("cell")
+            .agg(F.count("*").cast("long").alias("n"))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(str(staged / "meta"))
+        )
 
-    root = Path(index_dir)
-    # Heal BOTH crashed-swap kinds, in reader order (requant first, then
-    # compact) — same hazard as sq8_requantize: recentring over a
-    # mid-phase-2 compaction's partial delta union would retrain the
-    # quantizer on a partial corpus and lose the staged fold.
-    if (root / "_requant_commit").exists():
-        _requant_finish(index_dir)
-    if (root / "_compact_commit").exists():
-        _compact_finish(index_dir, _index_base_name(index_dir))
-    drift = ann_index_drift(spark, index_dir)
-    if drift["kind"] != "ivf":
-        raise ValueError(f"{index_dir} is not an IVF index: {drift['kind']}")
-    if not force and drift["cell_skew"] <= max_cell_skew:
-        return False
-    base = root / "cells"
-    deltas = sorted(
-        (p for p in base.glob("delta=*") if (p / "_SUCCESS").exists()),
-        key=lambda p: int(p.name.split("=", 1)[1]),
-    )
-    top = int(deltas[-1].name.split("=", 1)[1])
-    _replay_guard(checkpoint, top, "recenter")
-    k = n_cells if n_cells is not None else drift["n_cells"]
-    corpus = _read_complete_deltas(spark, base).select("nbr_id", "v")
-    staged = root / "_requant_tmp"
-    import shutil
-
-    shutil.rmtree(staged, ignore_errors=True)
-    assign, cdf = deterministic_lloyd_assign(
-        corpus, k, id_col="nbr_id", vec_col="v", lloyd_rounds=lloyd_rounds
-    )
-    cdf.select(
-        F.col("cell").cast("int").alias("cell"), F.col("cvec").alias("center")
-    ).coalesce(1).write.mode("overwrite").parquet(str(staged / "centroids"))
-    (
-        assign.select(F.col("id").alias("nbr_id"), "v", "cell")
-        .repartition("cell")  # one file per cell (delta small-file fix)
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(str(staged / "cells"))
-    )
-    (
-        spark.read.option("basePath", str(staged / "cells"))
-        .parquet(str(staged / "cells"))
-        .groupBy("cell")
-        .agg(F.count("*").cast("long").alias("n"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(str(staged / "meta"))
-    )
-    _requant_commit(index_dir, top)
-    _requant_finish(index_dir)
-    return True
+    return _drift_rebuild(spark, index_dir, "ivf", max_cell_skew, force, checkpoint, build)
 
 
 def ivf_recenter_partial(
@@ -1685,177 +1572,149 @@ def ivf_recenter_partial(
     the current max, ordered by (hot cell id, sub index), so cold cell
     ids — and their dynamic-partition-pruned layouts — never move.
 
-    Same replay guard + crash-safe two-phase swap as the full form
-    (and the same loud ``checkpoint=None`` hazard:
-    see :func:`sq8_requantize`'s warning). Returns True iff it fired."""
-    from pathlib import Path
-
-    from pyspark.sql.window import Window
-
-    from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import stage_checkpoint
-    from the_framework_for_clustering_time_series_data_spark.operators.cluster import md5_lloyd
-
+    Decision, replay guard and crash-safe two-phase swap are
+    :func:`_drift_rebuild`'s, as for the full form (and the same loud
+    ``checkpoint=None`` hazard: see :func:`sq8_requantize`'s warning).
+    Returns True iff it fired."""
     root = Path(index_dir)
-    if (root / "_requant_commit").exists():
-        _requant_finish(index_dir)
-    if (root / "_compact_commit").exists():
-        _compact_finish(index_dir, _index_base_name(index_dir))
-    drift = ann_index_drift(spark, index_dir)
-    if drift["kind"] != "ivf":
-        raise ValueError(f"{index_dir} is not an IVF index: {drift['kind']}")
-    if not force and drift["cell_skew"] <= max_cell_skew:
-        return False
-    base = root / "cells"
-    deltas = sorted(
-        (p for p in base.glob("delta=*") if (p / "_SUCCESS").exists()),
-        key=lambda p: int(p.name.split("=", 1)[1]),
-    )
-    top = int(deltas[-1].name.split("=", 1)[1])
-    _replay_guard(checkpoint, top, "recenter")
 
-    cent = spark.read.parquet(str(root / "centroids"))
-    cent_ids = sorted(int(r["cell"]) for r in cent.collect())
-    n_cells = len(cent_ids)
-    # per-cell counts come from the maintainer's VERSIONED metadata —
-    # ≤n_cells rows, never a corpus scan (they equal the delta union's
-    # counts by the maintainer's determinism, which the registry
-    # oracle's replay asserts)
-    v = _latest_meta_version(index_dir)
-    counts = {
-        int(r["cell"]): int(r["n"])
-        for r in spark.read.parquet(str(root / f"meta_v{v}")).collect()
-    }
-    total = sum(counts.values())
-    hot = sorted(
-        c for c, n in counts.items() if n * n_cells * 5 > 6 * total
-    )
-    fallback = not hot
-    if fallback:
-        mx = max(counts.values())
-        hot = [min(c for c, n in counts.items() if n == mx)]
-    # Policy-cleared cells have n·k/total > 1.2, so their ceil is ≥ 2
-    # by construction. The argmax FALLBACK can land on a perfectly
-    # balanced cell where ceil == 1 — a pure renumber that rewrites
-    # the worst cell without reducing skew; clamp it to 2 so a rebuild
-    # that fires always splits (round-11 advice; mirrored verbatim in
-    # _ivf_partial_oracle_sql's hot CTE).
-    kc = {
-        c: max(2, -(-(counts[c] * n_cells) // total)) if fallback
-        else -(-(counts[c] * n_cells) // total)
-        for c in hot
-    }
-    base_id = max(cent_ids) + 1
-    new_id = {}
-    off = base_id
-    for c in hot:  # ordered by cell id — the oracle's cumsum order
-        for j in range(kc[c]):
-            new_id[(c, j)] = off + j
-        off += kc[c]
-
-    hot_lit = [int(c) for c in hot]
-    kc_df = F.broadcast(
-        spark.createDataFrame(
-            [(c, kc[c]) for c in hot], "cell int, kc int"
+    def build(drift, union, deltas, staged):
+        cent = spark.read.parquet(str(root / "centroids"))
+        cent_ids = sorted(int(r["cell"]) for r in cent.collect())
+        n_cells = len(cent_ids)
+        # per-cell counts come from the maintainer's VERSIONED metadata —
+        # ≤n_cells rows, never a corpus scan (they equal the delta union's
+        # counts by the maintainer's determinism, which the registry
+        # oracle's replay asserts)
+        counts = {
+            int(r["cell"]): int(r["n"])
+            for r in _read_latest(spark, index_dir, "meta").collect()
+        }
+        total = sum(counts.values())
+        hot = sorted(
+            c for c, n in counts.items() if n * n_cells * 5 > 6 * total
         )
-    )
-    union = _read_complete_deltas(spark, base).select("nbr_id", "v", "cell")
-    # hm is hot-cell members ONLY; the literal isin filter statically
-    # prunes the hive (delta, cell) layout, so the cold majority is
-    # never even SCANNED — it folds through below as hard links
-    hm = (
-        union.where(F.col("cell").isin(hot_lit))
-        .join(kc_df, "cell")
-        .transform(stage_checkpoint, eager=True)
-    )
-    # per-hot-cell md5 seeds: the kc smallest-md5(id) members, ranked
-    # within their cell (key "hot"; the kernel's cell is the sub-cell)
-    w_seed = Window.partitionBy("cell").orderBy(
-        F.md5(F.col("nbr_id").cast("string")), "nbr_id"
-    )
-    seeds = (
-        hm.withColumn("_rn", F.row_number().over(w_seed))
-        .where(F.col("_rn") <= F.col("kc"))
-        .select(
-            F.col("cell").alias("hot"),
-            (F.col("_rn") - 1).alias("cell"),
-            F.col("v").alias("cvec"),
-        )
-    )
-    a2, cdf = md5_lloyd(
-        hm.select(F.col("cell").alias("hot"), F.col("nbr_id").alias("id"), "v"),
-        seeds,
-        keys=("hot",),
-        rounds=lloyd_rounds,
-    )
-    # two consumers (the staged write + the sub-cell meta counts):
-    # materialize once or the hot Lloyd assign runs twice
-    a2 = a2.transform(stage_checkpoint, eager=True)
+        fallback = not hot
+        if fallback:
+            mx = max(counts.values())
+            hot = [min(c for c, n in counts.items() if n == mx)]
+        # Policy-cleared cells have n·k/total > 1.2, so their ceil is ≥ 2
+        # by construction. The argmax FALLBACK can land on a perfectly
+        # balanced cell where ceil == 1 — a pure renumber that rewrites
+        # the worst cell without reducing skew; clamp it to 2 so a rebuild
+        # that fires always splits (round-11 advice; mirrored verbatim in
+        # _ivf_partial_oracle_sql's hot CTE).
+        kc = {
+            c: max(2, -(-(counts[c] * n_cells) // total)) if fallback
+            else -(-(counts[c] * n_cells) // total)
+            for c in hot
+        }
+        base_id = max(cent_ids) + 1
+        new_id = {}
+        off = base_id
+        for c in hot:  # ordered by cell id — the oracle's cumsum order
+            for j in range(kc[c]):
+                new_id[(c, j)] = off + j
+            off += kc[c]
 
-    ren = F.broadcast(
-        spark.createDataFrame(
-            [(c, j, nid) for (c, j), nid in new_id.items()],
-            "hot int, cell int, ncell int",
-        )
-    )
-    import shutil
-
-    staged = root / "_requant_tmp"
-    shutil.rmtree(staged, ignore_errors=True)
-    new_cent = (
-        cent.where(~F.col("cell").isin(hot_lit))
-        .unionByName(
-            cdf.join(ren, ["hot", "cell"]).select(
-                F.col("ncell").cast("int").alias("cell"),
-                F.col("cvec").alias("center"),
+        hot_lit = [int(c) for c in hot]
+        kc_df = F.broadcast(
+            spark.createDataFrame(
+                [(c, kc[c]) for c in hot], "cell int, kc int"
             )
         )
-    )
-    new_cent.coalesce(1).write.mode("overwrite").parquet(str(staged / "centroids"))
-    # hot sub-cells are the ONLY rows Spark writes; cold cells fold
-    # through via _fold_file — hard links locally, byte-copy where
-    # links don't exist (object stores) — zero/minimal IO for the cold
-    # majority, and the sources stay intact until phase 2 (the
-    # two-phase swap's contract: phase 1 must not destroy anything)
-    (
-        a2.join(ren, ["hot", "cell"])
-        .select(F.col("id").alias("nbr_id"), "v", F.col("ncell").alias("cell"))
-        .repartition("cell")  # one file per cell (small-file fix)
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(str(staged / "cells"))
-    )
-    for d in deltas:
-        dn = d.name.split("=", 1)[1]
-        for cdir in d.glob("cell=*"):
-            if int(cdir.name.split("=", 1)[1]) in kc:
-                continue  # hot cell — replaced by its sub-cells
-            dest = staged / "cells" / cdir.name
-            dest.mkdir(parents=True, exist_ok=True)
-            for f in cdir.glob("*.parquet"):
-                _fold_file(f, dest / f"d{dn}_{f.name}")
-    # the fold's _SUCCESS covers the linked tree too (written by the
-    # hot-cell write above; the links land after it but before the
-    # commit marker, which is the only gate readers honor)
-    sub_counts = {
-        (int(r["cell"])): int(r["n"])
-        for r in a2.join(ren, ["hot", "cell"])
-        .groupBy("ncell")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("ncell").alias("cell"), "n")
-        .collect()
-    }
-    meta_rows = [
-        (int(c), int(n)) for c, n in counts.items() if c not in kc
-    ] + sorted(sub_counts.items())
-    (
-        spark.createDataFrame(meta_rows, "cell int, n long")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(str(staged / "meta"))
-    )
-    _requant_commit(index_dir, top)
-    _requant_finish(index_dir)
-    return True
+        # hm is hot-cell members ONLY; the literal isin filter statically
+        # prunes the hive (delta, cell) layout, so the cold majority is
+        # never even SCANNED — it folds through below as hard links
+        hm = (
+            union.select("nbr_id", "v", "cell")
+            .where(F.col("cell").isin(hot_lit))
+            .join(kc_df, "cell")
+            .transform(stage_checkpoint, eager=True)
+        )
+        # per-hot-cell md5 seeds: the kc smallest-md5(id) members, ranked
+        # within their cell (key "hot"; the kernel's cell is the sub-cell)
+        w_seed = Window.partitionBy("cell").orderBy(
+            F.md5(F.col("nbr_id").cast("string")), "nbr_id"
+        )
+        seeds = (
+            hm.withColumn("_rn", F.row_number().over(w_seed))
+            .where(F.col("_rn") <= F.col("kc"))
+            .select(
+                F.col("cell").alias("hot"),
+                (F.col("_rn") - 1).alias("cell"),
+                F.col("v").alias("cvec"),
+            )
+        )
+        a2, cdf = md5_lloyd(
+            hm.select(F.col("cell").alias("hot"), F.col("nbr_id").alias("id"), "v"),
+            seeds,
+            keys=("hot",),
+            rounds=lloyd_rounds,
+        )
+        # two consumers (the staged write + the sub-cell meta counts):
+        # materialize once or the hot Lloyd assign runs twice
+        a2 = a2.transform(stage_checkpoint, eager=True)
+
+        ren = F.broadcast(
+            spark.createDataFrame(
+                [(c, j, nid) for (c, j), nid in new_id.items()],
+                "hot int, cell int, ncell int",
+            )
+        )
+        new_cent = (
+            cent.where(~F.col("cell").isin(hot_lit))
+            .unionByName(
+                cdf.join(ren, ["hot", "cell"]).select(
+                    F.col("ncell").cast("int").alias("cell"),
+                    F.col("cvec").alias("center"),
+                )
+            )
+        )
+        new_cent.coalesce(1).write.mode("overwrite").parquet(str(staged / "centroids"))
+        # hot sub-cells are the ONLY rows Spark writes; cold cells fold
+        # through via _fold_file — hard links locally, byte-copy where
+        # links don't exist (object stores) — zero/minimal IO for the cold
+        # majority, and the sources stay intact until phase 2 (the
+        # two-phase swap's contract: phase 1 must not destroy anything)
+        (
+            a2.join(ren, ["hot", "cell"])
+            .select(F.col("id").alias("nbr_id"), "v", F.col("ncell").alias("cell"))
+            .repartition("cell")  # one file per cell (small-file fix)
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(str(staged / "cells"))
+        )
+        for d in deltas:
+            for cdir in d.glob("cell=*"):
+                if _hive_int(cdir) in kc:
+                    continue  # hot cell — replaced by its sub-cells
+                dest = staged / "cells" / cdir.name
+                dest.mkdir(parents=True, exist_ok=True)
+                for f in cdir.glob("*.parquet"):
+                    _fold_file(f, dest / f"d{_hive_int(d)}_{f.name}")
+        # the fold's _SUCCESS covers the linked tree too (written by the
+        # hot-cell write above; the links land after it but before the
+        # commit marker, which is the only gate readers honor)
+        sub_counts = {
+            (int(r["cell"])): int(r["n"])
+            for r in a2.join(ren, ["hot", "cell"])
+            .groupBy("ncell")
+            .agg(F.count("*").alias("n"))
+            .select(F.col("ncell").alias("cell"), "n")
+            .collect()
+        }
+        meta_rows = [
+            (int(c), int(n)) for c, n in counts.items() if c not in kc
+        ] + sorted(sub_counts.items())
+        (
+            spark.createDataFrame(meta_rows, "cell int, n long")
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(str(staged / "meta"))
+        )
+
+    return _drift_rebuild(spark, index_dir, "ivf", max_cell_skew, force, checkpoint, build)
 
 
 def streaming_ivf_probe(
@@ -1866,10 +1725,7 @@ def streaming_ivf_probe(
     metadata picks each query's nprobe cells, then the SAME
     _ivf_probe_scored tail every IVF variant uses scores only
     same-cell candidates across the delta union."""
-    from pathlib import Path
-
-    if (Path(index_dir) / "_requant_commit").exists():
-        _requant_finish(index_dir)  # never pair old centroids with new cells
+    _heal(index_dir)  # never pair old centroids with new cells
     centers, cell_ids = _load_centroids(spark, index_dir)
     cells = read_ivf_stream_index(spark, index_dir)
     qs = queries.select(
@@ -1921,12 +1777,9 @@ def sq8_maintain_batch(
     drift signal (a rising clip rate means the frozen scales no longer
     cover the distribution — a re-quantize/rebuild event, exactly the
     role per-cell counts play for the IVF maintainer)."""
-    from pathlib import Path
-
     sp = batch_df.sparkSession
     root = Path(index_dir)
-    if (root / "_requant_commit").exists():
-        _requant_finish(index_dir)  # complete a crashed requantize swap first
+    _heal(index_dir)  # complete a crashed requantize/compaction swap first
     # 2-3 consumers per batch (empty-guard / scale freeze / encode
     # write) over a foreachBatch frame that re-scans its source files
     # per action: persist so each batch's files are read once (the
@@ -1934,6 +1787,7 @@ def sq8_maintain_batch(
     corpus = _r6_corpus(batch_df, id_col, vec_col).persist()
     try:
         sdir = root / "scales"
+        delta_dir = root / "codes" / f"delta={batch_id + 1}"
         if not (sdir / "_SUCCESS").exists() and corpus.isEmpty():
             # batch 0 (or any pre-freeze batch) is EMPTY: freezing now would
             # permanently poison the index with s=[] — every later batch
@@ -1947,71 +1801,47 @@ def sq8_maintain_batch(
                 "v",
                 F.lit(0).cast("long").alias("clipped"),
             )
-            delta_dir = root / "codes" / f"delta={batch_id + 1}"
             empty.coalesce(1).write.mode("overwrite").parquet(str(delta_dir))
-            m0 = root / "meta_v0"
-            if not (m0 / "_SUCCESS").exists():
-                sp.createDataFrame([], "n long, clipped long").write.mode(
-                    "overwrite"
-                ).parquet(str(m0))
-            zero = sp.createDataFrame([(0, 0)], "n long, clipped long")
-            (
-                sp.read.parquet(str(root / f"meta_v{batch_id}"))
-                .unionByName(zero)
-                .agg(
-                    F.sum("n").cast("long").alias("n"),
-                    F.sum("clipped").cast("long").alias("clipped"),
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(str(root / f"meta_v{batch_id + 1}"))
-            )
-            return
-        if not (sdir / "_SUCCESS").exists():
-            frozen = sq8_scales(corpus).withColumn("dim", F.lit(dim))
-            srow = frozen.head()
-            if srow is None or srow["s"] is None or len(srow["s"]) != dim:
-                got = None if srow is None or srow["s"] is None else len(srow["s"])
-                raise ValueError(
-                    f"sq8 scale freeze derived {got} dims from batch {batch_id} "
-                    f"but the index is declared dim={dim} — refusing to freeze "
-                    "a layout that would encode NULL code components"
-                )
-            frozen.coalesce(1).write.mode("overwrite").parquet(str(sdir))
-        scales = sp.read.parquet(str(sdir))
-        _validate_sq8_scales(scales, dim, index_dir)
-        # ONE evaluation of the micro-batch: the per-row saturation count
-        # rides along in the encoded delta (with_clip_count — |raw| > 127,
-        # the actual clamp criterion), and the metadata fold aggregates
-        # the just-written parquet instead of re-scanning the source
-        # (review findings: double evaluation + |v| > s overcount)
-        delta_dir = root / "codes" / f"delta={batch_id + 1}"
-        sq8_encode(corpus, scales, dim, with_clip_count=True).write.mode(
-            "overwrite"
-        ).parquet(str(delta_dir))
-        m0 = root / "meta_v0"
-        if not (m0 / "_SUCCESS").exists():
-            sp.createDataFrame([], "n long, clipped long").write.mode(
+            part = sp.createDataFrame([(0, 0)], "n long, clipped long")
+        else:
+            if not (sdir / "_SUCCESS").exists():
+                frozen = sq8_scales(corpus).withColumn("dim", F.lit(dim))
+                srow = frozen.head()
+                if srow is None or srow["s"] is None or len(srow["s"]) != dim:
+                    got = None if srow is None or srow["s"] is None else len(srow["s"])
+                    raise ValueError(
+                        f"sq8 scale freeze derived {got} dims from batch {batch_id} "
+                        f"but the index is declared dim={dim} — refusing to freeze "
+                        "a layout that would encode NULL code components"
+                    )
+                frozen.coalesce(1).write.mode("overwrite").parquet(str(sdir))
+            scales = sp.read.parquet(str(sdir))
+            _validate_sq8_scales(scales, dim, index_dir)
+            # ONE evaluation of the micro-batch: the per-row saturation count
+            # rides along in the encoded delta (with_clip_count — |raw| > 127,
+            # the actual clamp criterion), and the metadata fold aggregates
+            # the just-written parquet instead of re-scanning the source
+            # (review findings: double evaluation + |v| > s overcount)
+            sq8_encode(corpus, scales, dim, with_clip_count=True).write.mode(
                 "overwrite"
-            ).parquet(str(m0))
-        cur = sp.read.parquet(str(root / f"meta_v{batch_id}"))
-        part = sp.read.parquet(str(delta_dir)).agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("clipped").cast("long").alias("clipped"),
-        )
-        (
+            ).parquet(str(delta_dir))
+            part = sp.read.parquet(str(delta_dir)).agg(
+                F.count("*").cast("long").alias("n"),
+                F.sum("clipped").cast("long").alias("clipped"),
+            )
+        cur = _read_version(sp, index_dir, "meta", batch_id, "n long, clipped long")
+        _write_version(
             cur.unionByName(part)
             .agg(
                 F.sum("n").cast("long").alias("n"),
                 F.sum("clipped").cast("long").alias("clipped"),
             )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(str(root / f"meta_v{batch_id + 1}"))
+            .coalesce(1),
+            index_dir, "meta", batch_id,
         )
     finally:
-        # unpersist on EVERY exit — incl. the empty-batch early
-        # return and the dim-mismatch freeze ValueError
+        # unpersist on EVERY exit — incl. the dim-mismatch freeze
+        # ValueError
         corpus.unpersist()
 
 
@@ -2048,14 +1878,7 @@ def streaming_sq8_index_maintainer(
             id_col=id_col, vec_col=vec_col,
         )
 
-    q = (
-        vectors.writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q._maintain_fn = maintain  # exposed for idempotence tests
-    return q
+    return _start_batches(vectors, maintain, checkpoint)
 
 
 def read_sq8_stream_index(spark, index_dir: str) -> DataFrame:
@@ -2063,15 +1886,9 @@ def read_sq8_stream_index(spark, index_dir: str) -> DataFrame:
     every complete (``_SUCCESS``-gated) codes delta read as one scan
     under the shared ``codes`` base — shaped like the persisted-PQ
     codes table: ``(nbr_id, q8, v)`` plus the ``delta`` lineage
-    column. A committed-but-unfinished compaction swap is completed
-    here first (the read_ivf_stream_index discipline) — the index is
-    readable at every crash point."""
-    from pathlib import Path
-
-    if (Path(index_dir) / "_requant_commit").exists():
-        _requant_finish(index_dir)
-    if (Path(index_dir) / "_compact_commit").exists():
-        _compact_finish(index_dir, "codes")
+    column. A crashed swap is completed first (:func:`_heal`) — the
+    index is readable at every crash point."""
+    _heal(index_dir)
     return _read_complete_deltas(spark, Path(index_dir) / "codes")
 
 
@@ -2083,10 +1900,7 @@ def sq8_probe_stream_index(
     against the SAME frozen scales the deltas used, then the shared
     similarity.sq8_rank tail (int64 dot scan + bounded exact re-rank)
     runs over the delta union."""
-    from pathlib import Path
-
-    if (Path(index_dir) / "_requant_commit").exists():
-        _requant_finish(index_dir)  # never pair old scales with new codes
+    _heal(index_dir)  # never pair old scales with new codes
     scales = spark.read.parquet(f"{index_dir}/scales")
     _validate_sq8_scales(scales, dim, index_dir)
     codes = read_sq8_stream_index(spark, index_dir)
@@ -2103,49 +1917,21 @@ def read_mv_rollup(spark, target_dir: str) -> DataFrame:
     fold the latest complete (``_SUCCESS``-gated) partial snapshot
     through the batch plan's mv_merge_partials — schema-identical to
     mv_incremental_rollup's output."""
-    from pathlib import Path
-
     from the_framework_for_clustering_time_series_data_spark.plans.event_plans import mv_merge_partials
 
-    versions = sorted(
-        int(p.name.rsplit("_v", 1)[1])
-        for p in Path(target_dir).glob("partials_v*")
-        if (p / "_SUCCESS").exists()
-    )
-    if not versions:
-        raise FileNotFoundError(
-            f"no complete partials_v* snapshot (with _SUCCESS) under {target_dir}"
-        )
-    return mv_merge_partials(
-        spark.read.parquet(f"{target_dir}/partials_v{versions[-1]}")
-    )
+    return mv_merge_partials(_read_latest(spark, target_dir, "partials"))
 
 
 def read_merge_target(spark, target_dir: str) -> DataFrame:
     """Serving-state reader for :func:`streaming_merge_apply`: the
-    highest target version, tombstones filtered, with the batch plan's
-    ``action`` column reconstructed from provenance (never touched →
-    kept; touched base row → updated; touched non-base row →
-    inserted) so the final state is schema-comparable to
-    cdc_merge_apply's output.
-
-    Reads the highest version that carries a ``_SUCCESS`` marker —
-    plain parquet overwrite is not atomic, so a concurrently running
-    stream (or a crash mid-write of ``target_v{b+1}``) can leave a
-    partially written top directory; the marker is committed last, so
-    marker-gated selection always reads a complete snapshot."""
-    from pathlib import Path
-
-    versions = sorted(
-        int(p.name.rsplit("_v", 1)[1])
-        for p in Path(target_dir).glob("target_v*")
-        if (p / "_SUCCESS").exists()
-    )
-    if not versions:
-        raise FileNotFoundError(
-            f"no complete target_v* snapshot (with _SUCCESS) under {target_dir}"
-        )
-    df = spark.read.parquet(f"{target_dir}/target_v{versions[-1]}")
+    highest complete target version (:func:`_read_latest` — plain
+    parquet overwrite is not atomic, so a running stream or a crash
+    mid-write can leave a partial top directory), tombstones filtered,
+    with the batch plan's ``action`` column reconstructed from
+    provenance (never touched → kept; touched base row → updated;
+    touched non-base row → inserted) so the final state is
+    schema-comparable to cdc_merge_apply's output."""
+    df = _read_latest(spark, target_dir, "target")
     return df.where(~F.col("is_deleted")).select(
         "custkey",
         "name",
