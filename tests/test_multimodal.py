@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
-from the_framework_for_clustering_time_series_data_spark.operators import multimodal
+from the_framework_for_clustering_time_series_data_spark.operators import dedup, multimodal
 from the_framework_for_clustering_time_series_data_spark.sources.tables import load_table
 
 
@@ -2020,8 +2020,8 @@ def test_phash_neardup_planted_recall_with_downscale(spark):
     hashes = multimodal.image_phash(df)
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in multimodal.phash_neardup_pairs(
-            hashes, bands=4, max_hamming=3
+        for r in dedup.hamming_pairs(
+            hashes, id_col="image_id", lanes=("dhash",), bands=4, max_hamming=3
         ).collect()
     }
     planted = {(2 * i, 2 * i + 1) for i in range(20)}
@@ -2034,7 +2034,9 @@ def test_phash_pigeonhole_requires_valid_threshold(spark):
 
     df = spark.createDataFrame([(0, 0)], "image_id long, dhash long")
     with pytest.raises(ValueError, match="pigeonhole"):
-        multimodal.phash_neardup_pairs(df, bands=4, max_hamming=4)
+        dedup.hamming_pairs(
+            df, id_col="image_id", lanes=("dhash",), bands=4, max_hamming=4
+        )
 
 
 def test_y4m_synthesis_parses_and_plants_3of4(spark):
@@ -2107,8 +2109,8 @@ def test_wav_synthesis_roundtrip_and_planted_hamming(spark):
     fps = multimodal.audio_fingerprint(clips)
     pairs = {
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in multimodal.phash_neardup_pairs(
-            fps, id_col="audio_id", hash_col="afp", bands=4, max_hamming=3
+        for r in dedup.hamming_pairs(
+            fps, id_col="audio_id", lanes=("afp",), bands=4, max_hamming=3
         ).collect()
     }
     ids = sorted({p[0] for p in pairs} | {p[1] for p in pairs})
@@ -2153,8 +2155,8 @@ def test_phash_banding_equals_brute_force(spark):
     df = spark.createDataFrame(rows, "image_id long, dhash long")
     got = {
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in multimodal.phash_neardup_pairs(
-            df, bands=4, max_hamming=3
+        for r in dedup.hamming_pairs(
+            df, id_col="image_id", lanes=("dhash",), bands=4, max_hamming=3
         ).collect()
     }
     mask = (1 << 64) - 1
@@ -2222,8 +2224,8 @@ def test_phash128_wide_banding_equals_brute_force(spark):
     df = spark.createDataFrame(rows, "image_id long, dhash long, ahash long")
     got = {
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in multimodal.phash128_neardup_pairs(
-            df, bands=4, max_hamming=3
+        for r in dedup.hamming_pairs(
+            df, id_col="image_id", lanes=("dhash", "ahash"), bands=4, max_hamming=3
         ).collect()
     }
     mask = (1 << 64) - 1
@@ -2243,8 +2245,8 @@ def test_phash128_wide_banding_equals_brute_force(spark):
     # 8-band (16-bit key) configuration still agrees at its threshold
     got8 = {
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in multimodal.phash128_neardup_pairs(
-            df, bands=8, max_hamming=5
+        for r in dedup.hamming_pairs(
+            df, id_col="image_id", lanes=("dhash", "ahash"), bands=8, max_hamming=5
         ).collect()
     }
     expect8 = set()
@@ -2263,9 +2265,13 @@ def test_phash128_wide_rejects_bad_band_configs():
     import pytest
 
     with pytest.raises(ValueError, match="pigeonhole"):
-        multimodal.phash128_neardup_pairs(None, bands=4, max_hamming=4)
+        dedup.hamming_pairs(
+            None, id_col="image_id", lanes=("dhash", "ahash"), bands=4, max_hamming=4
+        )
     with pytest.raises(ValueError, match="even"):
-        multimodal.phash128_neardup_pairs(None, bands=5, max_hamming=3)
+        dedup.hamming_pairs(
+            None, id_col="image_id", lanes=("dhash", "ahash"), bands=5, max_hamming=3
+        )
 
 
 def test_afp64_mean_lane_kernel():
@@ -2299,10 +2305,10 @@ def test_wav_wide_fingerprint_planted_pairs(spark):
     fps = multimodal.audio_fingerprint_wide(clips)
     pairs = {
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in multimodal.phash128_neardup_pairs(
+        for r in dedup.hamming_pairs(
             fps,
             id_col="audio_id",
-            lane_cols=("afp", "afp_mean"),
+            lanes=("afp", "afp_mean"),
             bands=8,
             max_hamming=7,
         ).collect()

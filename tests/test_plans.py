@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_ORACLE
@@ -518,51 +519,6 @@ def test_zorder_audit_no_fact_table_single_partition(spark):
     assert not _re.search(r"Window \[ntile", plan)
 
 
-def test_prefix_filter_jaccard_lossless(spark):
-    """PPJoin prefix filtering must be LOSSLESS: identical output to
-    the full inverted-index join at every threshold — on the real
-    table and on a synthetic corpus dense with near-dups (shared
-    boilerplate + overlapping windows), where a broken prefix bound
-    would actually drop pairs."""
-    from the_framework_for_clustering_time_series_data_spark.operators import dedup as dd
-    from the_framework_for_clustering_time_series_data_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_ORACLE, "documents")
-    for t in (0.15, 0.4):
-        base = set(
-            map(tuple, dd.ngram_jaccard_pairs(docs, threshold=t, n=3).collect())
-        )
-        pf = set(
-            map(
-                tuple,
-                dd.ngram_jaccard_pairs(
-                    docs, threshold=t, n=3, prefix_filter=True
-                ).collect(),
-            )
-        )
-        assert base == pf and base
-
-    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
-    rows = []
-    for i in range(60):
-        body = " ".join(words[(i + j) % len(words)] for j in range(12))
-        rows.append((i, "common header boilerplate " + body))
-    syn = spark.createDataFrame(rows, "doc_id long, text string")
-    for t in (0.1, 0.3, 0.6, 0.9):
-        base = set(
-            map(tuple, dd.ngram_jaccard_pairs(syn, threshold=t, n=2).collect())
-        )
-        pf = set(
-            map(
-                tuple,
-                dd.ngram_jaccard_pairs(
-                    syn, threshold=t, n=2, prefix_filter=True
-                ).collect(),
-            )
-        )
-        assert base == pf
-
-
 def test_prefix_filter_boundary_lossless(spark):
     """The two boundary cases a naive prefix bound drops (ADVICE r4):
     (a) float-ceil overshoot — 0.55*100 = 55.000000000000007 → ceil 56
@@ -572,7 +528,8 @@ def test_prefix_filter_boundary_lossless(spark):
     (round(5/9, 6) = 0.555556 ≥ t = 0.555556 while 5/9 < t). n=1
     shingles make the token sets the shingle sets exactly, and the
     doc-frequency canonical order puts every shared shingle AFTER the
-    A-only ones — the worst case for the prefix."""
+    A-only ones — the worst case for the prefix. The exact
+    inverted-index join must admit both pairs."""
     from the_framework_for_clustering_time_series_data_spark.operators import dedup as dd
 
     # (a) |A| = 100 unique tokens, B = 55-token subset → J = 0.55 = t
@@ -582,13 +539,10 @@ def test_prefix_filter_boundary_lossless(spark):
         [(0, " ".join(a_only + shared)), (1, " ".join(shared))],
         "doc_id long, text string",
     )
-    for flt in (False, True):
-        out = dd.ngram_jaccard_pairs(
-            docs, threshold=0.55, n=1, prefix_filter=flt
-        ).collect()
-        assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in out] == [
-            (0, 1, 0.55)
-        ], f"prefix_filter={flt} dropped the exact-boundary pair"
+    out = dd.ngram_jaccard_pairs(docs, threshold=0.55, n=1).collect()
+    assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in out] == [
+        (0, 1, 0.55)
+    ], "dropped the exact-boundary pair"
 
     # (b) J = 5/9 < t = 0.555556, admitted because round(J, 6) = t
     a_only2 = [f"x{i}" for i in range(4)]
@@ -597,13 +551,32 @@ def test_prefix_filter_boundary_lossless(spark):
         [(0, " ".join(a_only2 + shared2)), (1, " ".join(shared2))],
         "doc_id long, text string",
     )
-    for flt in (False, True):
-        out = dd.ngram_jaccard_pairs(
-            docs2, threshold=0.555556, n=1, prefix_filter=flt
-        ).collect()
-        assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in out] == [
-            (0, 1, 0.555556)
-        ], f"prefix_filter={flt} dropped the rounded-admission pair"
+    out = dd.ngram_jaccard_pairs(docs2, threshold=0.555556, n=1).collect()
+    assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in out] == [
+        (0, 1, 0.555556)
+    ], "dropped the rounded-admission pair"
+
+
+_FAMILY_ENTRY_POINTS = {
+    "minhash_lsh_pairs": "hash_family",
+    "simhash": "hash_family",
+    "simhash_pairs": "hash_family",
+    "ngram_jaccard_pairs": "shingle_hash",
+    "substring_span_audit_hashed": "family",
+}
+
+
+@pytest.mark.parametrize("family", ["MD5", "md5 ", "sha1"])
+@pytest.mark.parametrize("entry", sorted(_FAMILY_ENTRY_POINTS))
+def test_dedup_unknown_token_hash_family_refused(spark, entry, family):
+    """Every dedup entry point that takes a token-hash family refuses a
+    name other than "xxhash64" / "md5" at build time, instead of
+    hashing with xxhash64 and dropping the portable family."""
+    from the_framework_for_clustering_time_series_data_spark.operators import dedup
+
+    docs = spark.createDataFrame([(0, "a b c d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="unknown token hash family"):
+        getattr(dedup, entry)(docs, **{_FAMILY_ENTRY_POINTS[entry]: family})
 
 
 def test_text_bpe_apply_all_jvm_no_python_eval(spark):

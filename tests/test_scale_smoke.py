@@ -789,7 +789,7 @@ def test_phash_banding_1m_hashes_planted_recall(spark):
     at Hamming ≤ 3 with P ≈ 2e-15 per pair), and (c) never degrade to
     an all-pairs plan — 1M rows × 4 bands through a hash join, the
     same geometry 100 TB of image hashes would shuffle."""
-    from the_framework_for_clustering_time_series_data_spark.operators.multimodal import phash_neardup_pairs
+    from the_framework_for_clustering_time_series_data_spark.operators.dedup import hamming_pairs
 
     n, planted = 1_000_000, 1_000
     base = spark.range(n).select(
@@ -806,8 +806,12 @@ def test_phash_banding_1m_hashes_planted_recall(spark):
         .bitwiseXOR(F.lit(3))
         .alias("dhash"),
     )
-    pairs = phash_neardup_pairs(
-        base.unionByName(twins), bands=4, max_hamming=3
+    pairs = hamming_pairs(
+        base.unionByName(twins),
+        id_col="image_id",
+        lanes=("dhash",),
+        bands=4,
+        max_hamming=3,
     )
     got = {(r["id_a"], r["id_b"], r["hamming"]) for r in pairs.collect()}
     expect = {(2 * i, 2 * i + 1, 2) for i in range(planted)}
@@ -822,9 +826,7 @@ def test_phash128_wide_banding_1m_hashes_recall_and_collision_volume(spark):
     equi-join generates pre-verify) for 4×32-bit keys must sit orders
     of magnitude below the 64-bit/4×16-bit form on the same corpus —
     the measured form of the docstring's n²/2^16 → n²/2^32 claim."""
-    from the_framework_for_clustering_time_series_data_spark.operators.multimodal import (
-        phash128_neardup_pairs,
-    )
+    from the_framework_for_clustering_time_series_data_spark.operators.dedup import hamming_pairs
 
     n, planted = 1_000_000, 1_000
 
@@ -849,7 +851,9 @@ def test_phash128_wide_banding_1m_hashes_recall_and_collision_volume(spark):
         lane("a").bitwiseXOR(F.lit(1)).alias("ahash"),  # 1 bit, lane 1
     )
     hashes = base.unionByName(twins)
-    pairs = phash128_neardup_pairs(hashes, bands=4, max_hamming=3)
+    pairs = hamming_pairs(
+        hashes, id_col="image_id", lanes=("dhash", "ahash"), bands=4, max_hamming=3
+    )
     got = {(r["id_a"], r["id_b"], r["hamming"]) for r in pairs.collect()}
     assert got == {(2 * i, 2 * i + 1, 3) for i in range(planted)}
 

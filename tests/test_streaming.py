@@ -1703,6 +1703,21 @@ def test_ann_index_drift_zero_row_meta(spark, tmp_path):
     assert ops.sq8_requantize(spark, idx) is False
 
 
+def test_requantize_without_complete_delta_raises(spark, tmp_path):
+    """A rebuild that fires on an index with no complete delta raises
+    FileNotFoundError, the error every reader raises in that state,
+    not a bare IndexError."""
+    from the_framework_for_clustering_time_series_data_spark.sources.tables import load_table
+    from the_framework_for_clustering_time_series_data_spark.streaming import ops
+
+    vecs = load_table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
+    idx = str(tmp_path / "sq8_idx")
+    ops.sq8_maintain_batch(vecs.where(F.col("vec_id") < 100), 0, idx)
+    (Path(idx) / "codes" / "delta=1" / "_SUCCESS").unlink()
+    with pytest.raises(FileNotFoundError, match="no complete delta"):
+        ops.sq8_requantize(spark, idx, force=True)
+
+
 def test_ivf_recenter_partial_cold_cells_untouched(spark, tmp_path, monkeypatch):
     """ivf_recenter_partial (round-10 verdict ask #6): fires on skew,
     splits ONLY the hot cells (fresh ids above the old max), folds

@@ -9,7 +9,8 @@ Scale design:
   * MinHash-LSH bands signatures so candidate pairs collide in buckets —
     join cost scales with collisions, not n²;
   * SimHash reduces each doc to one 64-bit int; near-dup = small
-    Hamming distance, found via band-exact match on rotations.
+    Hamming distance, found via pigeonhole band-exact match
+    (:func:`hamming_pairs`, also the image/audio hash near-dup join).
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ from the_framework_for_clustering_time_series_data_spark.functions.plan_tools im
 )
 from the_framework_for_clustering_time_series_data_spark.operators.cluster import deterministic_lloyd_assign
 from the_framework_for_clustering_time_series_data_spark.operators.corpus_guard import collect_bounded, id_spark_type
+from the_framework_for_clustering_time_series_data_spark.operators.text import tokens_expr
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -56,7 +58,7 @@ def _shingles_raw(text_col: str, n: int) -> F.Column:
     for sub-n-token docs, matching the oracle's WHERE len >= n), 8×
     faster (0.42 s). Speeds every string-shingle consumer
     (ngram-Jaccard family, incremental/containment dedup)."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = tokens_expr(text_col)
     g = toks
     for j in range(2, n + 1):
         shifted = F.slice(
@@ -85,11 +87,7 @@ def _hashed_shingles(text_col: str, n: int, family: str = "xxhash64") -> F.Colum
     the portable 60-bit ``conv(substr(md5(tok),1,15),16,10)`` family
     DuckDB reproduces bit-identically, for oracle-checked twins.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    if family == "md5":
-        th = F.transform(toks, md5_60bit_hash)
-    else:
-        th = F.transform(toks, lambda t: F.xxhash64(t))
+    th = F.transform(tokens_expr(text_col), lambda t: _token_hash(t, family))
 
     def combine(th_arr: F.Column):
         def h(i: F.Column) -> F.Column:
@@ -122,7 +120,6 @@ def ngram_jaccard_pairs(
     max_doc_freq: int | None = None,
     shingle_hash: str | None = None,
     max_docs: int | None = None,
-    prefix_filter: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs by word-n-gram Jaccard similarity ≥
     threshold.
@@ -155,37 +152,6 @@ def ngram_jaccard_pairs(
     output is identical to the uncapped form; above it, the pair
     budget is a constant ≤ max_docs²/2 regardless of corpus size.
     Jaccard within the sample is exact.
-
-    ``prefix_filter`` (off by default) applies the PPJoin/AllPairs
-    prefix filter (Bayardo et al., WWW'07; Chaudhuri et al.): order
-    every document's shingles by a GLOBAL canonical order (ascending
-    document frequency, then shingle — rarest first) and index only
-    each document's first ``|A| − ⌈t′·|A|⌉ + 1`` shingles in the
-    self-join, where ``t′ = t − 5e-7`` (the admission test below is
-    ``round(J, 6) ≥ t``, so the bound is sized for the 6-dp-rounded
-    admission set, and the ceil carries a −1e-9 epsilon against
-    float-product overshoot — both widenings only lengthen the
-    prefix). PROVABLY LOSSLESS for the admitted set: if two sets with
-    J ≥ t shared no prefix shingle, the smallest shared shingle in the
-    global order would force the entire intersection into one
-    document's ⌈t·|A|⌉−1 suffix, contradicting |A∩B| ≥ t·|A|. The
-    intersection is then computed EXACTLY per candidate pair
-    (array_intersect on the full shingle sets), so the output is
-    bit-identical to the unfiltered form — only the candidate volume
-    changes: rare-first prefixes shrink the inverted-index join from
-    Σ df² over all shingles to Σ df² over prefix occurrences of the
-    RAREST shingles (boilerplate never enters the index). Composes
-    with the other knobs; mutually exclusive with ``max_doc_freq``
-    (the capped twin changes semantics instead of candidates).
-
-    WHEN to turn it on: Zipfian corpora, where most shingles are rare
-    and prefixes prune hard. The synthetic test table is the
-    anti-case — a ~25-word vocabulary makes every trigram frequent, so
-    the filter prunes little while paying two extra shuffles (df join
-    + per-doc canonical sort): measured 3.8 s plain vs 5.2 s filtered
-    at sf0.1 — which is why the registered query leaves it off.
-    Losslessness is locked by tests/test_plans.py::
-    test_prefix_filter_jaccard_lossless either way.
     """
     sh_col = (
         _shingles(text_col, n)
@@ -200,101 +166,34 @@ def ngram_jaccard_pairs(
             .limit(max_docs)
         )
         base = base.join(F.broadcast(keep), id_col, "left_semi")
-    if prefix_filter and max_doc_freq is not None:
-        raise ValueError("prefix_filter composes with exact semantics only; "
-                         "max_doc_freq already bounds the capped twin")
     docs = base.select(
         F.col(id_col).alias("id"), sh_col.alias("sh")
     ).withColumn("n_sh", F.size("sh"))
-    if prefix_filter:
-        # lossless PPJoin candidate generation (see docstring): index
-        # each doc's |A| - ceil(t|A|) + 1 rarest shingles only, then
-        # verify candidates EXACTLY on the full shingle sets
-        ex_all = docs.select("id", F.explode("sh").alias("shingle"))
-        dfreq = ex_all.groupBy("shingle").agg(F.count("*").alias("_df"))
-        ordered = (
-            ex_all.join(dfreq, "shingle")
-            .groupBy("id")
-            .agg(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(F.struct("_df", "shingle"))
-                    ),
-                    lambda st: st.shingle,
-                ).alias("_ordered")
-            )
+    ex = docs.select("id", "n_sh", F.explode("sh").alias("shingle"))
+    if max_doc_freq is not None:
+        # the postings feed BOTH the doc-frequency aggregate and the
+        # anti-join input — checkpoint so tokenize + shingle + hash +
+        # explode run once, not twice (guide §2.4; the
+        # reliable-checkpoint conf covers the cluster form)
+        ex = ex.transform(stage_checkpoint, eager=False)
+        hot = (
+            ex.groupBy("shingle")
+            .agg(F.count("*").alias("_df"))
+            .where(F.col("_df") > max_doc_freq)
+            .select("shingle")
         )
-        # prefix length: a - ceil(t'*a) + 1 (>= 1 whenever a >= 1), with
-        # TWO conservative widenings so the bound covers exactly what the
-        # final filter admits: (1) the admission test is round(J,6) >= t,
-        # so pairs with true J in [t - 5e-7, t) pass — the prefix must
-        # therefore be sized for t' = t - 5e-7, not t; (2) ceil over a
-        # float product can overshoot an exact integer (0.55*100 =
-        # 55.000000000000007 → ceil 56, prefix one element short) — the
-        # -1e-9 epsilon guards the float-integer boundary. Both widenings
-        # only ever LENGTHEN the prefix (more candidates, never fewer),
-        # so losslessness is preserved by construction.
-        plen = (
-            F.size("_ordered")
-            - F.ceil(
-                F.size("_ordered") * F.lit(float(threshold) - 5e-7) - F.lit(1e-9)
-            ).cast("int")
-            + 1
+        ex = ex.join(F.broadcast(hot), "shingle", "left_anti")
+    a, b = ex.alias("a"), ex.alias("b")
+    inter = (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
+        .groupBy(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            F.col("a.n_sh").alias("n_a"),
+            F.col("b.n_sh").alias("n_b"),
         )
-        pex = ordered.select(
-            "id", F.explode(F.slice("_ordered", 1, plen)).alias("shingle")
-        )
-        a, b = pex.alias("a"), pex.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        da = docs.select(F.col("id").alias("id_a"), F.col("sh").alias("_sh_a"),
-                         F.col("n_sh").alias("n_a"))
-        db = docs.select(F.col("id").alias("id_b"), F.col("sh").alias("_sh_b"),
-                         F.col("n_sh").alias("n_b"))
-        # merge-hint the shingle-array dimension joins: the payload
-        # sides scale with the corpus and the candidate side is NOT
-        # tiny, so AQE can pick the array side to broadcast — which
-        # OOMs the driver a decade up (the dedup_containment sf10
-        # find; arrays inflate far beyond their on-disk estimate)
-        inter = (
-            cand.join(da.hint("merge"), "id_a")
-            .join(db.hint("merge"), "id_b")
-            .withColumn("n_inter", F.size(F.array_intersect("_sh_a", "_sh_b")))
-            .select("id_a", "id_b", "n_a", "n_b", "n_inter")
-        )
-    else:
-        ex = docs.select("id", "n_sh", F.explode("sh").alias("shingle"))
-        if max_doc_freq is not None:
-            # the postings feed BOTH the doc-frequency aggregate and
-            # the anti-join input — checkpoint so tokenize + shingle +
-            # hash + explode run once, not twice (guide §2.4; the
-            # reliable-checkpoint conf covers the cluster form)
-            ex = ex.transform(stage_checkpoint, eager=False)
-            hot = (
-                ex.groupBy("shingle")
-                .agg(F.count("*").alias("_df"))
-                .where(F.col("_df") > max_doc_freq)
-                .select("shingle")
-            )
-            ex = ex.join(F.broadcast(hot), "shingle", "left_anti")
-        a, b = ex.alias("a"), ex.alias("b")
-        inter = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-            .groupBy(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.col("a.n_sh").alias("n_a"),
-                F.col("b.n_sh").alias("n_b"),
-            )
-            .agg(F.count("*").alias("n_inter"))
-        )
+        .agg(F.count("*").alias("n_inter"))
+    )
     jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
     return (
         inter.withColumn("jaccard", F.round(jac, 6))
@@ -311,6 +210,19 @@ def md5_60bit_hash(col) -> F.Column:
     definition — the minhash/simhash/jaccard oracles all depend on
     these two expressions staying in lockstep."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def _token_hash(col, family: str) -> F.Column:
+    """The per-token hash of every dedup kernel: ``"xxhash64"`` (prod,
+    one JVM op per token) or ``"md5"`` (:func:`md5_60bit_hash`, the
+    portable family the oracle-checked twins use). Any other name is
+    refused: hashing it with xxhash64 would silently drop the
+    portability the caller asked for."""
+    if family == "md5":
+        return md5_60bit_hash(col)
+    if family == "xxhash64":
+        return F.xxhash64(col)
+    raise ValueError(f"unknown token hash family {family!r}: 'xxhash64' or 'md5'")
 
 
 def minhash_xor_family(num_hashes: int) -> list[int]:
@@ -378,9 +290,7 @@ def minhash_lsh_pairs(
     from xxhash64-of-band to the raw signature tuple, keeping every
     step reproducible cross-engine.
     """
-    if hash_family not in ("xxhash64", "md5"):
-        raise ValueError(f"unknown hash_family {hash_family!r}")
-
+    tok_hash = _token_hash("tok", hash_family)
     df = ensure_min_parallelism(df)
     band_size = 4
     n_bands = num_hashes // band_size
@@ -394,13 +304,9 @@ def minhash_lsh_pairs(
     # independence, measured recall 1.0 vs exact Jaccard at θ=0.5 on
     # the documents table.
     rs = minhash_xor_family(num_hashes)
-    if hash_family == "md5":
-        tok_hash = md5_60bit_hash("tok")
-    else:
-        tok_hash = F.xxhash64("tok")
 
     def shingle(d: DataFrame) -> DataFrame:
-        toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+        toks = tokens_expr(text_col)
         ex = d.select(
             F.col(id_col).alias("id"), F.posexplode(toks).alias("pos", "tok")
         ).select("id", "pos", tok_hash.alias("h"))
@@ -525,11 +431,8 @@ def simhash(
     ``bits=60`` with it), giving the registered query a full value-hash
     oracle; see minhash_lsh_pairs for the family definition.
     """
-    if hash_family == "md5":
-        tok_hash = md5_60bit_hash("tok")
-    else:
-        tok_hash = F.xxhash64("tok")
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    tok_hash = _token_hash("tok", hash_family)
+    toks = tokens_expr(text_col)
     ex = ensure_min_parallelism(df).select(
         F.col(id_col).alias("id"), F.explode(toks).alias("tok")
     ).withColumn("h", tok_hash)
@@ -614,40 +517,105 @@ def embedding_cosine_pairs(
     return v.mapInPandas(score, f"id_a {id_t}, id_b {id_t}, cosine double")
 
 
-def _simhash_bands(fp: DataFrame, max_hamming: int, bits: int) -> DataFrame:
-    """The pigeonhole band layout of SimHash near-dup search, shared by
-    :func:`simhash_pairs` and the ingest-time form
-    (streaming.ops.streaming_simhash_dedup): ``(id, simhash)`` rows
-    exploded into ``max_hamming + 1`` contiguous bands COVERING all
-    ``bits`` (sizes differ by at most one bit) as
-    ``(id, simhash, band_id, band_val)``. A pair within Hamming distance
-    ``max_hamming`` differs in fewer bits than there are bands, so it
-    agrees exactly on at least one band."""
-    n_bands = max_hamming + 1
-    base, extra = divmod(bits, n_bands)
-    offsets, widths, off = [], [], 0
-    for b in range(n_bands):
-        w = base + (1 if b < extra else 0)
-        offsets.append(off)
-        widths.append(w)
-        off += w
-    return fp.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.shiftrightunsigned(F.col("simhash"), offsets[b])
-                        .bitwiseAND(F.lit((1 << widths[b]) - 1))
-                        .alias("band_val"),
-                    )
-                    for b in range(n_bands)
-                ]
+def _hamming_bands(
+    df: DataFrame, lanes: tuple[str, ...], bits: int, bands: int
+) -> DataFrame:
+    """The pigeonhole band layout of every Hamming near-dup search:
+    each row of ``df`` exploded into ``bands`` rows, with
+    ``(band_id, band_val)`` added. The bands split evenly across the
+    int64 ``lanes``; each lane's low ``bits`` are covered by contiguous
+    bands whose widths differ by at most one bit, and band ids run lane
+    by lane. A pair within summed Hamming distance ``bands - 1``
+    differs in fewer bits than there are bands, so it agrees exactly on
+    at least one band."""
+    per_lane = bands // len(lanes)
+    base, extra = divmod(bits, per_lane)
+    vals = []
+    for lane in lanes:
+        off = 0
+        for b in range(per_lane):
+            w = base + (1 if b < extra else 0)
+            # a full 64-bit band: (1 << 64) - 1 overflows a long literal
+            mask = (1 << w) - 1 if w < 64 else -1
+            vals.append(
+                F.shiftrightunsigned(F.col(lane), off).bitwiseAND(F.lit(mask))
             )
-        ).alias("bb"),
-    ).select("id", "simhash", "bb.band_id", "bb.band_val")
+            off += w
+    return df.select(
+        "*", F.posexplode(F.array(*vals)).alias("band_id", "band_val")
+    )
+
+
+def hamming_pairs(
+    left: DataFrame,
+    right: DataFrame | None = None,
+    *,
+    id_col: str,
+    lanes: tuple[str, ...],
+    bands: int,
+    max_hamming: int,
+    bits: int = 64,
+) -> DataFrame:
+    """Near-duplicate pairs by Hamming distance over int64 hash
+    ``lanes`` (summed across lanes): ``(id_a, id_b, hamming)`` for
+    every pair with ``id_a < id_b`` and ``hamming <= max_hamming``,
+    ``id_a`` from ``left`` and ``id_b`` from ``right`` (``None``: a
+    self-join of ``left``). The one near-dup kernel of perceptual
+    image hashes, audio fingerprints and streaming SimHash.
+
+    Pigeonhole banding (:func:`_hamming_bands`) makes candidates an
+    EQUI-join on (band_id, band_val), never an all-pairs comparison;
+    ``distinct`` drops pairs that collide in several bands and
+    ``bit_count(xor)`` verifies exactly. Recall is exact because
+    ``max_hamming < bands`` is required.
+
+    Scale: the shuffle key is the band value, and random band keys
+    collide at ~n²/2^width per band. Two lanes (the 128-bit dHash ‖
+    aHash form) afford 4 bands of 32 bits at the same Hamming ≤ 3
+    contract, where one 64-bit lane has 4 bands of 16 bits: a 65,536×
+    cut in candidate volume (tests/test_scale_smoke.py measures it at
+    1M hashes). The caller checkpoints an expensive hash input, since
+    both join sides consume it."""
+    if max_hamming >= bands:
+        raise ValueError(
+            f"pigeonhole needs max_hamming < bands ({max_hamming} >= {bands})"
+        )
+    if bands % len(lanes) or not len(lanes) <= bands <= bits * len(lanes):
+        raise ValueError(
+            f"bands must split evenly across the {len(lanes)} int64 lanes, "
+            f"at least one bit each: {bands}"
+        )
+    hs = tuple(f"h{i}" for i in range(len(lanes)))
+    cols = [F.col(id_col).alias("id")] + [
+        F.col(c).alias(h) for c, h in zip(lanes, hs)
+    ]
+    a = _hamming_bands(left.select(*cols), hs, bits, bands)
+    b = a if right is None else _hamming_bands(right.select(*cols), hs, bits, bands)
+    cand = (
+        a.alias("a")
+        .join(
+            b.alias("b"),
+            on=[
+                F.col("a.band_id") == F.col("b.band_id"),
+                F.col("a.band_val") == F.col("b.band_val"),
+                F.col("a.id") < F.col("b.id"),
+            ],
+        )
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            *[F.col(f"a.{h}").alias(f"{h}a") for h in hs],
+            *[F.col(f"b.{h}").alias(f"{h}b") for h in hs],
+        )
+        .distinct()  # a pair can collide in several bands
+    )
+    ham = None
+    for h in hs:
+        d = F.bit_count(F.col(f"{h}a").bitwiseXOR(F.col(f"{h}b")))
+        ham = d if ham is None else ham + d
+    return cand.select("id_a", "id_b", ham.alias("hamming")).where(
+        F.col("hamming") <= max_hamming
+    )
 
 
 def simhash_pairs(
@@ -661,15 +629,17 @@ def simhash_pairs(
     """SimHash near-duplicate pairs: Hamming(simhash_a, simhash_b) ≤
     ``max_hamming``.
 
-    Pigeonhole banding (:func:`_simhash_bands`: ``max_hamming + 1``
+    Pigeonhole banding (:func:`_hamming_bands`: ``max_hamming + 1``
     bands covering all bits, so a qualifying pair agrees EXACTLY on at
     least one): candidates = same-(band, value) bucket pairs (one
     groupBy — same shape as the MinHash banding), then exact
     verification via bit_count(xor). Never an O(n²) comparison. (A
     fixed 4-band split would silently drop pairs when max_hamming > 3.)
+    Buckets with more than 1,000 members are skipped (the oracle
+    replays the cap); :func:`hamming_pairs` is the uncapped join.
     """
     fp = simhash(df, text_col=text_col, id_col=id_col, bits=bits, hash_family=hash_family)
-    bands = _simhash_bands(fp, max_hamming, bits)
+    bands = _hamming_bands(fp, ("simhash",), bits, max_hamming + 1)
     buckets = (
         bands.groupBy("band_id", "band_val")
         .agg(F.sort_array(F.collect_list(F.struct("id", "simhash"))).alias("ms"))
@@ -1513,11 +1483,7 @@ def _hashed_spans_raw(text_col: str, n: int, family: str = "xxhash64") -> F.Colu
     ``family``: "xxhash64" (prod, one JVM op per token) or "md5" (the
     portable ``md5_60bit_hash`` family DuckDB reproduces bit-
     identically, for the oracle-checked twin)."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    if family == "md5":
-        th = F.transform(toks, md5_60bit_hash)
-    else:
-        th = F.transform(toks, lambda t: F.xxhash64(t))
+    th = F.transform(tokens_expr(text_col), lambda t: _token_hash(t, family))
 
     def combine(th_arr: F.Column):
         def h(i: F.Column) -> F.Column:

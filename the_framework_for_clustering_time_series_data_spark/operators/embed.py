@@ -17,10 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import (
-    lit_double_array,
-    lit_long_array,
-)
+from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import lit_long_array
 
 
 def _to_vectors(nested: DataFrame, values_col: str = "values") -> DataFrame:
@@ -319,38 +316,6 @@ def _spectral_embedding_fallback(
     for i, c in enumerate(cols):
         out[c] = emb[:, i] if i < emb.shape[1] else 0.0
     return spark.createDataFrame(out)
-
-
-def _random_projection_standin(
-    nested: DataFrame, k: int = 2, seed: int = 0, values_col: str = "values"
-) -> DataFrame:
-    """STAND-IN for UMAP when umap-learn is absent: seeded Gaussian
-    random projection R^L → R^k (Johnson-Lindenstrauss style — preserves
-    pairwise distances approximately, which is the property downstream
-    clustering needs). NOT UMAP semantics; swap in umap-learn for
-    reference behavior.
-
-    The projection runs entirely JVM-side: weight rows are array
-    literals (broadcast with the plan), each output coordinate is a
-    zip_with product + aggregate sum — no Python in the hot path.
-    """
-    import numpy as np
-
-    first = nested.select(F.size(values_col).alias("L")).first()
-    if first is None:
-        cols = [F.lit(0.0).alias(c) for c in ("x", "y", "z")[:k]]
-        return nested.select("series_id", *cols)
-    L = first["L"]
-    rng = np.random.default_rng(seed)
-    W = rng.normal(size=(k, L)) / np.sqrt(L)
-
-    def proj(row: "np.ndarray") -> F.Column:
-        w = lit_double_array(row)
-        prods = F.zip_with(F.col(values_col), w, lambda a, b: a * b)
-        return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-
-    cols = [proj(W[i]).alias(c) for i, c in enumerate(("x", "y", "z")[:k])]
-    return nested.select("series_id", *cols)
 
 
 def _conv_channels(img_size: int) -> list[int]:

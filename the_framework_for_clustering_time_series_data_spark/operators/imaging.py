@@ -71,22 +71,6 @@ def rp_long(nested: DataFrame, values_col: str = "values") -> DataFrame:
     )
 
 
-def gaf_long(nested: DataFrame, values_col: str = "values") -> DataFrame:
-    """I2 in long form ``(series_id, i, j, pixel)`` (pixel rounded 6dp)."""
-    phi = _gaf_phi(values_col)
-    rows = F.transform(
-        phi,
-        lambda a, i: F.struct(
-            i.alias("i"),
-            F.transform(phi, lambda b: F.round((F.cos(a + b) + 1) * 255 / 2, 6)).alias("row"),
-        ),
-    )
-    return (
-        nested.select("series_id", F.explode(rows).alias("r"))
-        .select("series_id", F.col("r.i").alias("i"), F.posexplode("r.row").alias("j", "pixel"))
-    )
-
-
 def resize_images(images: DataFrame, img_size: int, image_col: str = "image") -> DataFrame:
     """I3 — resize each square matrix to (img_size, img_size) with
     bilinear interpolation, output uint8-truncated ints

@@ -1199,161 +1199,6 @@ def image_phash(
     )
 
 
-def phash_neardup_pairs(
-    hashes: DataFrame,
-    id_col: str = "image_id",
-    hash_col: str = "dhash",
-    bands: int = 4,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-duplicate image pairs by perceptual-hash Hamming distance,
-    found via PIGEONHOLE band blocking (the dedup_simhash discipline):
-    split the 64-bit hash into ``bands`` equal bit-bands; any pair
-    with Hamming ≤ bands−1 must agree exactly on ≥ 1 band, so an
-    EQUI-join on (band_idx, band_value) generates every qualifying
-    candidate — never an all-pairs comparison — and
-    ``bit_count(a ^ b)`` verifies exactly. Requires
-    ``max_hamming < bands`` (asserted) or recall would silently drop.
-
-    Scale: the shuffle key is the 16-bit band value — random hashes
-    collide at ~n²/2^16 per band, so at fleet scale switch to
-    :func:`phash128_neardup_pairs` (the 128-bit dHash ‖ aHash form:
-    same Hamming ≤ 3 contract, 32-bit band keys, n²/2^32 collisions —
-    shipped round 9). The hash input is checkpointed by the CALLER
-    when it is expensive (one Python decode pass) since both join
-    sides consume it."""
-    if max_hamming >= bands:
-        raise ValueError(
-            f"pigeonhole needs max_hamming < bands ({max_hamming} >= {bands})"
-        )
-    band_w = 64 // bands
-    mask = (1 << band_w) - 1
-    hs = hashes.select(F.col(id_col).alias("id"), F.col(hash_col).alias("h"))
-    # arithmetic shiftright + mask == logical band extraction (the mask
-    # kills the sign extension), so bands agree with the oracle's
-    # unsigned floor-div extraction
-    banded = hs.select(
-        "id",
-        "h",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("h"), b * band_w).bitwiseAND(F.lit(mask))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band_idx", "band_val"),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            on=[
-                F.col("a.band_idx") == F.col("b.band_idx"),
-                F.col("a.band_val") == F.col("b.band_val"),
-                F.col("a.id") < F.col("b.id"),
-            ],
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.h").alias("ha"),
-            F.col("b.h").alias("hb"),
-        )
-        .distinct()  # a pair can collide in several bands
-    )
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return cand.select("id_a", "id_b", ham.alias("hamming")).where(
-        F.col("hamming") <= max_hamming
-    )
-
-
-def phash128_neardup_pairs(
-    hashes: DataFrame,
-    id_col: str = "image_id",
-    lane_cols: tuple[str, str] = ("dhash", "ahash"),
-    bands: int = 4,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """WIDE-BAND near-duplicate pairs over a 128-bit perceptual hash
-    composed of two int64 lanes (dHash ‖ aHash) — the fleet-scale form
-    :func:`phash_neardup_pairs`'s docstring prescribes (round-9
-    verdict ask #3). Hamming distance is summed across lanes; bands
-    split the 128 bits evenly (``bands`` even, half per lane), and the
-    pigeonhole guarantee is the same: Hamming ≤ bands−1 forces ≥ 1
-    exact band match, so the equi-join's recall is EXACT.
-
-    Why this scales where the 64-bit/4-band form stops: the shuffle
-    key is the band value, and random band keys collide at
-    ~n²/2^width per band. At the SAME ``max_hamming = 3`` contract the
-    128-bit hash affords ``bands = 4`` bands of THIRTY-TWO bits —
-    candidate volume drops from n²·4/2^16 to n²·4/2^32 (a 65,536×
-    reduction; measured in tests/test_scale_smoke.py's 1M-hash
-    collision-volume comparison). ``bands = 8`` (16-bit keys) remains
-    available when the recall contract must rise to Hamming ≤ 7.
-    The longer hash also doubles the margin between planted near-dups
-    (Hamming ≤ ~3 of 128) and unrelated images (~64 of 128), so the
-    verify filter's false-candidate rate falls too."""
-    if max_hamming >= bands:
-        raise ValueError(
-            f"pigeonhole needs max_hamming < bands ({max_hamming} >= {bands})"
-        )
-    if bands % 2 or not 2 <= bands <= 128:
-        raise ValueError(f"bands must be even (half per int64 lane): {bands}")
-    per_lane = bands // 2
-    band_w = 64 // per_lane
-    mask = (1 << band_w) - 1 if band_w < 64 else -1
-    lo, hi = lane_cols
-    hs = hashes.select(
-        F.col(id_col).alias("id"),
-        F.col(lo).alias("h0"),
-        F.col(hi).alias("h1"),
-    )
-    # band values laid out lane-major: bands 0..per_lane-1 from lane 0,
-    # the rest from lane 1; arithmetic shiftright + mask == logical
-    # band extraction (mask kills sign extension), matching the oracle
-    def lane_bands(col: str):
-        return [
-            F.shiftright(F.col(col), b * band_w).bitwiseAND(F.lit(mask))
-            for b in range(per_lane)
-        ]
-
-    banded = hs.select(
-        "id",
-        "h0",
-        "h1",
-        F.posexplode(F.array(*lane_bands("h0"), *lane_bands("h1"))).alias(
-            "band_idx", "band_val"
-        ),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            on=[
-                F.col("a.band_idx") == F.col("b.band_idx"),
-                F.col("a.band_val") == F.col("b.band_val"),
-                F.col("a.id") < F.col("b.id"),
-            ],
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.h0").alias("h0a"),
-            F.col("a.h1").alias("h1a"),
-            F.col("b.h0").alias("h0b"),
-            F.col("b.h1").alias("h1b"),
-        )
-        .distinct()  # a pair can collide in several bands
-    )
-    ham = F.bit_count(F.col("h0a").bitwiseXOR(F.col("h0b"))) + F.bit_count(
-        F.col("h1a").bitwiseXOR(F.col("h1b"))
-    )
-    return cand.select("id_a", "id_b", ham.alias("hamming")).where(
-        F.col("hamming") <= max_hamming
-    )
-
-
 #: YUV4MPEG2 stream signature — payloads with it route through the
 #: pure-stdlib frame parser below, ffmpeg or not.
 Y4M_MAGIC = b"YUV4MPEG2 "
@@ -1758,7 +1603,7 @@ def audio_fingerprint(
     stdlib WAV decode (RIFF parse → raw integer samples) then the
     exact-integer energy-delta fingerprint — Python touches each clip
     once; the near-dup join downstream is JVM-side on 8-byte keys
-    (reuse :func:`phash_neardup_pairs` with ``hash_col="afp"``)."""
+    (``dedup.hamming_pairs`` with ``lanes=("afp",)``)."""
     import pandas as pd
 
     def run(batches):
@@ -1783,7 +1628,7 @@ def audio_fingerprint_wide(
     ONE stdlib WAV decode per clip feeding BOTH exact-integer lanes —
     energy-delta (:func:`afp64_from_samples`) and mean-delta
     (:func:`afp64_mean_from_samples`) — so the near-dup join can run
-    :func:`phash128_neardup_pairs` on (afp, afp_mean). Python still
+    ``dedup.hamming_pairs`` on (afp, afp_mean). Python still
     touches each payload exactly once."""
     import pandas as pd
 

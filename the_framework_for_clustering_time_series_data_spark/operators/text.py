@@ -209,7 +209,7 @@ def tfidf_vectors(
 
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.split(F.lower(F.trim(F.col(text_col))), TOKEN_RE).alias("toks"),
+        tokens_expr(text_col).alias("toks"),
     )
     tf = HashingTF(inputCol="toks", outputCol="_tf", numFeatures=num_features).transform(toks)
     idf_model = IDF(inputCol="_tf", outputCol="_tfidf", minDocFreq=min_doc_freq).fit(tf)
@@ -240,7 +240,7 @@ def bigram_fluency(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     the aggregations themselves absorb skew via map-side partials.
     Docs with <2 tokens have no bigrams and drop out.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), TOKEN_RE)
+    toks = tokens_expr(text_col)
     ex = df.select(F.col(id_col).alias("doc_id"), F.posexplode(toks).alias("pos", "w1"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     bg = (
@@ -266,7 +266,7 @@ def _word_ngrams(df: DataFrame, n: int, text_col: str, id_col: str) -> DataFrame
     oracle-comparable; at corpus scale substitute the 64-bit composed
     shingle hashes of dedup._hashed_shingles (same plan shape, long
     equality instead of string equality)."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), TOKEN_RE)
+    toks = tokens_expr(text_col)
     ex = df.select(F.col(id_col).alias("id"), F.posexplode(toks).alias("pos", "w0"))
     w = Window.partitionBy("id").orderBy("pos")
     cols = [F.col("w0")] + [F.lead("w0", j).over(w).alias(f"w{j}") for j in range(1, n)]
@@ -834,7 +834,7 @@ def bpe_learn_merges(
     spark = df.sparkSession
     words = (
         df.select(
-            F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("word")
+            F.explode(tokens_expr(text_col)).alias("word")
         )
         .where(F.col("word") != "")
         .groupBy("word")

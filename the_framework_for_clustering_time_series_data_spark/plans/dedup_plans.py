@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from the_framework_for_clustering_time_series_data_spark.operators import dedup
+from the_framework_for_clustering_time_series_data_spark.operators.text import tokens_expr
 from the_framework_for_clustering_time_series_data_spark.plans.registry import register
 from the_framework_for_clustering_time_series_data_spark.sources.tables import load_table
 
@@ -967,7 +968,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence (no token explode for the set side; only the 5-gram
     blocking stream explodes)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    ws = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    ws = tokens_expr("text")
     w = docs.select("doc_id", "lang", ws.alias("ws")).where(F.size("ws") >= 5)
 
     def grams(n: int):
@@ -1155,9 +1156,7 @@ def dedup_quality_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     toks = docs.select(
         "doc_id",
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).cast("long").alias(
-            "n_tokens"
-        ),
+        F.size(tokens_expr("text")).cast("long").alias("n_tokens"),
     )
     sc = comp.join(toks, "doc_id")
     w = Window.partitionBy("group_id").orderBy(F.desc("n_tokens"), "doc_id")

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from the_framework_for_clustering_time_series_data_spark.operators import multimodal
+from the_framework_for_clustering_time_series_data_spark.operators import dedup, multimodal
 from the_framework_for_clustering_time_series_data_spark.plans.registry import register
 from the_framework_for_clustering_time_series_data_spark.plans.timeseries_plans import EV
 from the_framework_for_clustering_time_series_data_spark.sources.tables import events_as_series, load_table
@@ -300,8 +300,8 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     imgs = multimodal.synthesize_gray_png_variants(docs, n_variants=2)
     hashes = multimodal.image_phash(imgs).transform(stage_checkpoint, eager=False)
-    return multimodal.phash_neardup_pairs(
-        hashes, id_col="image_id", hash_col="dhash", bands=4, max_hamming=3
+    return dedup.hamming_pairs(
+        hashes, id_col="image_id", lanes=("dhash",), bands=4, max_hamming=3
     )
 
 
@@ -393,8 +393,8 @@ def mm_phash_neardup_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     imgs = multimodal.synthesize_gray_png_variants(docs, n_variants=2)
     hashes = multimodal.image_phash(imgs).transform(stage_checkpoint, eager=False)
-    return multimodal.phash128_neardup_pairs(
-        hashes, id_col="image_id", bands=4, max_hamming=3
+    return dedup.hamming_pairs(
+        hashes, id_col="image_id", lanes=("dhash", "ahash"), bands=4, max_hamming=3
     )
 
 
@@ -459,7 +459,7 @@ def mm_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     energy-delta fingerprint (afp64_from_samples: 65 window energies,
     64 comparison bits) hashes each clip, and near-dup pairs fall out
     of the SAME pigeonhole band-blocked Hamming join the image path
-    uses (phash_neardup_pairs, 4×16-bit bands, exact recall at
+    uses (dedup.hamming_pairs, 4×16-bit bands, exact recall at
     Hamming ≤ 3). One changed window flips at most its two adjacent
     energy comparisons → planted pairs at Hamming ≤ 2, unrelated clips
     near 32. Full value-hash oracle: DuckDB recomputes every
@@ -474,8 +474,8 @@ def mm_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes = multimodal.audio_fingerprint(clips).transform(
         stage_checkpoint, eager=False
     )
-    return multimodal.phash_neardup_pairs(
-        hashes, id_col="audio_id", hash_col="afp", bands=4, max_hamming=3
+    return dedup.hamming_pairs(
+        hashes, id_col="audio_id", lanes=("afp",), bands=4, max_hamming=3
     )
 
 
@@ -562,10 +562,10 @@ def mm_audio_neardup_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes = multimodal.audio_fingerprint_wide(clips).transform(
         stage_checkpoint, eager=False
     )
-    return multimodal.phash128_neardup_pairs(
+    return dedup.hamming_pairs(
         hashes,
         id_col="audio_id",
-        lane_cols=("afp", "afp_mean"),
+        lanes=("afp", "afp_mean"),
         bands=8,
         max_hamming=7,
     )

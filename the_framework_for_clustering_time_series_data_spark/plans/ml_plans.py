@@ -1929,7 +1929,7 @@ def text_tfidf_md5kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     map lookup for the dense form (no doc×64 grid blow-up), and the
     broadcast-k Lloyd."""
     from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import stage_checkpoint
-    from the_framework_for_clustering_time_series_data_spark.operators.text import TOKEN_RE, length_balanced
+    from the_framework_for_clustering_time_series_data_spark.operators.text import length_balanced, tokens_expr
 
     docs = load_table(spark, sf_dir, "documents")
     # length-balance ONLY the tokenize path: the other docs consumers
@@ -1937,7 +1937,7 @@ def text_tfidf_md5kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # metadata-sized and must not inherit the full-text shuffle
     tok = length_balanced(docs).select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), TOKEN_RE)).alias("term"),
+        F.explode(tokens_expr("text")).alias("term"),
     )
     tf = (
         tok.groupBy("doc_id", "term")

@@ -385,7 +385,7 @@ def split_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     split = F.when(unit < 0.8, "train").when(unit < 0.9, "val").otherwise("test")
     tok = docs.select(
         split.alias("split"),
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok"),
+        F.explode(tokens_expr("text")).alias("tok"),
     )
     vocab = tok.where(F.col("split") == "train").select("tok").distinct()
     probe = tok.where(F.col("split") != "train").join(
@@ -743,7 +743,7 @@ def pack_harmonic_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("n_tokens"),
+        F.size(tokens_expr("text")).alias("n_tokens"),
     ).where(F.col("n_tokens") <= _HB_CAP)
     cls = d.withColumn("k", F.floor(F.lit(_HB_CAP) / F.col("n_tokens")).cast("long"))
     w = Window.partitionBy("k").orderBy(F.col("n_tokens").desc(), "doc_id")

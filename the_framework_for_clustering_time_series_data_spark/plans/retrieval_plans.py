@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from the_framework_for_clustering_time_series_data_spark.operators.text import tokens_expr
 from the_framework_for_clustering_time_series_data_spark.plans.registry import register
 from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import tiny_window
 from the_framework_for_clustering_time_series_data_spark.sources.tables import load_table
@@ -109,7 +110,7 @@ def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"),
+        tokens_expr("text").alias("toks"),
     ).withColumn("dl", F.size("toks"))
 
     # Per-term tf as array folds — one pass over the scan, no explode.
@@ -323,9 +324,7 @@ def retrieval_phrase_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tk = (
         docs.select(
             "doc_id",
-            F.posexplode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
-                "p", "tok"
-            ),
+            F.posexplode(tokens_expr("text")).alias("p", "tok"),
         )
         .where(F.col("tok") != "")
         .select(

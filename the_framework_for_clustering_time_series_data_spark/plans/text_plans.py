@@ -305,7 +305,7 @@ def text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered; the shuffle carries one row per DISTINCT token thanks
     to map-side partial counts, not one per occurrence."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = T.tokens_expr("text")
     return (
         docs.select(F.explode(toks).alias("token"))
         .groupBy("token")
@@ -425,7 +425,7 @@ def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, word); the doc total is a whole-partition window so the final
     per-doc aggregate reuses the doc partitioning."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = T.tokens_expr("text")
     words = docs.select(F.col("doc_id"), F.explode(toks).alias("word"))
     counts = words.groupBy("doc_id", "word").agg(F.count("*").alias("cnt"))
     n = F.sum("cnt").over(Window.partitionBy("doc_id"))
@@ -942,7 +942,7 @@ def text_keywords_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("term"),
+        F.explode(T.tokens_expr("text")).alias("term"),
     )
     tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df = tok.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
@@ -1172,7 +1172,7 @@ def text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     RS, US = "\x1e", "\x1f"
     words = docs.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word"),
+        F.explode(T.tokens_expr("text")).alias("word"),
     ).where(F.col("word") != "")
     vocab = words.select("word").distinct()
     # wrap every char: one regex pass builds the marker representation
@@ -1367,7 +1367,7 @@ def text_wordpiece_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word"),
+        F.explode(T.tokens_expr("text")).alias("word"),
     ).where(F.col("word") != "")
     wf = words.groupBy("word").agg(F.count("*").alias("freq"))
     gr = (
@@ -1501,9 +1501,7 @@ def text_collocations_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     tk = (
         docs.select(
             "doc_id",
-            F.posexplode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
-                "p", "tok"
-            ),
+            F.posexplode(T.tokens_expr("text")).alias("p", "tok"),
         )
         .where(F.col("tok") != "")
         .select(

@@ -561,16 +561,23 @@ def _complete_deltas(base) -> list:
     )
 
 
-def _read_complete_deltas(spark, base) -> DataFrame:
-    """Every complete delta under ``base`` as ONE basePath-anchored
-    scan, so ``delta`` and ``cell`` read as partition columns and
-    partition pruning holds (a delta mid-rewrite is skipped until its
-    marker lands — read-committed serving)."""
+def _require_deltas(base) -> list:
+    """:func:`_complete_deltas`, raising FileNotFoundError when no
+    delta under ``base`` is complete."""
     deltas = _complete_deltas(base)
     if not deltas:
         raise FileNotFoundError(
             f"no complete delta=* snapshot (with _SUCCESS) under {base}"
         )
+    return deltas
+
+
+def _read_complete_deltas(spark, base) -> DataFrame:
+    """Every complete delta under ``base`` as ONE basePath-anchored
+    scan, so ``delta`` and ``cell`` read as partition columns and
+    partition pruning holds (a delta mid-rewrite is skipped until its
+    marker lands — read-committed serving)."""
+    deltas = _require_deltas(base)
     return spark.read.option("basePath", str(base)).parquet(
         *[str(p) for p in deltas]
     )
@@ -814,9 +821,9 @@ def streaming_simhash_dedup(
     form (round-8 extension): each micro-batch of documents is
     SimHash-fingerprinted (operators/dedup.simhash, the batch kernel),
     banded-joined against the fingerprints of everything ingested so
-    far PLUS its own smaller-id rows (the pigeonhole band layout
-    dedup.simhash_pairs uses, ``dedup._simhash_bands``: candidates
-    come from an equi-join, never all-pairs), verified
+    far PLUS its own smaller-id rows (``dedup.hamming_pairs``, the
+    pigeonhole band layout dedup.simhash_pairs uses: candidates come
+    from an equi-join, never all-pairs), verified
     with ``bit_count(xor) ≤ max_hamming``, and appended to the state
     with its verdict: ``near_dup_of`` = the smallest earlier doc_id
     within the Hamming radius, −1 when novel.
@@ -830,9 +837,13 @@ def streaming_simhash_dedup(
     Verdicts equal the batch form (min smaller-id match over ALL
     pairs) when documents ingest in doc_id order — the natural
     dedup-on-ingest contract: each document is judged against the
-    corpus as of its arrival. At fleet scale the per-batch cost is one
-    fingerprint pass over the batch + a banded join whose left side
-    prunes to the batch's band values (the index never self-joins)."""
+    corpus as of its arrival. One difference: ``simhash_pairs`` skips
+    band buckets with more than 1,000 members, and the stream does
+    not, so a pair found only through such a bucket is a stream
+    verdict the batch form lacks. At fleet scale the per-batch cost is
+    one fingerprint pass over the batch + a banded join whose left
+    side prunes to the batch's band values (the index never
+    self-joins)."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         cur = _read_version(
@@ -851,28 +862,10 @@ def streaming_simhash_dedup(
             batch_df, bits=bits, hash_family=hash_family
         ).persist()
         pool = cur.select("id", "simhash").unionByName(new_fp)
-        a = dedup._simhash_bands(pool, max_hamming, bits).alias("a")
-        b = dedup._simhash_bands(new_fp, max_hamming, bits).alias("b")
-        cand = (
-            a.join(
-                b,
-                on=[
-                    F.col("a.band_id") == F.col("b.band_id"),
-                    F.col("a.band_val") == F.col("b.band_val"),
-                    F.col("a.id") < F.col("b.id"),
-                ],
-            )
-            .select(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.col("a.simhash").alias("ha"),
-                F.col("b.simhash").alias("hb"),
-            )
-            .distinct()
-        )
         matches = (
-            cand.where(
-                F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))) <= max_hamming
+            dedup.hamming_pairs(
+                pool, new_fp, id_col="id", lanes=("simhash",),
+                bands=max_hamming + 1, max_hamming=max_hamming, bits=bits,
             )
             .groupBy(F.col("id_b").alias("id"))
             .agg(F.min("id_a").alias("near_dup_of"))
@@ -1410,7 +1403,7 @@ def _drift_rebuild(spark, index_dir, kind, limit, force, checkpoint, build) -> b
         return False
     root = Path(index_dir)
     base = root / _index_base_name(index_dir)
-    deltas = _complete_deltas(base)
+    deltas = _require_deltas(base)
     top = _hive_int(deltas[-1])
     _replay_guard(checkpoint, top, action)
     staged = root / "_requant_tmp"
