@@ -10,7 +10,7 @@ import argparse
 import json
 import os
 import sys
-import time
+from functools import partial
 from pathlib import Path
 
 REPO = str(Path(__file__).resolve().parent)
@@ -40,6 +40,15 @@ def detail_filename(queries_arg: str | None) -> str:
 #: the load canary: a scan+agg plan byte-identical since round 8 —
 #: its steady/median ratio measures session load, not regressions
 _CANARY = "q1_pricing_summary"
+
+#: median runs: every headline query whose steady run takes at least
+#: MEDIAN_MIN seconds, and never fewer than the MEDIAN_TOP slowest, is
+#: re-run to MEDIAN_RUNS samples (the steady run included); the stdout
+#: line carries the MEDIAN_LINE_N slowest medians
+MEDIAN_TOP = 10
+MEDIAN_MIN = 1.0
+MEDIAN_RUNS = 5
+MEDIAN_LINE_N = 15
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -140,6 +149,7 @@ def main() -> None:
     ap.add_argument("--queries", default=None)
     args = ap.parse_args()
 
+    from the_framework_for_clustering_time_series_data_spark.functions.runstats import release, timed
     from the_framework_for_clustering_time_series_data_spark.plans.registry import QUERIES
     from the_framework_for_clustering_time_series_data_spark.preflight import memory_preflight
     from the_framework_for_clustering_time_series_data_spark.session import get_spark
@@ -157,19 +167,7 @@ def main() -> None:
         sys.exit(f"unknown queries: {unknown}; available: {sorted(QUERIES)}")
 
     # warm the JVM + parquet footers once (untimed)
-    def evaluate(df) -> None:
-        # Timed action: a NOOP WRITE, not .count() and not .collect().
-        # count() lets Catalyst PRUNE cardinality-preserving expression
-        # work — Window/projection stages vanish from the counted plan
-        # (round-7 adjudication: ts_interpolate_linear "ran" in 0.3 s
-        # under count while full evaluation was 2-36 s) — and collect()
-        # adds 1M-row py4j serialization that no 100-TB pipeline pays
-        # (they write to storage). The noop sink evaluates every output
-        # column and discards rows executor-side: the honest engine
-        # cost. BASELINE.md re-bases all round-7+ numbers on this.
-        df.write.format("noop").mode("overwrite").save()
-
-    evaluate(QUERIES[names[0]](spark, args.sf_dir))
+    timed(spark, partial(QUERIES[names[0]], spark, args.sf_dir))
 
     # Each query runs twice: the first (cold) run pays one-time Janino
     # whole-stage-codegen compilation (~2-5 s for the widest plans —
@@ -182,39 +180,25 @@ def main() -> None:
     # variants and generated limit counters (ROADMAP direction 2).
     # ``value`` totals the steady-state runs; cold runs are reported
     # alongside in ``queries_cold`` for transparency.
-    # MEASUREMENT-HYGIENE (round-13 fix, guide §1): collect Python
-    # garbage between timed runs. DataFrame/Column wrappers participate
-    # in reference cycles, so dropped plans linger until a generational
-    # GC pass; the py4j refs they hold keep the JVM-side plans,
-    # broadcasts and localCheckpoint blocks alive, and ContextCleaner
-    # cannot release them. Round-13 diagnosis: sim_ann_recall_audit's
-    # five in-bench median runs grew MONOTONICALLY 7.8 → 35.8 s while
-    # an explicit gc.collect() between identical runs held all six at a
-    # flat ~8 s (r12's canary_ratio 1.361 and the 10 PERF-flagged
-    # "regressions" were this contamination, not plan changes). The
-    # timed region itself is untouched — the GC runs between runs, and
-    # every run still computes from parquet.
-    import gc
-
+    # MEASUREMENT-HYGIENE: every run goes through runstats.timed, whose
+    # untimed release (clearCache, gc.collect, unpersist of leftover
+    # localCheckpoint blocks) runs between runs, so no run reads a
+    # cache or pays GC pressure a previous run left. Round-13
+    # diagnosis: without the gc.collect, sim_ann_recall_audit's five
+    # in-bench median runs grew MONOTONICALLY 7.8 → 35.8 s (r12's
+    # canary_ratio 1.361 was this contamination, not plan changes).
+    # The timed region is untouched — every run still computes from
+    # parquet.
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     for name in names:
-        gc.collect()
-        t0 = time.perf_counter()
-        evaluate(QUERIES[name](spark, args.sf_dir))
-        cold[name] = round(time.perf_counter() - t0, 3)
-        # drop any .cache() an operator materialized during the cold
-        # run — the steady run must re-execute, not read cached RDDs
-        spark.catalog.clearCache()
-        gc.collect()
-        t0 = time.perf_counter()
-        evaluate(QUERIES[name](spark, args.sf_dir))
-        timings[name] = round(time.perf_counter() - t0, 3)
-        spark.catalog.clearCache()
-        n = QUERIES[name](spark, args.sf_dir).count()  # untimed row report
+        build = partial(QUERIES[name], spark, args.sf_dir)
+        cold[name] = round(timed(spark, build)[0], 3)
+        timings[name] = round(timed(spark, build)[0], 3)
+        n = build().count()  # untimed row report
         # the untimed count can itself materialize an operator's
-        # .cache(); clear again so it can't warm the NEXT query's cold run
-        spark.catalog.clearCache()
+        # .cache(); release so it can't warm the NEXT query's cold run
+        release(spark)
         print(
             f"# {name}: {timings[name]}s steady / {cold[name]}s cold ({n} rows)",
             file=sys.stderr,
@@ -225,39 +209,26 @@ def main() -> None:
     # a 60.5 s idle median over the same set), so the emitted record
     # carries both — the median map ends the drift-vs-regression
     # ambiguity for the queries that dominate the total. Round 6
-    # (verdict ask #8): medians cover EVERY headline query with a
-    # steady run ≥ SPARK_GRAFT_MEDIAN_MIN seconds (default 1.0), so
-    # next round's regression adjudication needs no out-of-band
-    # BASELINE.md lookup, with SPARK_GRAFT_MEDIAN_TOP (default 10) as
-    # the floor on how many of the slowest are always covered. Knobs:
-    # SPARK_GRAFT_MEDIAN_TOP (0 disables), SPARK_GRAFT_MEDIAN_MIN,
-    # SPARK_GRAFT_MEDIAN_RUNS (samples per query, incl. the steady run).
-    med_top = int(os.environ.get("SPARK_GRAFT_MEDIAN_TOP", "10"))
-    med_min = float(os.environ.get("SPARK_GRAFT_MEDIAN_MIN", "1.0"))
-    med_runs = int(os.environ.get("SPARK_GRAFT_MEDIAN_RUNS", "5"))
+    # (verdict ask #8): medians cover every slow headline query (see
+    # MEDIAN_MIN / MEDIAN_TOP), so next round's regression adjudication
+    # needs no out-of-band BASELINE.md lookup.
     median5: dict[str, float] = {}
-    if med_top > 0 and med_runs > 1:
-        by_cost = [n for n, _ in sorted(timings.items(), key=lambda kv: -kv[1])]
-        slowest = [
-            n for i, n in enumerate(by_cost) if i < med_top or timings[n] >= med_min
-        ]
-        # the canary always gets a median so the emitted record carries
-        # its own load evidence (round-11 verdict ask #8): q1's plan has
-        # been byte-identical since round 8, so steady/median >> 1 on it
-        # means driver-session load, not a regression
-        if _CANARY in timings and _CANARY not in slowest:
-            slowest.append(_CANARY)
-        for name in slowest:
-            samples = [timings[name]]
-            for _ in range(med_runs - 1):
-                gc.collect()  # same hygiene as the main loop
-                t0 = time.perf_counter()
-                evaluate(QUERIES[name](spark, args.sf_dir))
-                samples.append(round(time.perf_counter() - t0, 3))
-                spark.catalog.clearCache()
-            samples.sort()
-            median5[name] = samples[len(samples) // 2]
-            print(f"# median{med_runs} {name}: {median5[name]}s {samples}", file=sys.stderr)
+    by_cost = [n for n, _ in sorted(timings.items(), key=lambda kv: -kv[1])]
+    slowest = [n for i, n in enumerate(by_cost) if i < MEDIAN_TOP or timings[n] >= MEDIAN_MIN]
+    # the canary always gets a median so the emitted record carries
+    # its own load evidence (round-11 verdict ask #8): q1's plan has
+    # been byte-identical since round 8, so steady/median >> 1 on it
+    # means driver-session load, not a regression
+    if _CANARY in timings and _CANARY not in slowest:
+        slowest.append(_CANARY)
+    for name in slowest:
+        build = partial(QUERIES[name], spark, args.sf_dir)
+        samples = [timings[name]]
+        for _ in range(MEDIAN_RUNS - 1):
+            samples.append(round(timed(spark, build)[0], 3))
+        samples.sort()
+        median5[name] = samples[len(samples) // 2]
+        print(f"# median{MEDIAN_RUNS} {name}: {median5[name]}s {samples}", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)
     # load evidence (round-11 verdict ask #8): in-sequence steady time
@@ -296,7 +267,6 @@ def main() -> None:
     # median map keeps the 15 slowest (full map in BENCH_FULL.json),
     # and cold totals stay in BENCH_FULL.json — the full-precision
     # record is always the detail file.
-    med_line_n = int(os.environ.get("SPARK_GRAFT_MEDIAN_LINE_N", "15"))
     compact = {
         "metric": "headline_queries_total",
         "value": total,
@@ -304,7 +274,7 @@ def main() -> None:
         "queries": {q: round(t, 2) for q, t in timings.items()},
         "median5": {
             q: round(t, 2)
-            for q, t in sorted(median5.items(), key=lambda kv: -kv[1])[:med_line_n]
+            for q, t in sorted(median5.items(), key=lambda kv: -kv[1])[:MEDIAN_LINE_N]
         },
         "canary_ratio": canary_ratio,
         "sf": float(sf),

@@ -179,3 +179,23 @@ def test_checkpoint_disabled_seam_identical_values(spark, tmp_path):
     finally:
         spark.conf.unset("spark.graft.checkpoint.disabled")
     assert base == nock
+
+
+def test_release_unpersists_checkpoint_blocks(spark):
+    """clearCache() and gc.collect() leave localCheckpoint blocks
+    registered; runstats.release is the step that frees them."""
+    import gc
+
+    from tests.conftest import SF_SMALL
+    from the_framework_for_clustering_time_series_data_spark.functions.runstats import noop_write, release
+    from the_framework_for_clustering_time_series_data_spark.plans.registry import QUERIES
+
+    release(spark)  # start from a session no earlier test left blocks in
+    # dedup_minhash_lsh stages two eager checkpoints
+    noop_write(QUERIES["dedup_minhash_lsh"](spark, SF_SMALL))
+    spark.catalog.clearCache()
+    gc.collect()
+    left = spark.sparkContext._jsc.getPersistentRDDs().size()
+    assert left >= 1
+    assert release(spark) == left
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0

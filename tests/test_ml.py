@@ -193,12 +193,12 @@ def test_dtw_path_is_valid_warping():
 
     a = np.array([0.0, 1.0, 2.0, 3.0])
     b = np.array([0.0, 0.5, 1.0, 2.0, 2.5, 3.0])
-    path = _dtw_path(a, b)
+    path, _ = _dtw_path(a, b)
     assert path[0] == (0, 0) and path[-1] == (len(a) - 1, len(b) - 1)
     for (i0, j0), (i1, j1) in zip(path, path[1:]):
         assert (i1 - i0, j1 - j0) in {(0, 1), (1, 0), (1, 1)}
     # identical series → diagonal path
-    diag = _dtw_path(a, a)
+    diag, _ = _dtw_path(a, a)
     assert diag == [(i, i) for i in range(len(a))]
 
 

@@ -16,6 +16,17 @@ from the_framework_for_clustering_time_series_data_spark.functions.parity import
     canon as _canon,
     duck_connect as _duck,
 )
+from the_framework_for_clustering_time_series_data_spark.functions.runstats import release
+
+
+@pytest.fixture(autouse=True)
+def _release_after_case(spark):
+    """Release each case's cache and localCheckpoint blocks, so a
+    290-query sweep in one session does not carry every earlier case's
+    blocks. Module-local on purpose: other modules' module-scoped
+    fixtures hold checkpointed frames that must outlive one test."""
+    yield
+    release(spark)
 
 
 #: DuckDB result type → comparison family. Anything absent (HUGEINT,

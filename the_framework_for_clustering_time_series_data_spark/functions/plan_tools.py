@@ -214,13 +214,6 @@ def exact_mean6(col, window=None):
     return F.floor(s.cast("double") / c + F.lit(0.5)) / F.lit(1e6)
 
 
-#: the DuckDB twin of exact_mean6 — format with the column expression
-MEAN6_SQL = (
-    "floor(CAST(sum(CAST(floor(({x}) * 1e6 + 0.5) AS BIGINT)) AS DOUBLE)"
-    " / count({x}) + 0.5) / 1e6"
-)
-
-
 def stage_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """Lineage-truncating materialization for iterative loops and
     multi-consumer plans — the engine's single switch between the two

@@ -156,7 +156,7 @@ def dtw_stretch_align(df: DataFrame) -> DataFrame:
             if len(short) == len(long_vals):
                 aligned = short
             else:
-                path = np.asarray(_dtw_path(short, long_vals), dtype=np.int64)
+                path = np.asarray(_dtw_path(short, long_vals)[0], dtype=np.int64)
                 delta = np.zeros(len(long_vals))
                 np.add.at(delta, path[:, 1], long_vals[path[:, 1]] - short[path[:, 0]])
                 aligned = long_vals - delta
@@ -180,15 +180,29 @@ def dtw_stretch_align(df: DataFrame) -> DataFrame:
 
 
 def _dtw_path(a, b):
-    """Exact DTW optimal path between 1-D arrays (cost = |a_i - b_j|),
-    standard O(n·m) dynamic program with backtracking.
+    """Exact DTW between 1-D series (cost = |a_i - b_j|, steps {diag,
+    up, left}): the standard O(n·m) dynamic program with backtracking.
+    Float input runs in float64 (sentinel ``inf``); integer input stays
+    INT64 (sentinel ``1 << 62``), so every cell, tie-break and the
+    distance are reproducible bit-for-bit in any engine (the property
+    the c11/c13 DuckDB oracles rely on). Backtrack ties resolve
+    diag -> up -> left, the lexicographic (acc, i, j) preference the g6
+    oracle replays. Returns (path, distance): the 0-based cells from
+    (0, 0) to (n-1, m-1), and the total cost.
     """
     import numpy as np
 
+    if np.issubdtype(np.result_type(np.asarray(a), np.asarray(b)), np.integer):
+        dtype, big = np.int64, 1 << 62
+    else:
+        dtype, big = np.float64, np.inf
+    a, b = np.asarray(a, dtype=dtype), np.asarray(b, dtype=dtype)
     n, m = len(a), len(b)
     cost = np.abs(a[:, None] - b[None, :])
-    acc = np.full((n + 1, m + 1), np.inf)
-    acc[0, 0] = 0.0
+    acc = np.full((n + 1, m + 1), big, dtype=dtype)
+    # a zero corner gives every cell a finite predecessor, so the int
+    # sums never touch the sentinel
+    acc[0, 0] = 0
     for i in range(1, n + 1):
         row = cost[i - 1]
         prev = acc[i - 1]
@@ -202,7 +216,7 @@ def _dtw_path(a, b):
         moves = ((acc[i - 1, j - 1], i - 1, j - 1), (acc[i - 1, j], i - 1, j), (acc[i, j - 1], i, j - 1))
         _, i, j = min(moves)
     path.reverse()
-    return path
+    return path, acc[n, m].item()
 
 
 def to_nested(df: DataFrame, value_col: str = "value") -> DataFrame:

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from the_framework_for_clustering_time_series_data_spark.functions.plan_tools import stage_checkpoint, tiny_window
+from the_framework_for_clustering_time_series_data_spark.operators.align import _dtw_path
 
 
 # --------------------------------------------------------------------------
@@ -1593,48 +1594,6 @@ def single_link(
 # C11 — DTW Barycenter Averaging (DBA), deterministic twin
 # --------------------------------------------------------------------------
 
-def _dtw_path_int(a: list, b: list):
-    """Exact DTW between two INT64 micro-unit series (cost = |a_i-b_j|,
-    steps {diag, up, left}) — the arithmetic is pure integer, so every
-    cell, tie-break, and the returned distance are reproducible
-    bit-for-bit in any engine (the property the c11 DuckDB oracle
-    relies on). Backtrack ties resolve diag -> up -> left, the same
-    lexicographic (acc, i, j) preference as :func:`_dtw_path` / the g6
-    oracle. Returns (path cells 1-based from (n,m) down to (1,1),
-    total distance)."""
-    import numpy as np
-
-    BIG = 1 << 62
-    n, m = len(a), len(b)
-    av = np.asarray(a, dtype=np.int64)
-    bv = np.asarray(b, dtype=np.int64)
-    cost = np.abs(av[:, None] - bv[None, :])
-    acc = np.full((n + 1, m + 1), BIG, dtype=np.int64)
-    for i in range(1, n + 1):
-        row = cost[i - 1]
-        prev = acc[i - 1]
-        cur = acc[i]
-        for j in range(1, m + 1):
-            if i == 1 and j == 1:
-                cur[j] = row[0]
-            else:
-                cur[j] = row[j - 1] + min(prev[j], cur[j - 1], prev[j - 1])
-    path = [(n, m)]
-    i, j = n, m
-    while not (i == 1 and j == 1):
-        dga = acc[i - 1, j - 1] if (i > 1 and j > 1) else BIG
-        upa = acc[i - 1, j] if i > 1 else BIG
-        lfa = acc[i, j - 1] if j > 1 else BIG
-        if dga <= upa and dga <= lfa:
-            i, j = i - 1, j - 1
-        elif upa <= lfa:
-            i = i - 1
-        else:
-            j = j - 1
-        path.append((i, j))
-    return path, int(acc[n, m])
-
-
 def dba_md5(
     nested: DataFrame,
     n_series: int = 12,
@@ -1653,7 +1612,7 @@ def dba_md5(
     * b0 = per-position mean, integer round-half-up
       ``(2*sum + cnt) // (2*cnt)`` (values nonnegative);
     * each round: exact integer DTW path of every series against the
-      broadcast barycenter (:func:`_dtw_path_int`, distributed via
+      broadcast barycenter (:func:`~.align._dtw_path`, distributed via
       applyInPandas — per-series work is embarrassingly parallel), new
       barycenter[j] = integer round-half-up mean of ALL aligned values
       across series, inertia = sum of path distances;
@@ -1710,11 +1669,11 @@ def dba_md5(
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             out = {"series_id": [], "j": [], "a_us": [], "dist_us": []}
             for sid, vals in zip(pdf["series_id"], pdf["vus"]):
-                path, dist = _dtw_path_int(list(vals), bref)
+                path, dist = _dtw_path(vals, bref)
                 for pi, pj in path:
                     out["series_id"].append(sid)
-                    out["j"].append(pj - 1)
-                    out["a_us"].append(int(vals[pi - 1]))
+                    out["j"].append(pj)
+                    out["a_us"].append(int(vals[pi]))
                     out["dist_us"].append(dist)
             return pd.DataFrame(out)
 
@@ -1805,15 +1764,15 @@ def dtw_kmeans_md5(
             for sid, vals in zip(pdf["series_id"], pdf["vus"]):
                 best = None
                 for cell in sorted(cref):
-                    path, dist = _dtw_path_int(list(vals), cref[cell])
+                    path, dist = _dtw_path(vals, cref[cell])
                     if best is None or (dist, cell) < (best[0], best[1]):
                         best = (dist, cell, path)
                 dist, cell, path = best
                 for pi, pj in path:
                     out["series_id"].append(sid)
                     out["cell"].append(cell)
-                    out["j"].append(pj - 1)
-                    out["a_us"].append(int(vals[pi - 1]))
+                    out["j"].append(pj)
+                    out["a_us"].append(int(vals[pi]))
                     out["dist_us"].append(dist)
             return pd.DataFrame(out)
 

@@ -369,9 +369,11 @@ def minhash_lsh_pairs(
         )
     )
     # cand is used twice below (id set + final join) and is tiny —
-    # materialize IT (localCheckpoint, released with the plan when the
-    # result is dropped) rather than .cache(), which would pin a
-    # cache-manager entry per call for the session's lifetime.
+    # materialize IT (localCheckpoint) rather than .cache(), which
+    # would pin a cache-manager entry per call for the session's
+    # lifetime. Its blocks stay registered after the result is dropped
+    # until an explicit unpersist: runners free them with
+    # functions.runstats.release.
     cand = (
         buckets.select(F.explode(pair_arr).alias("p"))
         .select("p.id_a", "p.id_b")

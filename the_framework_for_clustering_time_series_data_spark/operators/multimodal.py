@@ -61,10 +61,6 @@ FFMPEG_AVAILABLE = (
     shutil.which("ffmpeg") is not None and shutil.which("ffprobe") is not None
 )
 
-#: True when EVERY modality has its real decoder — kept for callers
-#: that want a single switch; the kernels gate per modality.
-REAL_DECODERS_AVAILABLE = PIL_AVAILABLE and SOUNDFILE_AVAILABLE and FFMPEG_AVAILABLE
-
 
 #: PNG signature — payloads starting with this route through the
 #: pure-stdlib decoder below, PIL or not.
@@ -1708,10 +1704,6 @@ class _FlacBits:
         self.n = 0
 
 
-_FLAC_SAMPLE_RATES = {
-    1: 88200, 2: 176400, 3: 192000, 4: 8000, 5: 16000, 6: 22050,
-    7: 24000, 8: 32000, 9: 44100, 10: 48000, 11: 96000,
-}
 _FLAC_SAMPLE_SIZES = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}
 
 
@@ -1821,6 +1813,28 @@ def _flac_subframe(bits: _FlacBits, blocksize: int, bps: int) -> list[int]:
     return x
 
 
+def _audio_summary(
+    samples: list[float], rate: int, n_windows: int
+) -> tuple[float, int, float, list[float]]:
+    """The stdlib decoders' shared feature fold over mono samples in
+    [-1, 1] → (duration_s, sample_rate, peak_dbfs, ``n_windows``-slot
+    RMS envelope)."""
+    import math
+
+    n = len(samples)
+    duration = round(n / rate, 3)
+    peak = max((abs(s) for s in samples), default=0.0)
+    peak_dbfs = round(20 * math.log10(peak) if peak > 0 else -120.0, 3)
+    env = []
+    for i in range(n_windows):
+        seg = samples[i * n // n_windows : (i + 1) * n // n_windows]
+        if seg:
+            env.append(round(math.sqrt(sum(s * s for s in seg) / len(seg)), 6))
+        else:
+            env.append(0.0)
+    return duration, int(rate), peak_dbfs, env
+
+
 def decode_flac_features(
     payload: bytes, n_windows: int = 8
 ) -> tuple[float, int, float, list[float]]:
@@ -1840,8 +1854,6 @@ def decode_flac_features(
     normalize by 2^(bits−1), channels mix down by mean, peak in dBFS,
     ``n_windows``-slot RMS envelope. Lossy codecs (MP3/AAC/OGG) stay
     behind soundfile."""
-    import math
-
     data = bytes(payload)
     if not _is_flac(data):
         raise ValueError("not a FLAC payload")
@@ -1946,19 +1958,7 @@ def decode_flac_features(
             mixed.append(sum(ch[i] for ch in chans) / k / scale)
     if total:
         mixed = mixed[: int(total)]
-
-    n = len(mixed)
-    duration = round(n / sr, 3)
-    peak = max((abs(s) for s in mixed), default=0.0)
-    peak_dbfs = round(20 * math.log10(peak) if peak > 0 else -120.0, 3)
-    env = []
-    for i in range(n_windows):
-        seg = mixed[i * n // n_windows : (i + 1) * n // n_windows]
-        if seg:
-            env.append(round(math.sqrt(sum(s * s for s in seg) / len(seg)), 6))
-        else:
-            env.append(0.0)
-    return duration, int(sr), peak_dbfs, env
+    return _audio_summary(mixed, sr, n_windows)
 
 
 #: IMA-ADPCM step-size table (IMA ADPCM reference algorithm /
@@ -2101,7 +2101,6 @@ def decode_wav_features(
     soundfile stays the route for those.
     """
     import io
-    import math
     import struct
     import wave
 
@@ -2116,18 +2115,7 @@ def decode_wav_features(
         # non-PCM container: the stdlib module refuses; IMA-ADPCM
         # decodes here, anything else re-raises as unsupported
         rate, _nc, samples = _decode_wav_compressed(payload)
-        n = len(samples)
-        duration = round(n / rate, 3)
-        peak = max((abs(s) for s in samples), default=0.0)
-        peak_dbfs = round(20 * math.log10(peak) if peak > 0 else -120.0, 3)
-        env = []
-        for i in range(n_windows):
-            seg = samples[i * n // n_windows : (i + 1) * n // n_windows]
-            if seg:
-                env.append(round(math.sqrt(sum(s * s for s in seg) / len(seg)), 6))
-            else:
-                env.append(0.0)
-        return duration, int(rate), peak_dbfs, env
+        return _audio_summary(samples, rate, n_windows)
     if width == 2:
         ints = struct.unpack(f"<{len(raw) // 2}h", raw)
         scale = float(1 << 15)
@@ -2145,18 +2133,7 @@ def decode_wav_features(
             sum(samples[i : i + n_ch]) / n_ch
             for i in range(0, len(samples), n_ch)
         ]
-    n = len(samples)
-    duration = round(n / rate, 3)
-    peak = max((abs(s) for s in samples), default=0.0)
-    peak_dbfs = round(20 * math.log10(peak) if peak > 0 else -120.0, 3)
-    env = []
-    for i in range(n_windows):
-        seg = samples[i * n // n_windows : (i + 1) * n // n_windows]
-        if seg:
-            env.append(round(math.sqrt(sum(s * s for s in seg) / len(seg)), 6))
-        else:
-            env.append(0.0)
-    return duration, int(rate), peak_dbfs, env
+    return _audio_summary(samples, rate, n_windows)
 
 
 def extract_audio_features(

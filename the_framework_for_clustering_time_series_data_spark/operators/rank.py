@@ -122,9 +122,10 @@ def with_global_ntiles(
         pv = proxy if proxy is not None else F.col(order_cols[0]).cast("double")
         base = base.withColumn(f"_pv{i}", pv.cast("double"))
     # one materialization feeds the two metadata jobs AND the returned
-    # plan (executor-local blocks, reclaimed by the ContextCleaner when
-    # the frame is dropped — no session cache leak); without it each
-    # consumer recomputes the upstream pipeline per job
+    # plan (executor-local blocks, no session cache entry; they stay
+    # registered after the frame is dropped until an explicit
+    # unpersist — runners free them with functions.runstats.release);
+    # without it each consumer recomputes the upstream pipeline per job
     base = base.transform(stage_checkpoint, eager=False)
 
     # 1. all boundary arrays in ONE eager pass, driver-held, embedded

@@ -51,7 +51,6 @@ def cms_hash_dim(df_or_spark) -> DataFrame:
 # lookup: lsb(w) = w & -w = 2^(ρ-1), so 2^(53-ρ) = 2^52 / lsb(w)
 # exactly, and a register's max-ρ is its max-lsb. Σ over 256 registers
 # ≤ 256·2^53 = 2^61 — exact in int64.
-HLL_M = 256
 HLL_TWO52 = 1 << 52
 HLL_TWO53 = 1 << 53
 #: α_m·m²·2^53 for m=256 written as the literal expression BOTH engines

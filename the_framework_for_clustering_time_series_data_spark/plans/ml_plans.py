@@ -2276,7 +2276,7 @@ def c11_dba_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DTW-metric centroid the reference's clustering family implies
     but never ships (its K-Shape uses the SBD analogue, app.py:731-737)
     — with a FULL value-hash oracle: the 12 smallest-md5 24-point
-    series in INT64 micro-units, integer DTW paths (cluster._dtw_path_int
+    series in INT64 micro-units, integer DTW paths (align._dtw_path
     == the oracle's BIGINT anti-diagonal recursive-CTE DP, sentinel
     2^62), round-half-up integer barycenter means, two fixed rounds.
     Output is the whole round HISTORY (rnd, j, bary, inertia), so the

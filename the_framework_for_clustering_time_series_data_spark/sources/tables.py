@@ -29,12 +29,6 @@ TABLES = (
     "embeddings",
 )
 
-# Tables that stay constant-size at EVERY scale factor and are always
-# safe to broadcast-hint. supplier/customer/part grow with SF — their
-# join strategy belongs to Catalyst statistics + AQE, never a hint.
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
-
 # per session (dropped with it): table path -> (file-set stamp, StructType)
 _SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 _SCHEMAS_LOCK = threading.Lock()

@@ -9,7 +9,7 @@ dedup catches.
 Protocol: one idle session, noop-free (the operators end in
 applyInPandas — the timed action is a full .count() materialization
 plus the invariant aggregation, identical for both forms), untimed
-warm-up on a 100k prefix, clearCache between runs.
+warm-up on a 100k prefix, ``functions.runstats.release`` between runs.
 
 Usage: python tools/coarse_smoke.py [--n 1000000] [--out SCALE_COARSE_1M.json]
 """
@@ -33,6 +33,7 @@ def main() -> None:
     ap.add_argument("--out", default=str(REPO / "SCALE_COARSE_1M.json"))
     args = ap.parse_args()
 
+    from the_framework_for_clustering_time_series_data_spark.functions.runstats import release
     from the_framework_for_clustering_time_series_data_spark.operators.dedup import (
         semantic_dedup_coarse,
         semantic_dedup_prod,
@@ -59,7 +60,7 @@ def main() -> None:
         sample = out.where("id < 100").select("id", "group_id").collect()
         gid = {r["id"]: r["group_id"] for r in sample}
         hits = sum(1 for q in range(0, 100, 2) if gid.get(q) == gid.get(q + 1))
-        spark.catalog.clearCache()
+        release(spark)
         return cnt, round(t, 2), hits
 
     # warm-up (codegen + Arrow paths) on a small prefix, untimed

@@ -13,13 +13,13 @@ Reading the ratio: data grows 10x, so
   kNN: the CANDIDATE SET grows 10x on both sides) or a real plan
   hazard — each one gets a named adjudication in BASELINE.md.
 
-Protocol per query (the bench.py measured-action discipline): noop
-write, clearCache between runs; one untimed sf0.1 warm run (codegen),
-one timed sf0.1 steady run, one timed sf1 first run (absorbs the sf1
-footer/listing costs, reported as t1_cold), one timed sf1 steady run
-(the ratio numerator). Queries whose sf1 first run exceeds
---sf1-budget seconds skip the steady rerun (ratio uses the cold run,
-flagged) so one pathological query cannot eat the sweep.
+Protocol per query, each run through ``functions.runstats.timed`` (a
+timed noop write, then an untimed release): one untimed sf0.1 warm
+run (codegen), one timed sf0.1 steady run, one timed sf1 first run
+(absorbs the sf1 footer/listing costs, reported as t1_cold), one
+timed sf1 steady run (the ratio numerator). Queries whose sf1 first
+run exceeds --sf1-budget seconds skip the steady rerun (ratio uses
+the cold run, flagged) so one pathological query cannot eat the sweep.
 
 Usage: python tools/scale_sweep.py [--queries a,b | --set headline+slow15]
        [--sf1-dir /root/repo/testdata_sf1] [--out SCALE_SF1.json]
@@ -28,10 +28,10 @@ Usage: python tools/scale_sweep.py [--queries a,b | --set headline+slow15]
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import sys
 import time
+from functools import partial
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -56,6 +56,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from bench import HEADLINE
+    from the_framework_for_clustering_time_series_data_spark.functions.runstats import timed
     from the_framework_for_clustering_time_series_data_spark.plans.registry import QUERIES
     from the_framework_for_clustering_time_series_data_spark.session import get_spark
 
@@ -87,16 +88,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     def evaluate(name: str, sf_dir: str) -> float:
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        spark.catalog.clearCache()
-        gc.collect()
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        it = jmap.entrySet().iterator()
-        while it.hasNext():
-            it.next().getValue().unpersist(True)
-        return dt
+        return timed(spark, partial(QUERIES[name], spark, sf_dir))[0]
 
     base = args.base_dir
     # untimed warm-up (JVM + parquet footers for both dirs)

@@ -126,6 +126,7 @@ def main() -> None:
 
     con = duck_connect(args.sf_dir)
 
+    from the_framework_for_clustering_time_series_data_spark.functions.runstats import release
     from the_framework_for_clustering_time_series_data_spark.plans.registry import ORACLE, QUERIES
 
     mismatches: list[str] = []
@@ -143,6 +144,7 @@ def main() -> None:
         except Exception as e:  # a vanilla-session crash IS the finding
             ok = False
             mismatches.append(f"{name}: {type(e).__name__}: {e}")
+        release(spark)
         print(f"# {name}: {'ok' if ok else 'FAIL'}", file=sys.stderr)
 
     print(
